@@ -82,13 +82,25 @@ def read_jsonl(
         # octet_length, not length: the reference caps raw BYTES, and
         # multi-byte UTF-8 would otherwise pass at up to 4x the cap
         lines = lines.filter(F.octet_length("value") <= max_record_bytes)
+    # a non-empty line of only whitespace/control characters holds no
+    # JSON value: PERMISSIVE from_json turns it into an all-null row
+    # with NO _corrupt_record, so route it there explicitly — the
+    # reference passes such a line through verbatim like any other
+    # unparseable one (src/cli.cpp:303-304)
+    blank = F.col("value").rlike(r"^[\s\p{Cntrl}]+$")
+    r = F.col("_r")
     df = lines.select(
         F.from_json(
             F.col("value"), full,
             {"mode": "PERMISSIVE",
              "columnNameOfCorruptRecord": "_corrupt_record"},
-        ).alias("_r")
-    ).select("_r.*")
+        ).alias("_r"),
+        F.when(blank, F.col("value")).alias("_blank"),
+    ).select(
+        *[r.getField(f.name).alias(f.name) for f in schema.fields],
+        F.coalesce("_blank", r.getField("_corrupt_record"))
+        .alias("_corrupt_record"),
+    )
     if not keep_corrupt:
         df = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
     return df

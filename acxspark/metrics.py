@@ -50,7 +50,7 @@ class Lineage:
         return df.observe(obs, *[v.alias(k) for k, v in aggs.items()])
 
     @staticmethod
-    def _get_fired(obs: Observation, timeout: float):
+    def get_fired(obs: Observation, timeout: float):
         """``obs.get`` bounded by ``timeout`` — PySpark's Observation.get
         BLOCKS FOREVER when the observed stage never executed (the JVM
         side waits Duration.Inf), so a plan branch that was skipped by
@@ -79,7 +79,7 @@ class Lineage:
             out.append({**rec, "config": self.fp, "ts": time.time()})
         self.records = []
         for stage, obs in self.observations:
-            vals = self._get_fired(obs, timeout)
+            vals = self.get_fired(obs, timeout)
             if vals is None:
                 continue  # stage never executed (or probe timed out)
             rec = {"stage": stage, "config": self.fp, "ts": time.time(), **vals}

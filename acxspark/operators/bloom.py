@@ -202,8 +202,9 @@ def might_contain(new_df: DataFrame, key_col: str, bloom: DataFrame,
     # (~1.2 TB at the module's own 10^12-key sizing) even when the
     # delta touches 1% of shards. An absent bloom row already means
     # definite-no, so dropping untouched shards is semantics-free.
+    # (No distinct: a semi-join build side ignores duplicate keys.)
     touched = bloom.join(
-        F.broadcast(probes.select("shard").distinct()), "shard", "left_semi"
+        F.broadcast(probes.select("shard")), "shard", "left_semi"
     )
     if observation is not None:
         touched = touched.observe(
@@ -254,7 +255,8 @@ def bloom_params(bloom: DataFrame,
     return int(rows[0]["m_bits"]), int(rows[0]["k"])
 
 
-def merge_blooms(a: DataFrame, b: DataFrame) -> DataFrame:
+def merge_blooms(a: DataFrame, b: DataFrame,
+                 geometry: tuple[int, int] | None = None) -> DataFrame:
     """Shard-wise OR of two same-geometry artifacts — how an
     incremental run folds its delta's keys into the committed
     membership state at O(|delta shards|) cost (never a corpus
@@ -263,11 +265,18 @@ def merge_blooms(a: DataFrame, b: DataFrame) -> DataFrame:
     (one row per shard, so the batch is a handful of MB-sized
     buffers, never per-key work). An EMPTY side (all-refetch delta)
     is geometry-compatible with anything and the merge degenerates to
-    the other side's rows."""
-    pa = bloom_params(a, allow_empty=True)
-    pb = bloom_params(b, allow_empty=True)
-    if pa is not None and pb is not None and pa != pb:
-        raise ValueError("merge_blooms requires identical (m_bits, k)")
+    the other side's rows.
+
+    ``geometry``: the (m_bits, k) both sides are known to share — a
+    delta built by :func:`build_bloom` with the artifact's own
+    :func:`bloom_params`. It skips the two verification actions (the
+    second of which would evaluate the delta's build an extra time).
+    Without it, both sides are checked."""
+    if geometry is None:
+        pa = bloom_params(a, allow_empty=True)
+        pb = bloom_params(b, allow_empty=True)
+        if pa is not None and pb is not None and pa != pb:
+            raise ValueError("merge_blooms requires identical (m_bits, k)")
 
     @F.pandas_udf(T.BinaryType())
     def _or(x: pd.Series, y: pd.Series) -> pd.Series:

@@ -144,26 +144,29 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
     c0, c1 = (
         "`" + c.replace("`", "``") + "`" for c in edges.columns[:2]
     )
-    e_raw = edges.select(F.col(c0).alias("u"), F.col(c1).alias("v"))
-    e = e_raw.filter(F.col("u") != F.col("v")).distinct()
+    # SQL !=, not a python one: it drops self-loops AND NULL
+    # endpoints (NULL != x is NULL), on both paths below
+    e_raw = edges.select(F.col(c0).alias("u"), F.col(c1).alias("v")).filter(
+        F.col("u") != F.col("v")
+    )
+    e = e_raw.distinct()
 
     if catalog is None and small_graph_cap > 0:
-        # probe the RAW rows: CollectLimit short-circuits the scan with
-        # no dedup shuffle (the old probe sat above the distinct, which
-        # forced a full-volume shuffle that the over-cap fall-through
-        # then threw away and recomputed). Arrow toPandas, not
-        # collect(): 10^6 Row objects of string urls cost several GB of
-        # driver heap; columnar batches plus plain python lists do not.
+        # probe the undeduplicated rows: CollectLimit short-circuits
+        # the scan with no dedup shuffle (the old probe sat above the
+        # distinct, which forced a full-volume shuffle that the
+        # over-cap fall-through then threw away and recomputed). Arrow
+        # toPandas, not collect(): 10^6 Row objects of string urls cost
+        # several GB of driver heap; columnar batches plus plain python
+        # lists do not. NULLs are filtered before the fetch, so a
+        # nullable long column arrives as int64, never NaN-bearing
+        # float.
         pdf = e_raw.limit(small_graph_cap + 1).toPandas()
         if len(pdf) <= small_graph_cap:
             schema = e.select(
                 F.col("u"), F.col("v").alias("component")
             ).schema
-            pairs = [
-                (u, v)
-                for u, v in zip(pdf["u"].tolist(), pdf["v"].tolist())
-                if u != v  # drop self-loops like the distributed path
-            ]
+            pairs = list(zip(pdf["u"].tolist(), pdf["v"].tolist()))
             return _union_find_labels(
                 pairs, e.sparkSession, schema,
                 hint_broadcast=hint_broadcast_labels,

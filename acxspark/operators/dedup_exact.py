@@ -125,7 +125,10 @@ def or_key_components(df: DataFrame, id_col: str, key_cols: list[str],
         e = df.select(
             F.col(id_col).cast("string").alias("u"),
             F.concat(F.lit(f"\x01{kc}:"), F.col(kc).cast("string")).alias("v"),
-        ).filter(F.col(kc).isNotNull() & (F.col(kc).cast("string") != ""))
+        ).filter(F.col(kc).isNotNull() & (F.col(kc).cast("string") != "")
+                 # a NULL record id is no vertex: the distributed CC
+                 # drops it, and the driver union-find must too
+                 & F.col(id_col).isNotNull())
         edges = e if edges is None else edges.union(e)
 
     out_schema = T.StructType([

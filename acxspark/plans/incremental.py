@@ -40,7 +40,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from acxspark.config import DEFAULT_CONFIG, DedupConfig
@@ -55,7 +55,38 @@ from acxspark.operators.verify import exact_jaccard_edges
 class IncrementalResult:
     assignments: DataFrame   # url, cluster_id — NEW docs only
     lineage: Lineage
+    # release handles (``unpersist()``) for every persisted or
+    # checkpointed intermediate. The assignments plan reads the
+    # checkpoint blocks, so release only after consuming it: a
+    # released block cannot be recomputed.
     caches: list
+
+
+class _CheckpointBlocks:
+    """``unpersist()`` handle for the blocks of an eager
+    localCheckpoint, so the ``caches`` contract releases them too.
+    ``DataFrame.unpersist`` does not reach them: the checkpointed RDD
+    backs the frame's LogicalRDD leaf, not a cache-manager entry."""
+
+    def __init__(self, df: DataFrame):
+        self._sc = df.sparkSession.sparkContext._jsc.sc()
+        self._rdd_id = df._jdf.queryExecution().logical().rdd().id()
+
+    def unpersist(self, blocking: bool = False) -> None:
+        # SparkContext.unpersistRDD, not RDD.unpersist: the same block
+        # removal without a lineage-truncated warning per checkpoint
+        self._sc.unpersistRDD(self._rdd_id, blocking)
+
+
+def _materialise(df: DataFrame, caches: list) -> DataFrame:
+    """Eager localCheckpoint: one job computes ``df`` into executor
+    blocks and every later query plans against the LogicalRDD leaf
+    instead of re-analysing (and, for broadcast subtrees, re-running)
+    the nested tree beneath it. Observations attached below fire in
+    that job."""
+    cp = df.localCheckpoint(eager=True)
+    caches.append(_CheckpointBlocks(cp))
+    return cp
 
 
 def _cross_jaccard_edges(pairs: DataFrame, new_sigs: DataFrame,
@@ -73,8 +104,7 @@ def _cross_jaccard_edges(pairs: DataFrame, new_sigs: DataFrame,
     b = (
         old_sigs.select(F.col("url").alias("id_b"),
                         F.col("shingles").alias("sh_b"))
-        .join(F.broadcast(pairs.select("id_b").distinct()), "id_b",
-              "left_semi")
+        .join(F.broadcast(pairs.select("id_b")), "id_b", "left_semi")
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
@@ -100,16 +130,23 @@ def run_incremental(new_web: DataFrame, catalog,
     EXCEPT on a replay of an already-committed batch (a streaming
     restart re-delivering its last micro-batch), which is safe: every
     replayed doc exact-matches its own committed copy, gets back its
-    committed label, and the url-keyed anti-join unions below leave
-    the snapshots row-identical. ``snapshot_meta`` rides every
-    snapshot manifest this run commits (streaming/ingest.py stamps
-    the micro-batch id through it for the exactly-once guard).
+    committed label, and the snapshot unions (old side minus the
+    batch's urls, plus the batch) leave the snapshots row-identical.
+    ``snapshot_meta`` rides every snapshot manifest this run commits
+    (streaming/ingest.py stamps the micro-batch id through it for the
+    exactly-once guard).
+
+    The delta-side intermediates are eager localCheckpoints
+    (:func:`_materialise`), released through ``caches``. They live in
+    executor blocks only: a lost block fails this run before the
+    clusters commit stamps the batch, and the streaming ledger replays
+    the whole batch (the idempotent slow path above).
     """
     spark = new_web.sparkSession
     lin = Lineage(lineage_path, cfg.fingerprint())
-    caches: list[DataFrame] = []
+    caches: list = []
 
-    # deliberately NOT persisted: the snapshot's heavy columns
+    # deliberately NOT materialised: the snapshot's heavy columns
     # (shingles ~2 KB/row) must stay column-PRUNED per consumer —
     # caching the full rows defeats pruning and made every old-side
     # pass pay the array column (measured 4.5× slower than a full
@@ -117,11 +154,16 @@ def run_incremental(new_web: DataFrame, catalog,
     old_sigs = catalog.read(spark, "signatures")
     old_clusters = catalog.read(spark, "clusters")
 
-    new_docs = lin.observe(
-        new_web.filter(F.length(text_col) <= cfg.max_text_bytes),
+    # the delta, hashed once: every tier below reads url/text/text_sha
+    # from these blocks (text_sha matches the snapshot schema, so the
+    # signatures union below stays aligned)
+    new_docs = _materialise(lin.observe(
+        new_web.filter(F.length(text_col) <= cfg.max_text_bytes).select(
+            "url", text_col, F.sha2(F.col(text_col), 256).alias("text_sha")
+        ),
         "incr_docs_scanned",
-    ).persist()
-    caches.append(new_docs)
+    ), caches)
+    new_hashed = new_docs.select("url", "text_sha")
 
     # REPLAY SAFETY: view the committed state as it was BEFORE this
     # batch by excluding the batch's own urls from the old side. On
@@ -132,17 +174,10 @@ def run_incremental(new_web: DataFrame, catalog,
     # byte-identical to the first attempt: without it every replayed
     # doc sha-matches its OWN committed signature, gets classified a
     # re-fetch, skips signing — and silently loses its near-dup edges.
-    batch_urls = new_docs.select("url").distinct()
-    old_sigs = old_sigs.join(F.broadcast(batch_urls), "url", "left_anti")
-    old_clusters = old_clusters.join(
-        F.broadcast(batch_urls), "url", "left_anti"
-    )
-
-    # ---- signatures for the new rows (with sha, matching the
-    # snapshot schema so the union below stays aligned) --------------
-    new_hashed = new_docs.select(
-        "url", F.sha2(F.col(text_col), 256).alias("text_sha")
-    )
+    # (No distinct: a semi/anti-join build side ignores duplicates.)
+    batch_urls = F.broadcast(new_docs.select("url"))
+    old_sigs = old_sigs.join(batch_urls, "url", "left_anti")
+    old_clusters = old_clusters.join(batch_urls, "url", "left_anti")
 
     # ---- exact tier vs old ------------------------------------------
     # With a committed `sha_bloom` artifact (operators/bloom.py,
@@ -171,9 +206,9 @@ def run_incremental(new_web: DataFrame, catalog,
         exact_probe = new_hashed.join(F.broadcast(maybe), "text_sha")
     # BROADCAST the (gated) delta hash set into the old scan (sha
     # column only) — map-side, the old side never shuffles, the scan
-    # reads two slim columns. Persisted: consumed by the matched-edge
-    # union AND the re-fetch signature skip below.
-    exact_cross = (
+    # reads two slim columns. Materialised: consumed by the
+    # matched-edge union AND the re-fetch signature skip below.
+    exact_cross = _materialise(
         old_sigs.select(F.col("url").alias("id_b"), "text_sha")
         .join(
             F.broadcast(
@@ -181,10 +216,9 @@ def run_incremental(new_web: DataFrame, catalog,
             ),
             "text_sha",
         )
-        .select("id_a", "id_b")
-        .persist()
+        .select("id_a", "id_b"),
+        caches,
     )
-    caches.append(exact_cross)
 
     # ---- signatures: EXACT RE-FETCHES SKIP THE SIGNATURE STAGE ------
     # A new doc byte-identical to a committed one (unchanged page,
@@ -198,9 +232,9 @@ def run_incremental(new_web: DataFrame, catalog,
     # skipped rows also stay OUT of the signatures snapshot union
     # below (their sha's representative is already committed), which
     # restores the full run's reps-only snapshot contract.
-    refetch_urls = exact_cross.select(F.col("id_a").alias("url")).distinct()
+    refetch_urls = exact_cross.select(F.col("id_a").alias("url"))
     to_sign = lin.observe(
-        new_docs.join(refetch_urls, "url", "left_anti"),
+        new_docs.join(F.broadcast(refetch_urls), "url", "left_anti"),
         "incr_signed",
     )
     drop_set = None
@@ -241,11 +275,13 @@ def run_incremental(new_web: DataFrame, catalog,
                 "coherent one)",
                 file=sys.stderr,
             )
-    new_sigs = with_signatures(
-        to_sign, text_col=text_col, cfg=cfg, id_col="url",
-        hot_hashes=drop_set,
-    ).join(new_hashed, "url").persist()
-    caches.append(new_sigs)
+    new_sigs = _materialise(
+        with_signatures(
+            to_sign, text_col=text_col, cfg=cfg, id_col="url",
+            hot_hashes=drop_set,
+        ).join(new_hashed, "url"),
+        caches,
+    )
 
     # ---- minhash tier vs old ---------------------------------------
     # The incremental contract is delta ≪ corpus, so the delta's band
@@ -254,54 +290,53 @@ def run_incremental(new_web: DataFrame, catalog,
     # never shuffled, mirroring the exact tier above. For a delta too
     # large to broadcast, run the full pipeline instead; the crossover
     # is roughly where |delta| stops fitting a broadcast anyway.
-    nb = band_keys(new_sigs, "url", "minhash", cfg).select(
-        F.col("url").alias("id_a"), "band_key"
-    ).persist()
-    caches.append(nb)
-    ob_hit = (
+    nb = _materialise(
+        band_keys(new_sigs, "url", "minhash", cfg).select(
+            F.col("url").alias("id_a"), "band_key"
+        ),
+        caches,
+    )
+    ob_hit = _materialise(
         band_keys(old_sigs, "url", "minhash", cfg)
         .select(F.col("url").alias("id_b"), "band_key")
-        .join(F.broadcast(nb.select("band_key").distinct()), "band_key",
-              "left_semi")
-        .persist()
+        .join(F.broadcast(nb.select("band_key")), "band_key", "left_semi"),
+        caches,
     )
-    caches.append(ob_hit)
     # hot-band cap on the COMBINED matched-band population — the
     # mirror of the full run's cap (a band with > max_band_size
     # members total is dropped there too). Capping only one side is a
     # measured catastrophe: boilerplate bands shared by delta and
     # corpus produce |new_band| × cap cross pairs per band. Sizes are
-    # computed on the matched subset only (ob_hit), never the full
-    # old band table.
-    nb_sizes = nb.groupBy("band_key").agg(F.count("*").alias("n_new"))
-    ob_sizes = ob_hit.groupBy("band_key").agg(F.count("*").alias("n_old"))
+    # computed on the matched subset only (ob_hit, whose keys are all
+    # delta keys), never the full old band table: one aggregation over
+    # both sides' rows.
     hot = (
-        nb_sizes.join(ob_sizes, "band_key", "left")
-        .filter(
-            F.col("n_new") + F.coalesce("n_old", F.lit(0))
-            > cfg.max_band_size
-        )
+        nb.select("band_key").unionByName(ob_hit.select("band_key"))
+        .groupBy("band_key").count()
+        .filter(F.col("count") > cfg.max_band_size)
         .select("band_key")
     )
-    # persisted: consumed by the jaccard b-side semi-broadcast AND the
-    # outer pair join — a broadcast subtree evaluates independently,
-    # so without the cache the whole band-match chain runs twice
-    cross_pairs = (
+    # materialised: consumed by the jaccard b-side semi-broadcast AND
+    # the outer pair join — a broadcast subtree evaluates
+    # independently, so without the cut the band-match chain runs twice
+    cross_pairs = _materialise(
         ob_hit.join(F.broadcast(hot), "band_key", "left_anti")
         .join(
             F.broadcast(nb.join(F.broadcast(hot), "band_key", "left_anti")),
             "band_key",
         )
         .select("id_a", "id_b")
-        .distinct()
-        .persist()
+        .distinct(),
+        caches,
     )
-    caches.append(cross_pairs)
     near_cross = _cross_jaccard_edges(cross_pairs, new_sigs, old_sigs, cfg)
 
     # ---- minhash tier within the increment (normal self-join path) -
-    intra_cands = candidate_pairs(new_sigs, "url", "minhash", cfg,
-                                  caches=caches)
+    # materialised: exact_jaccard_edges reads its pairs three times
+    intra_cands = _materialise(
+        candidate_pairs(new_sigs, "url", "minhash", cfg, caches=caches),
+        caches,
+    )
     near_intra = exact_jaccard_edges(intra_cands, new_sigs, "url", cfg).select(
         "id_a", "id_b"
     )
@@ -330,18 +365,26 @@ def run_incremental(new_web: DataFrame, catalog,
         .distinct(),
         "incr_old_matches",
     )
-    # ONE eager materialization of the full edge set before CC: the
-    # union embeds several broadcast subtrees (delta hashes, band
-    # keys, pair ids) that would otherwise re-evaluate their chains
-    # inside every consumer; after the checkpoint, CC's rounds and
-    # the label/bridge aggregations below all read memory blocks
-    all_edges = (
-        matched.unionByName(near_intra).unionByName(intra_exact)
-        .localCheckpoint(eager=True)
+    # ONE eager materialization of the full edge set before CC, so
+    # CC's probe and the label/bridge aggregations below read blocks.
+    # Its row count and byte volume ride the same job (Observation):
+    # they feed the broadcast-hint gate below.
+    edge_obs = Observation()
+    all_edges = _materialise(
+        matched.unionByName(near_intra).unionByName(intra_exact).observe(
+            edge_obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.coalesce(
+                F.sum(F.length("id_a") + F.length("id_b")), F.lit(0)
+            ).alias("bytes"),
+        ),
+        caches,
     )
-    # cheap (reads the checkpoint blocks just materialized); feeds the
-    # broadcast-hint gate below
-    n_edges = all_edges.count()
+    # bounded wait, never Observation.get: a metric that does not fire
+    # must cost the broadcast hint below, not hang the fold
+    edge_stats = Lineage.get_fired(edge_obs, timeout=10.0)
+    if edge_stats is not None:
+        lin.record("incr_edges", **edge_stats)
     # hint_broadcast_labels=False: comp lands on the PRESERVED left
     # side of the label-resolution left-outer join below, where an
     # embedded broadcast hint is invalid (Spark warns and drops it).
@@ -373,20 +416,13 @@ def run_incremental(new_web: DataFrame, catalog,
     # 150-200 B crawl urls put comp at several hundred MB, and
     # F.broadcast bypasses AQE's size check entirely — the driver
     # would have to build it regardless. comp carries ≲2 url-sized
-    # strings per distinct node, so twice the edge byte volume (one
-    # cheap agg over the checkpointed slim edges, only on the
-    # row-bounded branch) upper-bounds the build; past the cap the
-    # join stays unhinted and AQE converts iff runtime bytes allow.
+    # strings per distinct node, so twice the edge byte volume
+    # upper-bounds the build; past the cap the join stays unhinted
+    # and AQE converts iff runtime bytes allow.
     comp_build = comp
-    if n_edges <= 1_000_000:
-        ebytes = int(
-            all_edges.agg(
-                F.sum(F.length("id_a") + F.length("id_b")).alias("b")
-            ).collect()[0]["b"]
-            or 0
-        )
-        if 2 * ebytes <= (64 << 20):
-            comp_build = F.broadcast(comp)
+    if (edge_stats is not None and edge_stats["rows"] <= 1_000_000
+            and 2 * edge_stats["bytes"] <= (64 << 20)):
+        comp_build = F.broadcast(comp)
     comp_labels = (
         comp_build.join(old_label_set, "u")
         .groupBy("component")
@@ -395,12 +431,15 @@ def run_incremental(new_web: DataFrame, catalog,
             F.count(F.lit(1)).alias("n_old"),
         )
     )
-    lin.record(
-        "clusters_bridged",
-        n=int(
-            comp_labels.filter(F.col("n_old") > 1).count()
-        ),
-    )
+    # the bridge count rides the assignments pass (Observation). The
+    # optimizer drops the observed node when comp or comp_labels is
+    # empty, so the record is absent exactly when no component holds
+    # an old label (0 bridges); an edgeless fold records its 0 here
+    if edge_stats is not None and edge_stats["rows"] == 0:
+        lin.record("clusters_bridged", n=0)
+    else:
+        comp_labels = lin.observe(comp_labels, "clusters_bridged",
+                                  n=F.count_if(F.col("n_old") > 1))
     # no forced broadcast: comp_labels is usually micro-batch-sized,
     # but a backfill increment can be arbitrarily large — AQE converts
     # to BHJ at runtime exactly when the exchanged bytes allow it
@@ -424,28 +463,20 @@ def run_incremental(new_web: DataFrame, catalog,
 
     if update_snapshots:
         # next increment sees this one: union the snapshots. At real
-        # scale these are Iceberg APPENDs, not rewrites. The url-keyed
-        # anti-joins make the commit IDEMPOTENT under batch replay
-        # (streaming restart, crash between the two table writes): a
-        # re-applied batch's rows are already in the old side, and
-        # since its assignments are deterministic (frozen base labels
-        # + exact-match-to-self), replacing them is a row-identical
-        # no-op. On the normal path (disjoint urls) the anti-join
-        # removes nothing. The bloom merge below is idempotent by
-        # algebra (OR-ing the same delta twice is the same bits).
+        # scale these are Iceberg APPENDs, not rewrites. The commit is
+        # IDEMPOTENT under batch replay (streaming restart, crash
+        # between the two table writes): old_sigs/old_clusters already
+        # exclude the batch's urls (the replay anti-join above), so a
+        # re-applied batch's committed rows are replaced, and since its
+        # assignments are deterministic (frozen base labels +
+        # exact-match-to-self) the replacement is row-identical. The
+        # bloom merge below is idempotent by algebra (OR-ing the same
+        # delta twice is the same bits).
         meta = {"incremental": True, **(snapshot_meta or {})}
-        catalog.write(
-            "signatures",
-            old_sigs.join(new_sigs.select("url"), "url", "left_anti")
-            .unionByName(new_sigs),
-            meta=meta,
-        )
-        catalog.write(
-            "clusters",
-            old_clusters.join(assignments.select("url"), "url", "left_anti")
-            .unionByName(assignments),
-            meta=meta,
-        )
+        catalog.write("signatures", old_sigs.unionByName(new_sigs),
+                      meta=meta)
+        catalog.write("clusters", old_clusters.unionByName(assignments),
+                      meta=meta)
         if bloom is not None:
             # fold ONLY the delta's newly-signed shas into the
             # membership artifact: a same-geometry delta bloom OR-ed
@@ -456,14 +487,14 @@ def run_incremental(new_web: DataFrame, catalog,
                 merge_blooms,
             )
 
-            m_bits, k = bloom_params(bloom)
+            geometry = bloom_params(bloom)
             delta = build_bloom(
                 new_sigs.select("text_sha"), "text_sha",
-                n_shards=bloom_ns, m_bits=m_bits, k=k,
+                n_shards=bloom_ns, m_bits=geometry[0], k=geometry[1],
             )
             catalog.write(
                 "sha_bloom",
-                merge_blooms(bloom, delta),
+                merge_blooms(bloom, delta, geometry=geometry),
                 meta={**meta, "n_shards": bloom_ns},
             )
 

@@ -92,9 +92,19 @@ def fold_batch(batch_df: DataFrame, batch_id: int, catalog,
         # lineage is best-effort observability, the ledger + snapshots
         # are the durable state.)
         if out_dir is not None:
+            from pyspark.sql import functions as F
+
             spark_ = batch_df.sparkSession
             bdir = Path(out_dir) / f"batch-{batch_id}"
-            want = batch_df.select("url").distinct()
+            # only the urls the fold could assign: both folds
+            # (run_pipeline, run_incremental) drop null and over-long
+            # texts before clustering (the max_text_bytes guard), so
+            # those urls never reach the out_dir and must not count as
+            # missing
+            want = (
+                batch_df.filter(F.length(text_col) <= cfg.max_text_bytes)
+                .select("url").distinct()
+            )
             complete = False
             if bdir.exists():
                 try:
@@ -117,8 +127,6 @@ def fold_batch(batch_df: DataFrame, batch_id: int, catalog,
                 return {"batch_id": batch_id,
                         "action": "skipped_replay_outdir_recovered"}
         return {"batch_id": batch_id, "action": "skipped_replay"}
-    if batch_df.isEmpty():
-        return {"batch_id": batch_id, "action": "empty"}
 
     lineage_path = (
         str(Path(lineage_dir) / f"batch-{batch_id}.jsonl")
@@ -136,18 +144,21 @@ def fold_batch(batch_df: DataFrame, batch_id: int, catalog,
     # ...but only when the batch is wide enough to amortize the
     # shuffle: below ~4 rows/core the serial narrow scan beats moving
     # every text byte through an exchange (the probe is one
-    # short-circuiting limit+count job over a batch we just proved
-    # non-empty, so it costs a few ms on exactly the batches where the
-    # repartition would have been waste).
+    # short-circuiting limit+count job, so it costs a few ms on
+    # exactly the batches where the repartition would have been
+    # waste).
     target = batch_df.sparkSession.sparkContext.defaultParallelism
     floor = 4 * target
     budget = int(getattr(cfg, "incr_max_batch_rows", 0) or 0)
-    # ONE bounded probe answers both width gates (repartition floor
-    # and the oversized-split budget below) — budget ≥ floor in any
-    # realistic config, so probing to max(floor, budget)+1 costs the
-    # same scan the budget probe alone did
+    # ONE bounded probe answers the emptiness check and both width
+    # gates (repartition floor and the oversized-split budget below) —
+    # budget ≥ floor in any realistic config, so probing to
+    # max(floor, budget)+1 costs the same scan the budget probe alone
+    # did
     probe_cap = max(floor, budget)
     n_probe = batch_df.limit(probe_cap + 1).count()
+    if n_probe == 0:
+        return {"batch_id": batch_id, "action": "empty"}
     if batch_df.rdd.getNumPartitions() < target and n_probe > floor:
         batch_df = batch_df.repartition(target)
     if not catalog.has("signatures"):
@@ -237,12 +248,21 @@ def fold_batch(batch_df: DataFrame, batch_id: int, catalog,
             return {"batch_id": batch_id, "action": "increment_split",
                     "n_docs": total, "n_subbatches": len(groups)}
 
-    n = assignments.count()
+    # a cold start counts its clusters before the lineage flush (its
+    # clusters_assigned metric fires on that action); an increment's
+    # incr_assigned Observation counted them while the clusters
+    # snapshot committed them
+    n = None if action == "increment" else assignments.count()
     if out_dir:
         assignments.write.mode("overwrite").parquet(
             str(Path(out_dir) / f"batch-{batch_id}")
         )
-    res.lineage.flush()
+    recs = res.lineage.flush()
+    if n is None:
+        n = next((r["rows"] for r in recs
+                  if r["stage"] == "incr_assigned"), None)
+    if n is None:  # the metric did not fire
+        n = assignments.count()
     for df in res.caches or []:
         df.unpersist()
     return {"batch_id": batch_id, "action": action, "n_docs": n}

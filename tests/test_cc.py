@@ -101,6 +101,28 @@ def test_small_graph_fast_path_equals_star_joins(spark):
     assert fast_s == slow_s
 
 
+def test_small_graph_probe_drops_null_endpoints(spark):
+    """Regression: the driver union-find probe must drop NULL endpoints
+    exactly like the distributed path's SQL filter (NULL != x is NULL).
+    A nullable long column holding NULLs used to reach the driver as
+    float NaN, which survived a python ``u != v`` and either split from
+    the distributed labels or crashed the long-typed result."""
+    rows = [(1, 2), (2, None), (None, 3), (3, 4), (None, None), (5, 5),
+            (6, 7)]
+    want = [(1, 1), (2, 1), (3, 3), (4, 3), (6, 6), (7, 6)]
+    for ddl, cast in (("u long, v long", lambda x: x),
+                      ("u string, v string",
+                       lambda x: None if x is None else f"n{x}")):
+        e = spark.createDataFrame(
+            [(cast(a), cast(b)) for a, b in rows], ddl)
+        fast = sorted((r["u"], r["component"])
+                      for r in connected_components(e).collect())
+        slow = sorted((r["u"], r["component"])
+                      for r in connected_components(
+                          e, small_graph_cap=0).collect())
+        assert fast == slow == [(cast(a), cast(b)) for a, b in want]
+
+
 def test_small_graph_cap_routes_to_distributed(spark):
     """One edge over the cap must take the star-join loop (probe is
     limit(cap+1), so cap+1 rows prove overflow)."""

@@ -295,6 +295,31 @@ def test_redact_matches_reference_loop(spark, capsys, tmp_path):
     assert _read_text_dir(out) == reference_redact(NORM_EDGE_LINES)
 
 
+BLANK_LINES = [
+    "\t",                                         # whitespace only
+    json.dumps({"email": "A@b.com", "phone": "555 0101"}),
+    "\t",                                         # repeated: still kept
+    "  \t ",
+    json.dumps({"email": "A@b.com", "phone": "555 0102"}),
+]
+
+
+def test_line_commands_pass_whitespace_only_lines_verbatim(spark, capsys,
+                                                           tmp_path):
+    """A non-empty line of only whitespace is unparseable, not empty:
+    normalize and redact pass it through verbatim and dedupe keeps every
+    copy, exactly like any other corrupt line (src/cli.cpp:303-304)."""
+    p = tmp_path / "blank.jsonl"
+    p.write_text("\n".join(BLANK_LINES) + "\n")
+    for cmd, twin in (("normalize", reference_normalize),
+                      ("redact", reference_redact),
+                      ("dedupe", reference_dedupe)):
+        out = str(tmp_path / cmd)
+        rc, _ = run_cli(spark, capsys, cmd, str(p), "--out", out)
+        assert rc == 0
+        assert _read_text_dir(out) == twin(BLANK_LINES), cmd
+
+
 def test_lineops_field_twins_match_column_functions(spark):
     """The python field helpers inside lineops must agree with the
     column-expression implementations (functions/normalize.py,

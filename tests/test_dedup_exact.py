@@ -83,6 +83,28 @@ def test_or_key_three_paths_identical(spark):
     assert len(fast) == 200
 
 
+def test_or_key_null_record_id_same_on_every_path(spark):
+    """Regression: a record with a NULL id is no graph vertex. The
+    distributed CC drops its edges (NULL != x is NULL); the driver
+    union-find used to keep them and then fail sorting None among
+    string ids."""
+    rows = [("A", "a@x", None), (None, "a@x", "p1"), ("B", None, "p1"),
+            ("C", "c@x", None)]
+    df = spark.createDataFrame(rows, "id string, email string, phone string")
+
+    def labels(**kw):
+        return sorted(
+            (r["id"], r["cluster_id"])
+            for r in or_key_components(df, "id", ["email", "phone"], **kw)
+            .collect()
+        )
+
+    fast = labels()
+    assert fast == labels(small_graph_cap=0, hash_nodes=True) \
+        == labels(small_graph_cap=0, hash_nodes=False)
+    assert fast == [("A", "A"), ("B", "B"), ("C", "C")]
+
+
 def test_line_dedup_first_occurrence_across_corpus(spark):
     """CCNet/RefinedWeb-style line dedup: a line repeated across docs
     survives only at its first (id, pos) occurrence; blank lines are

@@ -301,3 +301,92 @@ def test_replay_recovers_missing_outdir(spark, tmp_path):
     # intact dir → plain skip, contents untouched
     s2 = fold_batch(delta, 1, cat, cfg=cfg, out_dir=out_dir)
     assert s2["action"] == "skipped_replay"
+
+
+def test_replay_with_unassignable_docs_and_complete_outdir_is_plain_skip(
+        spark, tmp_path):
+    """Regression: the replay completeness probe must expect only the
+    urls a fold can assign. A batch holding an over-long or NULL text
+    (dropped by the max_text_bytes guard) used to look incomplete on
+    every replay, so its intact out_dir was re-read and rewritten."""
+    cfg = DedupConfig()
+    cat = ParquetSnapshotCatalog(tmp_path / "cat")
+    out_dir = str(tmp_path / "out")
+    fold_batch(spark.createDataFrame(INC0, SCHEMA), 0, cat, cfg=cfg,
+               out_dir=out_dir)
+    delta = spark.createDataFrame(
+        INC1 + [("big", "x" * (cfg.max_text_bytes + 1)), ("none", None)],
+        SCHEMA,
+    )
+    assert fold_batch(delta, 1, cat, cfg=cfg,
+                      out_dir=out_dir)["action"] == "increment"
+    written = spark.read.parquet(str(tmp_path / "out" / "batch-1"))
+    assert {r["url"] for r in written.collect()} == {u for u, _ in INC1}
+    assert fold_batch(delta, 1, cat, cfg=cfg,
+                      out_dir=out_dir)["action"] == "skipped_replay"
+
+
+#: Spark jobs one increment fold of INC1 may run (a job group around
+#: fold_batch). The fold with nested persist() intermediates and
+#: separate bookkeeping actions ran 151 here; the flattened one 74.
+FOLD_JOB_BUDGET = 100
+
+
+def _persistent_rdd_ids(sc) -> set[int]:
+    return set(sc._jsc.getPersistentRDDs().keySet().toArray())
+
+
+def test_fold_stays_in_job_budget_and_releases_its_blocks(spark, tmp_path):
+    cfg = DedupConfig()
+    cat = ParquetSnapshotCatalog(tmp_path / "cat")
+    fold_batch(spark.createDataFrame(INC0, SCHEMA), 0, cat, cfg=cfg)
+    delta = spark.createDataFrame(INC1, SCHEMA)
+    sc = spark.sparkContext
+    before = _persistent_rdd_ids(sc)
+    sc.setJobGroup("fold-budget", "fold under a job budget")
+    try:
+        s = fold_batch(delta, 1, cat, cfg=cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert s["action"] == "increment" and s["n_docs"] == len(INC1)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("fold-budget"))
+    assert 0 < n_jobs <= FOLD_JOB_BUDGET
+    # every checkpoint and cache the fold made is released on return
+    # (the context cleaner may drop older ids meanwhile, hence ⊆)
+    assert _persistent_rdd_ids(sc) <= before
+    got = _clusters(spark, cat)
+    assert got["b1"] == "a3" and got["b2"] == "a1"
+    assert got["b3"] == got["b4"] == "b3"
+
+
+def test_fold_of_all_unique_delta_with_no_edges_completes(spark, tmp_path):
+    """Zero edges anywhere: the edge-count Observation rides the
+    checkpoint of an empty edge set and must still fire — a metric
+    that never fires would block the fold forever."""
+    import json
+    import threading
+
+    cfg = DedupConfig()
+    cat = ParquetSnapshotCatalog(tmp_path / "cat")
+    fold_batch(spark.createDataFrame(INC0, SCHEMA), 0, cat, cfg=cfg)
+    rows = [(f"z{i}", " ".join(f"w{i}x{j}" for j in range(40)))
+            for i in range(6)]
+    box: dict = {}
+
+    def fold():
+        box["s"] = fold_batch(spark.createDataFrame(rows, SCHEMA), 1, cat,
+                              cfg=cfg, lineage_dir=str(tmp_path / "lin"))
+
+    t = threading.Thread(target=fold, daemon=True)
+    t.start()
+    t.join(300)
+    assert "s" in box, "fold did not finish"
+    assert box["s"] == {"batch_id": 1, "action": "increment",
+                        "n_docs": len(rows)}
+    got = _clusters(spark, cat)
+    assert all(got[u] == u for u, _ in rows)
+    with open(tmp_path / "lin" / "batch-1.jsonl") as f:
+        recs = [json.loads(line) for line in f]
+    assert [r["rows"] for r in recs if r["stage"] == "incr_edges"] == [0]
+    assert [r["n"] for r in recs if r["stage"] == "clusters_bridged"] == [0]

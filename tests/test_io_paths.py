@@ -37,6 +37,21 @@ def test_jsonl_corrupt_passthrough(spark, tmp_path):
     assert sorted(r["id"] for r in dropped.collect()) == ["1", "2"]
 
 
+def test_jsonl_whitespace_only_line_is_corrupt(spark, tmp_path):
+    """Regression (fuzz: lines=['\\t']): PERMISSIVE from_json turns a
+    whitespace-only line into an all-null row with no _corrupt_record;
+    the scan must surface it as corrupt, verbatim."""
+    p = tmp_path / "in.jsonl"
+    p.write_text('\t\n{"id":"1","email":"a@x.com"}\n \t \n')
+    rows = IO.read_jsonl(spark, str(p), keep_corrupt=True,
+                         max_record_bytes=None).collect()
+    assert sorted(r["_corrupt_record"] or "" for r in rows) == \
+        ["", "\t", " \t "]
+    assert [r["id"] for r in rows if r["_corrupt_record"] is None] == ["1"]
+    dropped = IO.read_jsonl(spark, str(p), keep_corrupt=False).collect()
+    assert [r["id"] for r in dropped] == ["1"]
+
+
 def test_jsonl_oversized_corrupt_line_dropped(spark, tmp_path):
     """The raw-line cap applies to MALFORMED lines too (reference
     src/storage.cpp:516 caps the raw line before parsing). A corrupt
