@@ -57,16 +57,19 @@ class ParquetSnapshotCatalog:
         return self._tdir(table) / "MANIFEST.json"
 
     def _load_manifest(self, table: str) -> dict | None:
-        """The committed manifest, or None when absent OR unreadable.
-        Unreadable = torn by a crash mid-commit ⇒ by the commit-point
-        rule nothing was committed; warn (data dirs may linger) and
-        let the table start over rather than brick every consumer."""
+        """The committed manifest, or None when absent OR torn.
+        Torn = undecodable after a crash mid-commit ⇒ by the
+        commit-point rule nothing was committed; warn (data dirs may
+        linger) and let the table start over rather than brick every
+        consumer. Any other read error (EIO, EACCES, a transient NFS
+        fault) propagates: treating it as "uncommitted" would let the
+        next write restart the table at v0 and orphan its history."""
         try:
             with open(self._manifest_path(table)) as f:
                 return json.load(f)
         except FileNotFoundError:
             return None
-        except (json.JSONDecodeError, OSError) as e:
+        except (json.JSONDecodeError, UnicodeDecodeError) as e:
             print(
                 f"acxspark.catalog: ignoring unreadable manifest for "
                 f"table {table!r} ({e}) — treating as uncommitted",

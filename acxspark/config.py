@@ -31,12 +31,6 @@ class DedupConfig:
     num_perm: int = 128
     lsh_bands: int = 32
     lsh_rows: int = 4             # num_perm == lsh_bands * lsh_rows
-    # MinHash estimator variant: 'kperm' = classical P independent
-    # permutations (compute-bound, ~P ops/byte — scales with cores on
-    # bandwidth-capped hosts); 'oph' = one-permutation hashing with
-    # rotation densification (1 op/byte — cheapest when memory
-    # bandwidth is plentiful). Same LSH banding either way.
-    minhash_mode: str = "kperm"
     # SimHash
     simhash_bits: int = 64
     simhash_tables: int = 4       # bit-chunk tables for Hamming-ball probe
@@ -46,9 +40,10 @@ class DedupConfig:
     # shingle Jaccard (1-0.15)/(1+0.15) ≈ 0.74; τ=0.68 keeps those
     # (recall gate) while random same-vocab docs sit far below.
     jaccard_threshold: float = 0.68
-    # skew control for hot LSH bands (boilerplate shingles)
-    max_band_size: int = 200      # bands larger than this are capped
-    band_salt_buckets: int = 8
+    # skew control for hot LSH bands (boilerplate shingles): bands
+    # larger than this are dropped from pair generation, which also
+    # bounds every pair-emitting task at cap²/2 rows (operators/lsh.py)
+    max_band_size: int = 200
     # skew control for hot SimHash chunk buckets: a 16-bit chunk key
     # space (64 bits / 4 tables) caps out at 65k distinct buckets per
     # table — at 10^12 docs the mean bucket is ~1.5e7 rows and the
@@ -58,8 +53,7 @@ class DedupConfig:
     # tables, so a pair whose sole clean chunk lands in a capped
     # bucket is lost from the SimHash tier (the MinHash/LSH tier can
     # still catch it, probabilistically). Rows dropped by the cap are
-    # observable via the simhash_band_rows_kept/-total lineage
-    # counters. Hot sub-cap buckets take the salted self-join.
+    # observable via the simhash_band_rows lineage counter.
     max_chunk_bucket: int = 1000
     # shingle-level doc-frequency cut (the ngram tier's max_doc_freq
     # generalized to the MinHash/SimHash tiers): shingles present in
@@ -113,9 +107,8 @@ class DedupConfig:
         algorithm version — recorded in lineage and compared by every
         snapshot-resume stamp. The version term makes snapshots from a
         code revision whose kernels produce DIFFERENT VALUES for the
-        same config (e.g. the OPH binning/densification fix) read as
-        stale-and-recompute instead of silently mixing incompatible
-        signatures in an incremental run."""
+        same config read as stale-and-recompute instead of silently
+        mixing incompatible signatures in an incremental run."""
         from acxspark.operators.signatures import SIG_ALGO_VERSION
 
         blob = json.dumps(

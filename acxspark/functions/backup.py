@@ -83,11 +83,17 @@ def _file_digests(spark: SparkSession, d: Path) -> list[dict]:
     from pathlib import PurePosixPath
     from urllib.parse import unquote, urlparse
 
+    # A symlink on the way to ``d`` can leave Hadoop's path unresolved
+    # (/tmp vs /private/tmp): fall back to the unresolved absolute base.
     base = PurePosixPath(str(Path(d).resolve()))
+    unresolved = PurePosixPath(os.path.abspath(d))
     out = []
     for r in rows:
         p = PurePosixPath(unquote(urlparse(r["path"]).path))
-        rel = str(p.relative_to(base))
+        try:
+            rel = str(p.relative_to(base))
+        except ValueError:
+            rel = str(p.relative_to(unresolved))
         out.append({"path": rel, "size": int(r["size"]), "sha256": r["sha256"]})
     return sorted(out, key=lambda e: e["path"])
 

@@ -489,56 +489,41 @@ def lsh_near_dup_pairs(
     seed: int = 42,
     sim_decimals: int = 4,
     max_bucket: int = 1000,
-    salt_buckets: int = 8,
-    salted: bool = True,
     caches: list[DataFrame] | None = None,
-    strategy: str = "bucket",
 ) -> DataFrame:
     """Near-dup pairs via multi-table hyperplane LSH + exact re-check.
 
     Each of ``n_tables`` independent plane sets buckets the corpus;
-    the candidate self-join runs per xxhash64(table, bucket) equi-key —
+    candidates are the pairs sharing an xxhash64(table, bucket) key —
     at 10^12 rows this turns the O(n²) cross join into Σ bucket² work.
     Skew defense mirrors the MinHash-LSH and SimHash tiers
     (operators/lsh.py, operators/simhash.py) exactly:
 
     1. ONLY (band_key, id) longs ride pair generation — vectors
-       (512 B each at 64-dim) never enter the self-join or the pair
-       dedup shuffle; they rejoin the distinct id pairs for the exact
-       cosine re-check at the end;
+       (512 B each at 64-dim) never enter the bucket aggregation or the
+       pair dedup shuffle; they rejoin the distinct id pairs for the
+       exact cosine re-check at the end;
     2. buckets with > ``max_bucket`` members are dropped from pair
        generation (a recall/scale tradeoff: a doc in a capped bucket
        can still meet its near-dups in the other ``n_tables - 1``
        tables — multi-table redundancy is the recall floor);
-    3. ``strategy="bucket"`` (default, mirrors lsh.candidate_pairs):
-       the capped buckets group by key, collect their member ids
-       (≤ max_bucket × 8 B per buffer — the cap anti-join runs FIRST,
-       and vectors stay OUT of the aggregation), and emit the
-       triangular pairs map-side — one pair-generation shuffle, no
-       probe job. ``strategy="join"``: the round-3 self-join, where
-       hot sub-cap buckets (> max_bucket/4) go through the salted
-       self-join (:func:`acxspark.operators.lsh.salted_self_join_pairs`
-       — output proven identical to the plain join), cold buckets join
-       plain; AQE skew-split is the second line of defense;
+    3. the capped buckets group by key, collect their member ids
+       (≤ max_bucket × 8 B per buffer) and emit the triangular pairs
+       map-side (:func:`acxspark.operators.lsh.bucket_pairs`) — one
+       pair-generation shuffle, no probe job;
     4. ``n_planes=None`` sizes the bucket count to the corpus via
        :func:`auto_n_planes` (runs ONE count job at call time) so
        bucket population stays ~constant as the corpus grows instead
        of detonating quadratically at a fixed 2^8 buckets.
 
-    With ``strategy="join"`` and ``salted=True`` this function is NOT
-    fully lazy: it persists the exploded bucket rows and probes for hot
-    buckets at call time (same adaptive-engagement contract as
-    simhash_candidate_pairs).
     Recall is tested against :func:`near_dup_pairs` in pytest, and a
     precision query (every emitted pair's cosine >= threshold, pairs a
     subset of brute force) is oracle-checked — LSH is probabilistic by
     construction, so completeness has no SQL twin.
     """
     from acxspark.operators.lsh import (bucket_pairs, huge_band_keys,
-                                        salted_self_join_pairs, track_cache)
+                                        track_cache)
 
-    if strategy not in ("bucket", "join"):
-        raise ValueError(f"unknown pair strategy {strategy!r}")
     if dim is None:  # infer from one row (schema carries no length)
         row = corpus.select(vec_col).filter(F.col(vec_col).isNotNull()).head()
         if row is None:
@@ -568,51 +553,20 @@ def lsh_near_dup_pairs(
     keyed = tables[0]
     for t in tables[1:]:
         keyed = keyed.unionByName(t)
-    # persisted: feeds the bucket-size agg AND both sides of the
-    # self-join — without the cache the n_tables×n_planes dot products
-    # re-run per consumer. Registered for release via track_cache.
+    # persisted: feeds the sampled hot-bucket pre-drop AND the pair
+    # generation — without the cache the n_tables×n_planes dot
+    # products re-run per consumer. Registered for release via
+    # track_cache.
     keyed = track_cache(keyed.persist(), caches)
 
-    if strategy == "bucket":
-        # single full-volume shuffle (same design as lsh.candidate_pairs):
-        # sampled catastrophic-bucket pre-drop for the aggregation-buffer
-        # guard, exact cap enforced post-agg inside bucket_pairs
-        kc = keyed.join(
-            F.broadcast(huge_band_keys(keyed, max_bucket)),
-            "band_key", "left_anti",
-        )
-        cand = bucket_pairs(kc, id_col, cap=max_bucket).distinct()
-    else:
-        # persisted (round 4): sizes feeds three independent consumers
-        # (cap anti-join broadcast, hot-bucket probe, hot-keys broadcast)
-        # — each would re-aggregate every cached band row otherwise
-        sizes = track_cache(
-            keyed.groupBy("band_key").agg(F.count("*").alias("band_n")).persist(),
-            caches,
-        )
-        kc = keyed.join(
-            F.broadcast(sizes.filter(F.col("band_n") > max_bucket)),
-            "band_key", "left_anti",
-        )
-        hot_threshold = max(max_bucket // 4, 2 * salt_buckets)
-        hot_sizes = sizes.filter(
-            (F.col("band_n") > hot_threshold) & (F.col("band_n") <= max_bucket)
-        )
-        use_salted = (
-            salted and salt_buckets > 1 and hot_sizes.limit(1).count() > 0
-        )
-
-        from acxspark.operators.lsh import plain_pairs
-
-        if use_salted:
-            hot_keys = F.broadcast(hot_sizes.select("band_key"))
-            hot = kc.join(hot_keys, "band_key", "left_semi")
-            cold = kc.join(hot_keys, "band_key", "left_anti")
-            cand = plain_pairs(cold, id_col).unionByName(
-                salted_self_join_pairs(hot, id_col, salt_buckets)
-            ).distinct()
-        else:
-            cand = plain_pairs(kc, id_col).distinct()
+    # single full-volume shuffle (same design as lsh.candidate_pairs):
+    # sampled catastrophic-bucket pre-drop for the aggregation-buffer
+    # guard, exact cap enforced post-agg inside bucket_pairs
+    kc = keyed.join(
+        F.broadcast(huge_band_keys(keyed, max_bucket)),
+        "band_key", "left_anti",
+    )
+    cand = bucket_pairs(kc, id_col, cap=max_bucket).distinct()
 
     # exact re-check: vectors join the slim distinct id pairs — the
     # ONLY place embeddings move, and each id's vector moves once per

@@ -12,15 +12,15 @@ hottest key. Defenses, in order:
    pair generation (a doc in a capped band still meets its dups in the
    other bands — with 32 bands the recall loss is negligible and
    measured by the recall gate);
-2. the default ``strategy="bucket"`` generates pairs by grouping the
-   capped band members and emitting the triangular pairs map-side —
-   the cap bounds every task at cap²/2 emissions, so there is no
-   reducer for a hot key to overwhelm (skew-free by construction);
-3. for ``strategy="join"`` (large caps): AQE skew-join splitting
-   (session.py) plus the adaptive salted self-join for mid-size hot
-   bands; the join is on the exploded (band_key) equi-key with
-   map-side pruned columns only (8-byte hashed doc id + band key —
-   never text, urls, or signatures).
+2. pairs are generated by grouping the capped band members and
+   emitting the triangular pairs map-side — the cap bounds every task
+   at cap²/2 emissions, so there is no reducer for a hot key to
+   overwhelm (skew-free by construction). Only map-side pruned columns
+   ride the shuffle (8-byte hashed doc id + band key — never text,
+   urls, or signatures).
+
+The SimHash and hyperplane-ANN tiers share this machinery
+(:func:`huge_band_keys`, :func:`bucket_pairs`, :func:`join_back_ids`).
 """
 
 from __future__ import annotations
@@ -89,127 +89,66 @@ def release_band_caches() -> None:
 
 def candidate_pairs(df: DataFrame, id_col: str, sig_col: str = "minhash",
                     cfg: DedupConfig = DEFAULT_CONFIG,
-                    salted: bool = True,
-                    caches: list[DataFrame] | None = None,
-                    strategy: str = "bucket",
-                    persist_bands: bool = True) -> DataFrame:
+                    caches: list[DataFrame] | None = None) -> DataFrame:
     """Distinct candidate (id_a < id_b) pairs from shared band keys.
 
-    ``strategy="bucket"`` (default): group the capped band rows by
-    band_key, collect the member ids (the over-cap anti-join below
-    guarantees every array is ≤ ``cfg.max_band_size``, so the
-    aggregation buffer is bounded — 200 ids ≈ 1.6 KB), and emit the
+    Groups the capped band rows by band_key, collects the member ids
+    (the over-cap pre-drop plus the post-aggregation cap bound every
+    array by ``cfg.max_band_size`` — 200 ids ≈ 1.6 KB), and emits the
     triangular pairs map-side with a double explode. One shuffle of
     the band rows total; the worst task emits cap²/2 ≈ 20k pairs, so
-    no salting is needed — the cap IS the skew bound. Measured ~2×
-    less candidate-stage shuffle than the self-join (both join sides
-    shuffled bk + the hot tier replicated rows (s+1)/2×).
-
-    ``strategy="join"``: the round-3 two-sided self-join, kept as the
-    path for configs with a cap too large for single-task emission
-    (cap²/2 pairs in one task). There ``salted=True`` routes hot bands
-    through :func:`salted_self_join_pairs`: the join key becomes
-    (band_key, salt_a, salt_b), so one hot band fans out over
-    s(s+1)/2 shuffle keys instead of landing on a single reducer —
-    the explicit salted band-key repartitioning, with AQE skew-join
-    as the second line of defense and the hard cap as the third.
-    All three paths produce IDENTICAL pairs (tested)."""
-    if strategy not in ("bucket", "join"):
-        raise ValueError(f"unknown pair strategy {strategy!r}")
+    no salting is needed — the cap IS the skew bound."""
     # STRING ids (urls ~40-80 B) would ride every band row through the
-    # pair-generation shuffle ``bands``× per doc. On the bucket path,
-    # hash them to 8-byte longs first and join the distinct pairs back
-    # to the originals at the end: band-shuffle bytes drop ~4× (the
-    # dominant byte mover of the whole pipeline), for two id-join
-    # shuffles over the (small) pair set + the (id, hash) projection.
+    # pair-generation shuffle ``bands``× per doc. Hash them to 8-byte
+    # longs first and join the distinct pairs back to the originals at
+    # the end: band-shuffle bytes drop ~4× (the dominant byte mover of
+    # the whole pipeline), for two id-join shuffles over the (small)
+    # pair set + the (id, hash) projection.
     # A 64-bit collision can only LOSE a pair when the two colliding
     # urls are themselves a true dup pair (their hids compare equal and
     # the triangular filter drops them) — P ≈ dup_pairs × 2⁻⁶⁴, ~5e-8
     # expected losses at 10^12 docs — and can only ADD candidates
     # otherwise (the join-back fans out), which the downstream exact
     # verify filters.
-    hash_ids = strategy == "bucket" and isinstance(
-        df.schema[id_col].dataType, StringType)
+    hash_ids = isinstance(df.schema[id_col].dataType, StringType)
     if hash_ids:
         key_col = "_acx_hid"
         src = df.withColumn(key_col, F.xxhash64(F.col(id_col)))
     else:
         key_col, src = id_col, df
-    # persisted: the exploded band rows feed BOTH the hot-band size agg
-    # and the pair generation (both sides of the self-join under
-    # strategy="join") — without the cache the explode (bands × corpus
-    # rows) runs per consumer. The handle lands in ``caches`` (caller
-    # releases) or the module registry (release_band_caches()) so
-    # repeated calls don't leak cache.
+    # persisted: the exploded band rows feed BOTH the sampled hot-band
+    # pre-drop and the pair generation — without the cache the explode
+    # (bands × corpus rows) runs per consumer. The handle lands in
+    # ``caches`` (caller releases) or the module registry
+    # (release_band_caches()) so repeated calls don't leak cache.
     # band_idx is dropped before the persist (round 4): it exists only
     # inside the band-key hash — carrying it through the cache and
     # every shuffle paid 4-8 B × bands × corpus rows for nothing.
-    # persist_bands=False re-derives the explode from the caller's plan
-    # per consumer instead of caching band rows. MEASURED NEGATIVE on
-    # this host at bench scale (BENCH/r5_lsh_ab.json, 160k/32c): even
-    # with the signature frame persisted, recomputing the explode reads
-    # the WIDE sig cache (shingle arrays ride it) once per consumer —
-    # more DRAM traffic than the compact 16 B/row band cache it avoids
-    # (24.2 s vs 18.7 s). The default stays True; the knob remains for
-    # configs whose sig frame is slim (no shingles) or disk-backed.
+    # Re-deriving the explode per consumer instead of caching measured
+    # slower at bench scale (BENCH/r5_lsh_ab.json, 160k/32c: 24.2 s vs
+    # 18.7 s): it re-reads the WIDE signature cache (shingle arrays
+    # ride it) once per consumer.
     bk = band_keys(src, key_col, sig_col, cfg).select("band_key", key_col)
-    if persist_bands:
-        bk = track_cache(bk.persist(), caches)
-    if strategy == "bucket":
-        # ONE full-volume shuffle total. Measured at 1.28M docs / 41M
-        # band rows: ~90% of band keys are singletons, so an exact
-        # pre-count (a second full-volume shuffle — the partial agg
-        # barely combines when nearly every key is distinct) costs as
-        # much as the collect itself and found 0 over-cap bands. The
-        # cap is enforced EXACTLY post-agg (size(ids) ≤ cap — identical
-        # output semantics); what the pre-count really bought was the
-        # aggregation-buffer memory guard, and a sampled pre-drop
-        # (:func:`huge_band_keys`) buys the same guard for 1% of the
-        # volume: any band big enough to threaten a buffer (≫ cap) is
-        # detected with near-certainty, and a missed marginal band
-        # buffers a few × cap × 8 B — harmless. Every pre-dropped band
-        # is (overwhelmingly) over cap, so the post-filter would have
-        # dropped it anyway — output is unchanged.
-        kc = bk.join(F.broadcast(huge_band_keys(bk, cfg.max_band_size)),
-                     "band_key", "left_anti")
-        pairs = bucket_pairs(kc, key_col, cap=cfg.max_band_size).distinct()
-        if hash_ids:
-            pairs = join_back_ids(pairs, df, id_col)
-        return pairs
-
-    # hot-band cap (join strategy): window-free two-pass agg — exact
-    # sizes feed the over-cap anti-join and the hot/cold salting split.
-    sizes = bk.groupBy("band_key").agg(F.count("*").alias("band_n"))
-    if salted and cfg.band_salt_buckets > 1:
-        # sizes feeds TWO broadcast subtrees (over-cap anti-join +
-        # hot/cold split) — persist so the full groupBy over the
-        # exploded rows runs once
-        sizes = track_cache(sizes.persist(), caches)
-    bk = bk.join(F.broadcast(sizes.filter(F.col("band_n") > cfg.max_band_size)),
+    bk = track_cache(bk.persist(), caches)
+    # ONE full-volume shuffle total. Measured at 1.28M docs / 41M band
+    # rows: ~90% of band keys are singletons, so an exact pre-count (a
+    # second full-volume shuffle — the partial agg barely combines when
+    # nearly every key is distinct) costs as much as the collect itself
+    # and found 0 over-cap bands. The cap is enforced EXACTLY post-agg
+    # (size(ids) ≤ cap); what a pre-count really buys is the
+    # aggregation-buffer memory guard, and a sampled pre-drop
+    # (:func:`huge_band_keys`) buys the same guard for 1% of the
+    # volume: any band big enough to threaten a buffer (≫ cap) is
+    # detected with near-certainty, and a missed marginal band buffers
+    # a few × cap × 8 B — harmless. Every pre-dropped band is
+    # (overwhelmingly) over cap, so the post-filter would have dropped
+    # it anyway — output is unchanged.
+    kc = bk.join(F.broadcast(huge_band_keys(bk, cfg.max_band_size)),
                  "band_key", "left_anti")
-
-    if salted and cfg.band_salt_buckets > 1:
-        # ADAPTIVE salting: replication costs (s+1)/2× rows, so only
-        # bands hot enough to skew a reducer pay it; the cold majority
-        # takes the plain join. Threshold = max_band_size/4 keeps the
-        # salted tier's per-(key,salt-pair) group ≤ ~cap/s.
-        hot_threshold = max(cfg.max_band_size // 4, 2 * cfg.band_salt_buckets)
-        hot_keys = F.broadcast(
-            sizes.filter(
-                (F.col("band_n") > hot_threshold)
-                & (F.col("band_n") <= cfg.max_band_size)
-            ).select("band_key")
-        )
-        hot = bk.join(hot_keys, "band_key", "left_semi")
-        cold = bk.join(hot_keys, "band_key", "left_anti")
-        return (
-            plain_pairs(cold, id_col)
-            .unionByName(
-                salted_self_join_pairs(hot, id_col, cfg.band_salt_buckets)
-            )
-            .distinct()
-        )
-    return plain_pairs(bk, id_col).distinct()
+    pairs = bucket_pairs(kc, key_col, cap=cfg.max_band_size).distinct()
+    if hash_ids:
+        pairs = join_back_ids(pairs, df, id_col)
+    return pairs
 
 
 def join_back_ids(pairs: DataFrame, df: DataFrame, id_col: str,
@@ -259,89 +198,27 @@ def huge_band_keys(bk: DataFrame, cap: int,
     )
 
 
-def bucket_pairs(rows: DataFrame, id_col: str,
-                 cap: int | None = None) -> DataFrame:
+def bucket_pairs(rows: DataFrame, id_col: str, cap: int) -> DataFrame:
     """All (id_a < id_b) pairs sharing a band_key, via groupBy-collect
     + map-side double explode. The aggregation buffer is one array of
-    ids per band key; callers bound it EITHER by dropping over-cap
-    bands first (exact pre-count) OR by pre-dropping only catastrophic
+    ids per band key; callers bound it by pre-dropping catastrophic
     bands (:func:`huge_band_keys`) and passing ``cap`` so the exact
     cap semantics are enforced post-agg here. Pair emission (≤ cap²/2
     rows from one task) happens after the shuffle, inside whole-stage
-    codegen — no join, no salt replication.
+    codegen — no join.
 
     Within one band key each id appears at most once (a doc emits one
     row per band and band_idx is folded into the key hash), so the
     ``id_a < id_b`` filter yields each unordered pair exactly once per
     shared band; duplicates across bands are the caller's distinct."""
-    size_ok = F.size(F.col("ids")) >= 2
-    if cap is not None:
-        size_ok = size_ok & (F.size(F.col("ids")) <= cap)
+    n_ids = F.size(F.col("ids"))
     grouped = (
         rows.groupBy("band_key")
         .agg(F.collect_list(F.col(id_col)).alias("ids"))
-        .filter(size_ok)
+        .filter((n_ids >= 2) & (n_ids <= cap))
     )
     return (
         grouped.select(F.col("ids"), F.explode("ids").alias("id_a"))
         .select(F.col("id_a"), F.explode("ids").alias("id_b"))
         .filter(F.col("id_a") < F.col("id_b"))
     )
-
-
-def plain_pairs(rows: DataFrame, id_col: str) -> DataFrame:
-    """Triangular (id_a < id_b) pairs within each ``band_key`` via the
-    plain self-join — the cold-band complement of
-    :func:`salted_self_join_pairs`, shared by the LSH, SimHash and ANN
-    tiers (one definition, not three hand-synced copies)."""
-    a = rows.select(F.col("band_key"), F.col(id_col).alias("id_a"))
-    b = rows.select(F.col("band_key"), F.col(id_col).alias("id_b"))
-    return (
-        a.join(b, "band_key")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-
-
-def salted_self_join_pairs(bk: DataFrame, id_col: str, s: int) -> DataFrame:
-    """All (id_a < id_b) pairs sharing a band_key, via an s-way salted
-    self-join.
-
-    Each row gets salt = hash(id) mod s. The left side replicates each
-    row to every salt bucket >= its own; the right side keeps its own
-    salt; the equi-join key is (band_key, salt_left_target, salt_right)
-    folded into (band_key, sb) with sa carried for the triangular
-    dedup. Every unordered salt pair (sa<=sb) is produced exactly once,
-    so with the id_a<id_b filter the output equals the plain self-join
-    while the hottest single band key spreads over s join partitions
-    per replica (max partition shrinks ~s²/2 for a hot key)."""
-    salted = bk.withColumn(
-        "salt", F.pmod(F.xxhash64(F.col(id_col), F.lit(1)), F.lit(s))
-    )
-    a = salted.select(
-        "band_key",
-        F.col(id_col).alias("id_a"),
-        F.col("salt").alias("sa"),
-        F.explode(F.sequence(F.col("salt"), F.lit(s - 1))).alias("sb"),
-    )
-    b = salted.select(
-        "band_key", F.col(id_col).alias("id_b"), F.col("salt").alias("sb")
-    )
-    joined = a.join(b, ["band_key", "sb"])
-    # within one salt bucket (sa == sb) both orientations appear → keep
-    # id_a < id_b; across buckets (sa < sb) each unordered pair appears
-    # once in arbitrary orientation → normalize with least/greatest
-    within = joined.filter(
-        (F.col("sa") == F.col("sb")) & (F.col("id_a") < F.col("id_b"))
-    ).select("id_a", "id_b")
-    across = joined.filter(F.col("sa") < F.col("sb")).select(
-        F.least("id_a", "id_b").alias("id_a"),
-        F.greatest("id_a", "id_b").alias("id_b"),
-    )
-    # NO distinct here (round 4): within one band key each unordered
-    # pair is produced exactly once (the triangular construction
-    # above); duplicates only arise ACROSS band keys, and every caller
-    # (candidate_pairs, simhash, ann lsh) already applies a
-    # union-level distinct — the inner one was a redundant full
-    # shuffle of the hot-pair set.
-    return within.unionByName(across)

@@ -1,6 +1,6 @@
 """Exact n-gram Jaccard near-dup pairs — fully relational, oracle-able.
 
-Unlike the MinHash tier (probabilistic, operators/minhash.py), this
+Unlike the MinHash tier (probabilistic, operators/signatures.py), this
 computes EXACT token-n-gram Jaccard via explode + self-join — the
 deterministic ANSI-SQL-expressible near-dup operator the DuckDB oracle
 can verify bit-for-bit. It doubles as the ground-truth generator the

@@ -1,10 +1,15 @@
 """Fused, batch-vectorized signature computation: one Arrow pass
-producing shingles + MinHash + SimHash per document.
+producing shingles + MinHash + SimHash per document — the engine's
+one signature kernel (the per-row reference oracles it is pinned
+against live in tests/oracles.py).
 
-The per-row UDFs (operators/minhash.py, operators/simhash.py) are kept
-as the reference implementations and unit-test targets; THIS module is
-the pipeline hot path. Difference in method, not in math:
-
+- tokens are hashed ONCE in the JVM (:func:`token_hashes`, codegen
+  xxhash64 per token) and the k-gram windows are combined in numpy: a
+  pure-SQL k-gram build (slice + concat_ws per position) allocates
+  O(text × k) transient strings per row and measured GC-bound and
+  anti-scaling at local[32]. The window hash of
+  [t_i .. t_{i+k-1}] is ``Σ_j hash(t_{i+j}) * B^j  (mod 2^64)`` with
+  B odd — position-weighted, so permuted tokens hash differently.
 - per-row loops cost ~250 µs/row of numpy dispatch overhead — at 10^9
   rows/executor-day that's the whole budget. Here the entire Arrow
   batch is flattened into ONE uint64 array and every stage is a
@@ -35,11 +40,10 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql import types as T
 
 from acxspark.config import DEFAULT_CONFIG, DedupConfig
-from acxspark.operators.minhash import _perms
-from acxspark.operators.shingle import _B, token_hashes
+from acxspark.functions.normalize import tokens
 
+_B = np.uint64(0x9E3779B97F4A7C15)  # window-poly base; odd ⇒ invertible mod 2^64
 _I64MAX = np.int64(np.iinfo(np.int64).max)
-_CHUNK = 1 << 16  # flat elements per minhash/simhash chunk (~64 MB peak)
 
 
 # Persistent per-worker buffers, grown once to the high-water mark and
@@ -50,6 +54,22 @@ _CHUNK = 1 << 16  # flat elements per minhash/simhash chunk (~64 MB peak)
 _FLAT_BUF: list[np.ndarray] = []
 _ACC_BUF: list[np.ndarray] = []
 _SH_BUF: list[np.ndarray] = []
+
+
+def token_hashes(text_col, seed: int = 42) -> Column:
+    """array<long> of xxhash64(token, seed) — JVM-side, one hash per
+    token, no positional string building."""
+    return F.transform(tokens(text_col), lambda t: F.xxhash64(t, F.lit(seed)))
+
+
+@lru_cache(maxsize=8)
+def _perms(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
+    """Seed-pinned MinHash permutations ``x ↦ a_j*x + b_j mod 2^64``
+    (odd multipliers ``a_j``), built once per worker."""
+    rng = np.random.default_rng(seed)
+    a = rng.integers(1, 1 << 63, size=num_perm, dtype=np.uint64) * np.uint64(2) + np.uint64(1)
+    b = rng.integers(0, 1 << 63, size=num_perm, dtype=np.uint64)
+    return a, b
 
 
 def _grow(cache: list[np.ndarray], n: int, dtype) -> np.ndarray:
@@ -86,7 +106,7 @@ def _window_poly(flat: np.ndarray, lens: np.ndarray, k: int
 
     Returns (shingles u64[S] view into a reused buffer, shingle counts
     i64[R]). Rows with 0 < len < k get ONE shingle over their full
-    token run (same contract as shingle.combine_windows)."""
+    token run, so tiny docs still participate."""
     m = len(flat)
     ends = np.cumsum(lens)
     starts = ends - lens
@@ -132,13 +152,11 @@ def _window_poly(flat: np.ndarray, lens: np.ndarray, k: int
 #: bump whenever ANY signature kernel changes the VALUES it emits for
 #: an unchanged config (config.fingerprint mixes this in, so committed
 #: snapshots from older kernels read as stale and recompute instead of
-#: silently mixing incompatible signatures). v2: OPH multiply-shift
-#: binning + positional nearest-left densification.
+#: silently mixing incompatible signatures). v2 fixed the binning of
+#: the since-removed one-permutation estimator; k-permutation values
+#: are unchanged since v1.
 SIG_ALGO_VERSION = 2
 
-_OPH_A = np.uint64(0xBF58476D1CE4E5B9)  # splitmix64 constants (public)
-_OPH_C = np.uint64(0x94D049BB133111EB)
-_DENSE_K = np.uint64(0x2545F4914F6CDD1D)
 _U64MAX = np.uint64(0xFFFFFFFFFFFFFFFF)
 
 _KP_CHUNK = 2048  # shingles per block: (P × 2048) u64 = 2 MB work buffer per worker
@@ -154,8 +172,8 @@ def _minhash_kperm_flat(shingles: np.ndarray, n_sh: np.ndarray, num_perm: int,
     (P × chunk) work buffer is reused and L2-resident, so the stage is
     COMPUTE-bound (~P ops/byte), which is what actually scales with
     cores on bandwidth-capped hosts: this VM measured ~20 GB/s DRAM
-    saturating at ~8 streaming processes, so the 1-op/byte OPH variant
-    (:func:`_minhash_oph_flat`) cannot speed up past 8 workers while
+    saturating at ~8 streaming processes, so a 1-op/byte estimator
+    (one-permutation hashing) cannot speed up past 8 workers while
     this one can."""
     a, b = _perms(num_perm, seed)
     p = num_perm
@@ -183,77 +201,6 @@ def _minhash_kperm_flat(shingles: np.ndarray, n_sh: np.ndarray, num_perm: int,
             out[rows] = np.minimum(out[rows], mins.T)
     out = out.view(np.int64)
     out[n_sh == 0] = _I64MAX
-    return out
-
-
-def _minhash_oph_flat(shingles: np.ndarray, n_sh: np.ndarray, num_perm: int,
-                      seed: int) -> np.ndarray:
-    """(R, num_perm) int64 signatures via One-Permutation Hashing with
-    rotation densification (Li et al. 2012; Shrivastava & Li 2014 —
-    both public).
-
-    One remix hash per shingle lands it in bin = top-log2(P) bits; the
-    bin minimum is the signature slot; empty bins borrow the nearest
-    filled bin to the left (circularly) plus a distance-keyed mix.
-    O(M + M log M) total vs O(P·M) for P independent permutations —
-    at P=128 that is the difference between the UDF stage dominating
-    the pipeline and it disappearing. Collision probability per slot
-    stays ≈ Jaccard (the recall gate re-validates the S-curve).
-
-    ``seed`` enters through the remix constants so different seeds give
-    independent sketches."""
-    p = num_perm
-    r_total = len(n_sh)
-    out_u = np.full(r_total * p, _U64MAX, dtype=np.uint64)
-    if len(shingles):
-        with np.errstate(over="ignore"):
-            h = (shingles + np.uint64(seed)) * _OPH_A + _OPH_C
-            h ^= h >> np.uint64(31)
-        # flat scatter-min: key = row*P + bin. ufunc.at has a fast path
-        # for 1-D integer indexing — 3ms/900k vs 56ms for the sort it
-        # replaces, and the (R×P) accumulator stays cache-resident, so
-        # the stage stops being DRAM-bound under 32 concurrent workers.
-        # bin via multiply-shift range reduction — uniform over [0, p)
-        # for ANY p (the former top-bits shift confined bins to the
-        # largest power of two ≤ p, permanently starving up to half
-        # the slots whenever num_perm wasn't a power of two).
-        key = np.repeat(np.arange(r_total, dtype=np.int64) * p, n_sh)
-        with np.errstate(over="ignore"):
-            key += (
-                (h >> np.uint64(32)) * np.uint64(p) >> np.uint64(32)
-            ).astype(np.int64)
-        np.minimum.at(out_u, key, h)
-    out_u = out_u.reshape(r_total, p)
-
-    # rotation densification, fully vectorized: nearest filled bin to
-    # the left (circular) via a doubled maximum.accumulate. Markers
-    # are DOUBLED-ARRAY POSITIONS, not bin indices: accumulate over
-    # positions yields the most recent filled position at-or-left of
-    # each slot (positions are monotone, so max == latest), which is
-    # exactly nearest-left; accumulating bin indices instead saturated
-    # at the row's GLOBAL max filled bin, making every empty bin
-    # borrow from one source and breaking the per-slot ≈Jaccard
-    # collision property on sparse docs.
-    filled = out_u != _U64MAX
-    any_filled = filled.any(axis=1)
-    col = np.arange(p, dtype=np.int64)
-    pos = np.arange(2 * p, dtype=np.int64)
-    filled2 = np.concatenate([filled, filled], axis=1)
-    idx2 = np.where(filled2, pos[None, :], np.int64(-1))
-    run = np.maximum.accumulate(idx2, axis=1)
-    q = run[:, p:]  # most recent filled doubled-position ≤ p+j
-    src_safe = np.where(q >= 0, q % p, 0)
-    borrowed = np.take_along_axis(out_u, src_safe.astype(np.intp), axis=1)
-    # circular left-distance: (p + j) - q ∈ [0, p) whenever the row
-    # has any filled bin
-    dist = (p + col[None, :] - np.where(q >= 0, q, 0)).astype(np.uint64)
-    with np.errstate(over="ignore"):
-        densified = borrowed + dist * _DENSE_K
-    out_u = np.where(filled, out_u, densified)
-    out_u[~any_filled] = _U64MAX  # empty docs keep the sentinel signature
-    out = out_u.view(np.int64)
-    # sentinel parity with the per-row reference: empty docs = I64MAX
-    out[~any_filled] = _I64MAX
     return out
 
 
@@ -315,32 +262,29 @@ def _df_cut(shingles: np.ndarray, n_sh: np.ndarray,
     return np.ascontiguousarray(shingles[keep]), n_new
 
 
+def _row_lists(shingles: np.ndarray, n_sh: np.ndarray) -> list[np.ndarray]:
+    """Per-row int64 views into the flat shingle array (Arrow copies
+    them out before the next batch reuses the buffer)."""
+    ends = np.cumsum(n_sh)
+    sh_i64 = shingles.view(np.int64)
+    return [sh_i64[e - n : e] for n, e in zip(n_sh, ends)]
+
+
 def compute_signatures(tok_hashes: pd.Series, k: int, num_perm: int,
-                       seed: int, minhash_mode: str = "kperm",
-                       drop: np.ndarray | None = None) -> pd.DataFrame:
+                       seed: int, drop: np.ndarray | None = None
+                       ) -> pd.DataFrame:
     """Batch core (pure function, unit-testable without Spark).
 
-    minhash_mode: 'kperm' (classical, compute-bound — default) or
-    'oph' (one-permutation + densification, bandwidth-light).
     ``drop``: optional sorted int64 array of shingle hashes to remove
     before signature computation (the doc-frequency cut)."""
-    if minhash_mode not in ("kperm", "oph"):
-        # loud, not silent: a typo'd mode must never quietly compute a
-        # DIFFERENT estimator's signatures
-        raise ValueError(f"unknown minhash_mode {minhash_mode!r} "
-                         "(expected 'kperm' or 'oph')")
     flat, lens = _flatten(tok_hashes)
     shingles, n_sh = _window_poly(flat, lens, k)
     if drop is not None:
         shingles, n_sh = _df_cut(shingles, n_sh, drop)
-    fn = _minhash_kperm_flat if minhash_mode == "kperm" else _minhash_oph_flat
-    mh = fn(shingles, n_sh, num_perm, seed)
+    mh = _minhash_kperm_flat(shingles, n_sh, num_perm, seed)
     sh = _simhash_flat(shingles, n_sh)
-    ends = np.cumsum(n_sh)
-    starts = ends - n_sh
-    sh_i64 = shingles.view(np.int64)
-    sh_lists = [sh_i64[s:e] for s, e in zip(starts, ends)]
-    return pd.DataFrame({"shingles": sh_lists, "minhash": list(mh), "simhash": sh})
+    return pd.DataFrame({"shingles": _row_lists(shingles, n_sh),
+                         "minhash": list(mh), "simhash": sh})
 
 
 _SIG_SCHEMA = T.StructType(
@@ -353,41 +297,41 @@ _SIG_SCHEMA = T.StructType(
 
 
 @lru_cache(maxsize=8)
-def _make_sig_udf(k: int, num_perm: int, seed: int, minhash_mode: str):
+def _make_sig_udf(k: int, num_perm: int, seed: int):
     @pandas_udf(_SIG_SCHEMA)
     def _sig(tok: pd.Series) -> pd.DataFrame:
-        return compute_signatures(tok, k, num_perm, seed, minhash_mode)
+        return compute_signatures(tok, k, num_perm, seed)
 
     return _sig
 
 
-def _make_sig_udf_dfcut(k: int, num_perm: int, seed: int,
-                        minhash_mode: str, drop_bc):
+def _make_sig_udf_dfcut(k: int, num_perm: int, seed: int, drop_bc):
     """Uncached variant closing over a broadcast of the hot-gram drop
     set (broadcast identity varies per call — lru_cache would pin a
     stale one)."""
 
     @pandas_udf(_SIG_SCHEMA)
     def _sig(tok: pd.Series) -> pd.DataFrame:
-        return compute_signatures(tok, k, num_perm, seed, minhash_mode,
-                                  drop=drop_bc.value)
+        return compute_signatures(tok, k, num_perm, seed, drop=drop_bc.value)
 
     return _sig
 
 
-def _check_mode(mode: str) -> str:
-    """Driver-side fail-fast twin of compute_signatures' own check —
-    a typo'd mode should error at plan-build time, not in an executor
-    batch."""
-    if mode not in ("kperm", "oph"):
-        raise ValueError(f"unknown minhash_mode {mode!r} "
-                         "(expected 'kperm' or 'oph')")
-    return mode
+@lru_cache(maxsize=8)
+def _make_shingle_udf(k: int):
+    """Shingles-only twin of the signature UDF: the kernel's own
+    window-poly hashes, without the MinHash/SimHash work."""
+
+    @pandas_udf(T.ArrayType(T.LongType()))
+    def _sh(tok: pd.Series) -> pd.Series:
+        flat, lens = _flatten(tok)
+        return pd.Series(_row_lists(*_window_poly(flat, lens, k)))
+
+    return _sh
 
 
 def signature_col(text_col, cfg: DedupConfig = DEFAULT_CONFIG) -> Column:
-    mode = _check_mode(getattr(cfg, "minhash_mode", "kperm"))
-    return _make_sig_udf(cfg.shingle_k, cfg.num_perm, cfg.seed, mode)(
+    return _make_sig_udf(cfg.shingle_k, cfg.num_perm, cfg.seed)(
         token_hashes(text_col, cfg.seed)
     )
 
@@ -405,8 +349,6 @@ def hot_shingle_hashes(df: DataFrame, text_col: str,
     the same threshold can be estimated from a corpus sample; exact
     counting is used here because it is also the oracle-checkable
     form (ngram.py max_doc_freq does the identical cut SQL-side)."""
-    from acxspark.operators.shingle import shingle_hashes
-
     mod = getattr(cfg, "df_sample_mod", 1)
     if mod > 1:
         # deterministic content-keyed sample (see config.df_sample_mod):
@@ -422,7 +364,9 @@ def hot_shingle_hashes(df: DataFrame, text_col: str,
     ex = df.select(
         F.explode(
             F.array_distinct(
-                shingle_hashes(F.col(text_col), cfg.shingle_k, cfg.seed)
+                _make_shingle_udf(cfg.shingle_k)(
+                    token_hashes(F.col(text_col), cfg.seed)
+                )
             )
         ).alias("g")
     )
@@ -462,9 +406,8 @@ def with_signatures(df: DataFrame, text_col: str = "text",
         drop = hot_hashes if hot_hashes is not None \
             else hot_shingle_hashes(df, text_col, cfg)
         drop_bc = df.sparkSession.sparkContext.broadcast(drop)
-        mode = _check_mode(getattr(cfg, "minhash_mode", "kperm"))
         sig = _make_sig_udf_dfcut(
-            cfg.shingle_k, cfg.num_perm, cfg.seed, mode, drop_bc
+            cfg.shingle_k, cfg.num_perm, cfg.seed, drop_bc
         )(token_hashes(F.col(text_col), cfg.seed))
     return df.select(F.col(id_col), sig.alias("_sig")).select(
         id_col,

@@ -2,92 +2,22 @@
 
 Stage 3b (complementary recall to MinHash/LSH): a document's SimHash
 is the sign-vector of the sum of its shingle hashes' bit-vectors
-(Charikar 2002, public). Near-identical docs differ in few bits;
-candidates are found by the pigeonhole chunk probe: split the 64 bits
-into ``cfg.simhash_tables`` chunks — any pair within Hamming distance
-``d < tables`` shares at least one exact chunk, so an equi-join per
-chunk is exhaustive for the ball (no custom index needed; it's ``t``
-shuffled joins on short int keys).
-
-numpy bit-count over Arrow batches; no per-row Python.
+(Charikar 2002, public). The fingerprints come from the fused
+signature kernel (operators/signatures.py ``_simhash_flat``); this
+module finds candidates by the pigeonhole chunk probe: split the 64
+bits into ``cfg.simhash_tables`` chunks — any pair within Hamming
+distance ``d < tables`` shares at least one exact chunk, so grouping
+by chunk is exhaustive for the ball (no custom index needed).
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql import types as T
+from pyspark.sql.types import StringType
 
 from acxspark.config import DEFAULT_CONFIG, DedupConfig
-from acxspark.operators.shingle import shingle_hashes
-
-
-_SIM_SCRATCH: list[np.ndarray] = []
-
-
-def _sim_scratch(n: int) -> np.ndarray:
-    """Reusable (n, 64) bit buffer — same per-row-mmap-churn fix as
-    minhash._scratch (a fresh ~100 KB temp per row anti-scales)."""
-    if not _SIM_SCRATCH or _SIM_SCRATCH[0].shape[0] < n:
-        _SIM_SCRATCH[:] = [np.empty((max(n, 2048), 64), dtype=np.uint64)]
-    return _SIM_SCRATCH[0]
-
-
-def simhash_batch(shingle_lists: pd.Series) -> pd.Series:
-    """Reference per-row implementation (LOGICAL bit order).
-
-    NOT bit-identical to the fused kernel
-    (signatures._simhash_flat): that kernel's unpackbits layout is a
-    consistent byte-wise-MSB relabeling of the bit index, and
-    ``with_simhash`` feeds DISTINCT shingles where the kernel votes
-    over the multiset. Each variant is a valid SimHash and internally
-    consistent (Hamming distances agree within one variant), but
-    fingerprints from the two paths MUST NOT be mixed in one
-    candidate probe. The pipeline uses the fused kernel everywhere;
-    this function is the unit-test reference and standalone API. The
-    cross-implementation agreement for the kernel's exact convention
-    is oracle-checked in queries.simhash_crosscheck."""
-    out = []
-    weights_template = np.arange(64, dtype=np.uint64)
-    one = np.uint64(1)
-    for sh in shingle_lists:
-        if sh is None or len(sh) == 0:
-            out.append(0)
-            continue
-        s = np.asarray(sh, dtype=np.int64).view(np.uint64)
-        n = len(s)
-        view = _sim_scratch(n)[:n]
-        # bit matrix (N, 64): bit b of hash i, built in the reused buffer
-        np.right_shift(s[:, None], weights_template[None, :], out=view)
-        view &= one
-        votes = view.sum(axis=0).astype(np.int64) * 2 - n  # +1/-1 votes
-        fp = int(np.bitwise_or.reduce((votes > 0).astype(np.uint64) << weights_template))
-        out.append(fp - (1 << 64) if fp >= (1 << 63) else fp)  # reinterpret as int64
-    return pd.Series(out, dtype="int64")
-
-
-@pandas_udf(T.LongType())
-def _simhash_udf(sh: pd.Series) -> pd.Series:
-    return simhash_batch(sh)
-
-
-def with_simhash(df: DataFrame, text_col: str = "text",
-                 cfg: DedupConfig = DEFAULT_CONFIG,
-                 out_col: str = "simhash",
-                 shingles_col: str | None = None) -> DataFrame:
-    """``shingles_col`` reuses an already-materialized shingle array
-    (the pipeline computes shingles ONCE and feeds both MinHash and
-    SimHash from it — recomputing the k-gram scan per tier doubles the
-    most expensive columnar stage)."""
-    sh = (
-        F.col(shingles_col)
-        if shingles_col is not None
-        else shingle_hashes(F.col(text_col), cfg.shingle_k, cfg.seed)
-    )
-    return df.withColumn(out_col, _simhash_udf(sh))
+from acxspark.operators.lsh import huge_band_keys, join_back_ids, track_cache
 
 
 def hamming_distance(a, b) -> Column:
@@ -118,10 +48,8 @@ def chunk_keys(sim_col, cfg: DedupConfig = DEFAULT_CONFIG) -> Column:
 def simhash_candidate_pairs(df: DataFrame, id_col: str,
                             sim_col: str = "simhash",
                             cfg: DedupConfig = DEFAULT_CONFIG,
-                            salted: bool = True,
                             caches: list[DataFrame] | None = None,
-                            lineage=None,
-                            strategy: str = "bucket") -> DataFrame:
+                            lineage=None) -> DataFrame:
     """Pairs within Hamming distance <= cfg.simhash_max_hamming.
 
     Exhaustive by pigeonhole (d < tables) UP TO the hot-bucket cap.
@@ -135,195 +63,89 @@ def simhash_candidate_pairs(df: DataFrame, id_col: str,
        guarantees ONE clean chunk at d < tables, so if that chunk is
        the capped one, the pair is lost from this tier and only the
        probabilistic MinHash/LSH tier can still catch it. Pass
-       ``lineage`` (a :class:`acxspark.metrics.Lineage`) to record
-       ``simhash_band_rows_total`` / ``simhash_band_rows_kept``
-       counters so the drop volume is observable, not assumed;
-    3. ``strategy="bucket"`` (default, mirrors lsh.candidate_pairs):
-       the capped buckets are grouped by key, the (id, fingerprint)
-       structs collected (≤ cap × 16 B per buffer — the cap anti-join
-       runs FIRST), and pairs + exact Hamming emitted map-side with a
-       double explode — one shuffle total, the popcount filter runs
-       before any pair row crosses another wire, and no probe job is
-       needed (the bucket path is lazy unless ``lineage`` is passed);
-    4. ``strategy="join"`` keeps the round-3 self-join path: hot
-       sub-cap buckets (> cap/4) go through the salted self-join
-       (:func:`acxspark.operators.lsh.salted_self_join_pairs` — output
-       proven identical to the plain join), cold buckets join plain,
-       and surviving id pairs re-join the slim (id, simhash) frame for
-       exact Hamming verification. Its pair-generation shuffle carries
-       only (band_key, id) longs. NOT fully lazy when ``salted=True``:
-       it probes ``hot_sizes.limit(1).count()`` at call time to decide
-       whether the salted arm is worth planning.
+       ``lineage`` (a :class:`acxspark.metrics.Lineage`) to record a
+       ``simhash_band_rows`` counter (``total`` / ``dropped_by_cap``)
+       so the drop volume is observable, not assumed (one eager count
+       job at call time; the pairs are the same either way);
+    3. the capped buckets are grouped by key, the (id, fingerprint)
+       structs collected (≤ cap × 16 B per buffer — the sampled
+       catastrophic-bucket pre-drop runs FIRST, the exact cap right
+       after the aggregation), and pairs + exact Hamming emitted
+       map-side with a double explode — one shuffle total, and the
+       popcount filter runs before any pair row crosses another wire.
     """
-    if strategy not in ("bucket", "join"):
-        raise ValueError(f"unknown pair strategy {strategy!r}")
-    from pyspark.sql.types import StringType
-
     # string ids hash to 8-byte longs for the bucket shuffle and join
     # back at the end — same bytes-on-the-wire rationale and collision
     # analysis as lsh.candidate_pairs (the collision failure mode here
     # additionally requires the colliding pair to share a chunk bucket)
-    hash_ids = strategy == "bucket" and isinstance(
-        df.schema[id_col].dataType, StringType)
+    hash_ids = isinstance(df.schema[id_col].dataType, StringType)
     if hash_ids:
         key_col = "_acx_hid"
-        df_keyed_src = df.withColumn(key_col, F.xxhash64(F.col(id_col)))
+        src = df.withColumn(key_col, F.xxhash64(F.col(id_col)))
     else:
-        key_col, df_keyed_src = id_col, df
-    from acxspark.operators.lsh import salted_self_join_pairs, track_cache
-
-    sims = df.select(F.col(id_col), F.col(sim_col))
-    # the fingerprint (8 bytes) rides the self-join rows: carrying it
-    # costs less than the two id-join passes a rejoin would take, and
-    # lets the common no-hot-bucket case run as ONE equi-join
+        key_col, src = id_col, df
+    # the fingerprint (8 bytes) rides the bucket rows, so the exact
+    # Hamming check needs no rejoin against the signature frame
     keyed = (
-        df_keyed_src.select(
+        src.select(
             F.col(key_col), F.col(sim_col),
             F.explode(chunk_keys(F.col(sim_col), cfg)).alias("c"))
         .select(key_col, sim_col,
                 F.xxhash64(F.col("c.chunk_idx"), F.col("c.chunk_val")).alias("band_key"))
     ).persist()
     track_cache(keyed, caches)
-    if strategy == "bucket" and lineage is None:
-        # single full-volume shuffle, like lsh.candidate_pairs: the
-        # sampled catastrophic-bucket pre-drop replaces the exact
-        # pre-count (which is itself a full-volume shuffle when most
-        # bucket keys are distinct) and the exact cap is enforced
-        # post-agg below — identical output, half the shuffled bytes.
-        # The exact sizes agg is kept when a ``lineage`` counter is
-        # requested (it needs the true per-bucket drop volume).
-        from acxspark.operators.lsh import huge_band_keys, join_back_ids
-
-        kc = keyed.join(
-            F.broadcast(huge_band_keys(keyed, cfg.max_chunk_bucket)),
-            "band_key", "left_anti",
-        )
-        n_ms = F.size(F.col("ms"))
-        grouped = (
-            kc.groupBy("band_key")
-            .agg(F.collect_list(
-                F.struct(F.col(key_col).alias("id"),
-                         F.col(sim_col).alias("sim"))).alias("ms"))
-            .filter((n_ms >= 2) & (n_ms <= cfg.max_chunk_bucket))
-        )
-        ham_b = hamming_distance(F.col("a.sim"), F.col("b.sim"))
-        pairs = (
-            grouped.select(F.col("ms"), F.explode("ms").alias("a"))
-            .select(F.col("a"), F.explode("ms").alias("b"))
-            .filter(F.col("a.id") < F.col("b.id"))
-            .filter(ham_b <= cfg.simhash_max_hamming)
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                    ham_b.alias("hamming"))
-            .distinct()
-        )
-        if hash_ids:
-            pairs = join_back_ids(pairs, df, id_col, extra_cols=("hamming",))
-        return pairs
-    # persisted (round 4): sizes feeds up to four independent
-    # consumers (lineage counter, cap anti-join broadcast, hot probe,
-    # hot-keys broadcast) — each would re-run the groupBy over every
-    # cached chunk row otherwise. The table is tiny (one row per
-    # distinct bucket key).
-    sizes = track_cache(
-        keyed.groupBy("band_key").agg(F.count("*").alias("band_n")).persist(),
-        caches,
-    )
     if lineage is not None:
-        # eager scalar counter over the tiny per-bucket agg (keyed is
-        # persisted; this also warms the cache the probes below read):
-        # rows the hot-bucket cap silently drops — the observable
-        # recall-loss signal the cap tradeoff demands. Not an
-        # Observation: keyed/kc feed multiple plan branches, where a
-        # CollectMetrics node would double-count or collide.
-        row = sizes.agg(
-            F.coalesce(F.sum("band_n"), F.lit(0)).alias("total"),
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("band_n") > cfg.max_chunk_bucket, F.col("band_n")
-                    )
-                ),
-                F.lit(0),
-            ).alias("dropped"),
-        ).collect()[0]
+        # eager scalar counter over the per-bucket sizes (keyed is
+        # persisted; this also warms the cache the pair generation
+        # reads): rows the hot-bucket cap silently drops — the
+        # observable recall-loss signal the cap tradeoff demands. Not
+        # an Observation: keyed feeds two plan branches (pre-drop
+        # sample + aggregation), where a CollectMetrics node would
+        # double-count or collide.
+        row = (
+            keyed.groupBy("band_key").agg(F.count("*").alias("band_n"))
+            .agg(
+                F.coalesce(F.sum("band_n"), F.lit(0)).alias("total"),
+                F.coalesce(
+                    F.sum(F.when(F.col("band_n") > cfg.max_chunk_bucket,
+                                 F.col("band_n"))),
+                    F.lit(0),
+                ).alias("dropped"),
+            )
+            .collect()[0]
+        )
         lineage.record(
             "simhash_band_rows",
             total=int(row["total"]),
             dropped_by_cap=int(row["dropped"]),
         )
+    # single full-volume shuffle, like lsh.candidate_pairs: the sampled
+    # catastrophic-bucket pre-drop replaces an exact pre-count (itself a
+    # full-volume shuffle when most bucket keys are distinct) and the
+    # exact cap is enforced post-agg below — identical output, half
+    # the shuffled bytes.
     kc = keyed.join(
-        F.broadcast(sizes.filter(F.col("band_n") > cfg.max_chunk_bucket)),
+        F.broadcast(huge_band_keys(keyed, cfg.max_chunk_bucket)),
         "band_key", "left_anti",
     )
-    if strategy == "bucket":
-        # bucket strategy WITH lineage: exact sizes already dropped the
-        # over-cap buckets above, so no post-agg cap filter is needed
-        from acxspark.operators.lsh import join_back_ids
-
-        grouped = (
-            kc.groupBy("band_key")
-            .agg(F.collect_list(
-                F.struct(F.col(key_col).alias("id"),
-                         F.col(sim_col).alias("sim"))).alias("ms"))
-            .filter(F.size("ms") >= 2)
-        )
-        ham_b = hamming_distance(F.col("a.sim"), F.col("b.sim"))
-        pairs = (
-            grouped.select(F.col("ms"), F.explode("ms").alias("a"))
-            .select(F.col("a"), F.explode("ms").alias("b"))
-            .filter(F.col("a.id") < F.col("b.id"))
-            .filter(ham_b <= cfg.simhash_max_hamming)
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                    ham_b.alias("hamming"))
-            .distinct()
-        )
-        if hash_ids:
-            pairs = join_back_ids(pairs, df, id_col, extra_cols=("hamming",))
-        return pairs
-    ham = hamming_distance(F.col("sim_a"), F.col("sim_b"))
-
-    hot_threshold = max(cfg.max_chunk_bucket // 4, 2 * cfg.band_salt_buckets)
-    hot_sizes = sizes.filter(
-        (F.col("band_n") > hot_threshold)
-        & (F.col("band_n") <= cfg.max_chunk_bucket)
+    n_ms = F.size(F.col("ms"))
+    grouped = (
+        kc.groupBy("band_key")
+        .agg(F.collect_list(
+            F.struct(F.col(key_col).alias("id"),
+                     F.col(sim_col).alias("sim"))).alias("ms"))
+        .filter((n_ms >= 2) & (n_ms <= cfg.max_chunk_bucket))
     )
-    # ADAPTIVE engagement: the salted arm (split + replicate + rejoin)
-    # costs real plan machinery even when empty, so probe whether any
-    # hot bucket exists first — one tiny agg over the cached keyed
-    # rows (this also warms the cache the cap anti-join reads).
-    use_salted = (
-        salted
-        and cfg.band_salt_buckets > 1
-        and hot_sizes.limit(1).count() > 0
-    )
-
-    if not use_salted:
-        a = kc.select("band_key", F.col(id_col).alias("id_a"),
-                      F.col(sim_col).alias("sim_a"))
-        b = kc.select("band_key", F.col(id_col).alias("id_b"),
-                      F.col(sim_col).alias("sim_b"))
-        return (
-            a.join(b, "band_key")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .filter(ham <= cfg.simhash_max_hamming)
-            .select("id_a", "id_b", ham.alias("hamming"))
-            .distinct()
-        )
-
-    from acxspark.operators.lsh import plain_pairs
-
-    hot_keys = F.broadcast(hot_sizes.select("band_key"))
-    slim = kc.select("band_key", id_col)
-    hot = slim.join(hot_keys, "band_key", "left_semi")
-    cold = slim.join(hot_keys, "band_key", "left_anti")
-    cand = plain_pairs(cold, id_col).unionByName(
-        salted_self_join_pairs(hot, id_col, cfg.band_salt_buckets)
-    ).distinct()
-    a = sims.select(F.col(id_col).alias("id_a"), F.col(sim_col).alias("sim_a"))
-    b = sims.select(F.col(id_col).alias("id_b"), F.col(sim_col).alias("sim_b"))
-    return (
-        cand.join(a, "id_a").join(b, "id_b")
-        .filter(ham <= cfg.simhash_max_hamming)
-        .select("id_a", "id_b", ham.alias("hamming"))
+    ham_b = hamming_distance(F.col("a.sim"), F.col("b.sim"))
+    pairs = (
+        grouped.select(F.col("ms"), F.explode("ms").alias("a"))
+        .select(F.col("a"), F.explode("ms").alias("b"))
+        .filter(F.col("a.id") < F.col("b.id"))
+        .filter(ham_b <= cfg.simhash_max_hamming)
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
+                ham_b.alias("hamming"))
         .distinct()
     )
+    if hash_ids:
+        pairs = join_back_ids(pairs, df, id_col, extra_cols=("hamming",))
+    return pairs

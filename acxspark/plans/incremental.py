@@ -11,7 +11,7 @@ text_sha) and `clusters` snapshots to the catalog
     → minhash tier vs old:   band-key equi-join new×old (never
                              old×old — the quadratic term the full
                              run already paid stays paid)
-    → minhash tier within:   the normal capped/salted self-join on
+    → minhash tier within:   the normal capped band-bucket pairs on
                              the new rows only
     → exact-Jaccard verify at τ (same shingle arrays both sides)
     → clustering with a FROZEN base: old cluster labels never change
@@ -331,7 +331,7 @@ def run_incremental(new_web: DataFrame, catalog,
     )
     near_cross = _cross_jaccard_edges(cross_pairs, new_sigs, old_sigs, cfg)
 
-    # ---- minhash tier within the increment (normal self-join path) -
+    # ---- minhash tier within the increment (normal bucket path) ----
     # materialised: exact_jaccard_edges reads its pairs three times
     intra_cands = _materialise(
         candidate_pairs(new_sigs, "url", "minhash", cfg, caches=caches),

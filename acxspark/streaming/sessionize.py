@@ -16,8 +16,10 @@ data — so state rides GroupState per user_id:
 Allowed-late events (inside the watermark, behind the open session):
 in-gap ones merge and pull ``session_start`` back, matching the batch
 twin; events more than ``gap`` before the open session sessionize as
-their own chain and close at batch end. The one online approximation
-vs :func:`sessionize_batch`: straggler chains split across SEPARATE
+their own chain, which merges into the session if a later in-gap
+event of the same batch pulls its start within ``gap`` of the chain,
+and otherwise closes at batch end. The one online approximation vs
+:func:`sessionize_batch`: straggler chains split across SEPARATE
 micro-batches close separately (append-mode output cannot retract).
 
 Scale notes: state is shuffled by user_id (uniform key), constant per
@@ -83,12 +85,14 @@ def make_sessionizer(gap_seconds: float):
             # the gap belong to an EARLIER session — merging them (the
             # old behavior) produced sessions the batch oracle splits,
             # and even in-gap late events never pulled session_start
-            # back. Stragglers sessionize among themselves (events are
-            # sorted, and every straggler ends > gap before s0, so the
-            # chain can never bridge into the open session) and close
-            # at batch end. Residual online approximation, documented:
-            # a straggler chain cannot merge with stragglers arriving
-            # in LATER micro-batches.
+            # back. Stragglers sessionize among themselves: events are
+            # sorted, so every straggler precedes every in-gap event,
+            # and only the LAST chain can still bridge — when an
+            # in-gap event pulls s0 back within the gap of its end, the
+            # chain merges into the session (batch-oracle parity);
+            # otherwise it closes at batch end. Residual online
+            # approximation, documented: a straggler chain cannot
+            # merge with stragglers arriving in LATER micro-batches.
             st = None  # (st0, st1, stn, stv)
             for t, v in events:
                 if s0 is None:
@@ -111,6 +115,9 @@ def make_sessionizer(gap_seconds: float):
                     s1 = max(s1, t)
                     n += 1
                     sv += float(v)
+                    if st is not None and s0 - st[1] <= gap_seconds:
+                        s0, n, sv = st[0], n + st[2], sv + st[3]
+                        st = None
             if st is not None:
                 closed.append(st)
             if s0 is not None:

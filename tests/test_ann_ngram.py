@@ -163,32 +163,45 @@ def hot_vectors(spark):
     return df.cache(), bg_truth
 
 
-def test_lsh_salted_equals_plain(hot_vectors):
-    """The adaptive salted self-join arm of the hyperplane-LSH path
-    must produce EXACTLY the plain join's output (same contract its
-    MinHash/SimHash siblings are tested under)."""
+def test_lsh_bucket_pairs_match_oracle(hot_vectors):
+    """The hyperplane-LSH bucket path emits EXACTLY the brute-force
+    pairs over its collected (table, bucket) keys — pairs sharing a
+    key whose bucket has 2..max_bucket members — under a cap that
+    keeps the 24-row hot bucket and one that drops it (same contract
+    as its MinHash/SimHash siblings); the cosine re-check then keeps
+    exactly the oracle pairs at or above the threshold."""
+    import oracles
+    import pyspark.sql.functions as F
+
     df, _ = hot_vectors
-    kw = dict(threshold=0.9, n_planes=6, n_tables=4, dim=64, seed=3,
-              max_bucket=200, salt_buckets=4)
-    plain = {(r["id_a"], r["id_b"], r["sim"])
-             for r in ann.lsh_near_dup_pairs(df, salted=False,
-                                             strategy="join", **kw).collect()}
-    bucket = {(r["id_a"], r["id_b"], r["sim"])
-              for r in ann.lsh_near_dup_pairs(df, strategy="bucket",
-                                              **kw).collect()}
-    assert bucket == plain  # groupBy-bucket path: identical output
-    # hot cluster (24 rows) > hot_threshold max(200//4, 8) = 50? no —
-    # shrink the cap so the hot bucket crosses the salting threshold
-    kw["max_bucket"] = 60  # hot_threshold = max(15, 8) = 15 < 24
-    salted = {(r["id_a"], r["id_b"], r["sim"])
-              for r in ann.lsh_near_dup_pairs(df, salted=True,
-                                              strategy="join", **kw).collect()}
-    plain_small_cap = {(r["id_a"], r["id_b"], r["sim"])
-                       for r in ann.lsh_near_dup_pairs(df, salted=False,
-                                                       strategy="join", **kw).collect()}
-    assert salted == plain_small_cap  # salting never changes output
-    assert salted == plain  # cap=60 never engages (hot bucket is 24)
-    assert len(salted) > 0
+    kw = dict(n_planes=6, n_tables=4, dim=64, seed=3)
+    members = []
+    for t in range(kw["n_tables"]):
+        planes = ann._hyperplanes(kw["dim"], kw["n_planes"], kw["seed"] + t)
+        members += [
+            (r["vec_id"], (t, r["b"]))
+            for r in df.select(
+                "vec_id",
+                ann.hyperplane_bucket(F.col("embedding"), planes).alias("b"),
+            ).collect()
+        ]
+    vecs = {r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64)
+            for r in df.collect()}
+
+    def cos(a, b):
+        va, vb = vecs[a], vecs[b]
+        return float(va @ vb / (np.linalg.norm(va) * np.linalg.norm(vb)))
+
+    for cap in (200, 20):
+        want = oracles.bucket_pairs(members, cap)
+        every = {(r["id_a"], r["id_b"]) for r in ann.lsh_near_dup_pairs(
+            df, threshold=-1.0, max_bucket=cap, **kw).collect()}
+        assert every == want and len(want) > 0
+        close = {(r["id_a"], r["id_b"]) for r in ann.lsh_near_dup_pairs(
+            df, threshold=0.9, max_bucket=cap, **kw).collect()}
+        assert close == {p for p in want if round(cos(*p), 4) >= 0.9}
+    # the hot cluster's 24·23/2 pairs ride the 200 cap, not the 20 one
+    assert len(oracles.bucket_pairs(members, 200)) >= 24 * 23 // 2
 
 
 def test_lsh_hot_bucket_cap_engages(hot_vectors):

@@ -403,6 +403,38 @@ def test_torn_manifest_reads_as_uncommitted_and_recovers(spark, tmp_path):
     assert cat.read(spark, "t").count() == 7
 
 
+def test_manifest_read_error_propagates_instead_of_restarting(
+        spark, tmp_path, monkeypatch):
+    """Only an undecodable manifest means 'uncommitted'. A transient
+    read fault (EIO) must raise from has() and write() — swallowing it
+    let write() restart the table at v0 and orphan its history."""
+    import builtins
+    import errno
+
+    import pytest
+
+    import acxspark.catalog as C
+
+    cat = ParquetSnapshotCatalog(tmp_path / "cat")
+    cat.write("t", spark.range(3))
+    cat.write("t", spark.range(4))
+
+    def eio_on_manifest(path, *a, **kw):
+        if str(path).endswith("MANIFEST.json"):
+            raise OSError(errno.EIO, "Input/output error", str(path))
+        return builtins.open(path, *a, **kw)
+
+    monkeypatch.setattr(C, "open", eio_on_manifest, raising=False)
+    with pytest.raises(OSError) as e:
+        cat.has("t")
+    assert e.value.errno == errno.EIO
+    with pytest.raises(OSError):
+        cat.write("t", spark.range(9))
+    monkeypatch.undo()
+    assert cat.latest_meta("t")["version"] == 1
+    assert cat.read(spark, "t").count() == 4
+
+
 def test_reserved_meta_keys_rejected(spark, tmp_path):
     """Caller meta may not shadow the catalog's own manifest fields —
     a meta {'version': ...} would corrupt the next write's version

@@ -218,3 +218,22 @@ def test_backup_path_containing_data_segment(spark, tmp_path):
     bak = sign_backup(spark, cat, "t", root, key=b"test-key")
     v = verify_backup(spark, bak, key=b"test-key")
     assert v["ok"], v
+
+
+def test_backup_through_symlinked_directory(spark, tmp_path):
+    """A backup dir reached through a symlink (/tmp -> /private/tmp on
+    macOS, symlinked data roots) must sign and verify: file paths that
+    keep the unresolved prefix relativize against the unresolved base."""
+    from acxspark.catalog import ParquetSnapshotCatalog
+    from acxspark.functions.backup import sign_backup, verify_backup
+
+    real = tmp_path / "real"
+    real.mkdir()
+    link = tmp_path / "link"
+    link.symlink_to(real, target_is_directory=True)
+    cat = ParquetSnapshotCatalog(tmp_path / "cat")
+    cat.write("t", spark.range(5))
+    bak = sign_backup(spark, cat, "t", link / "backups", key=b"test-key")
+    v = verify_backup(spark, bak, key=b"test-key")
+    assert v["ok"], v
+

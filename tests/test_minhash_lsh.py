@@ -1,24 +1,35 @@
 """MinHash/LSH/SimHash unit behavior: signature determinism, Jaccard
-estimation accuracy, band-key candidate generation, Hamming probe."""
+estimation accuracy, band-key candidate generation, Hamming probe —
+and the fused kernel and bucket pair generators pinned bit-exact
+against the pure-Python oracles in tests/oracles.py."""
 
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 
+import oracles
 from acxspark.config import DedupConfig
 from acxspark.operators.lsh import band_keys, candidate_pairs
-from acxspark.operators.minhash import minhash_batch, with_minhash
-from acxspark.operators.simhash import simhash_batch, simhash_candidate_pairs, with_simhash
+from acxspark.operators.signatures import (
+    _flatten, _perms, _window_poly, compute_signatures, with_signatures,
+)
+from acxspark.operators.simhash import simhash_candidate_pairs
 
 CFG = DedupConfig()
 
 
+def _sign(rows, num_perm=128, seed=42):
+    """Signatures of rows that are already shingle hashes: with k=1
+    every token hash is its own shingle."""
+    return compute_signatures(pd.Series(rows), 1, num_perm, seed)
+
+
 def test_minhash_deterministic():
-    sh = pd.Series([[1, 2, 3, 4], [1, 2, 3, 4], [9, 10, 11]])
-    a = minhash_batch(sh, 128, 42)
-    b = minhash_batch(sh, 128, 42)
-    assert a[0] == b[0] == a[1]
-    assert a[0] != a[2]
+    sh = [[1, 2, 3, 4], [1, 2, 3, 4], [9, 10, 11]]
+    a = _sign(sh)["minhash"]
+    b = _sign(sh)["minhash"]
+    assert list(a[0]) == list(b[0]) == list(a[1])
+    assert list(a[0]) != list(a[2])
 
 
 def test_minhash_estimates_jaccard():
@@ -27,7 +38,7 @@ def test_minhash_estimates_jaccard():
     # true Jaccard 0.8: |A∩B|=200 shared of 250 union
     extra = list(rng.integers(0, 1 << 60, size=50))
     a_set, b_set = base, base + extra
-    sigs = minhash_batch(pd.Series([a_set, b_set]), 256, 42)
+    sigs = _sign([a_set, b_set], num_perm=256)["minhash"]
     est = np.mean(np.array(sigs[0]) == np.array(sigs[1]))
     true_j = 200 / 250
     assert abs(est - true_j) < 0.1
@@ -37,7 +48,7 @@ def test_simhash_close_for_near_texts():
     rng = np.random.default_rng(1)
     base = list(rng.integers(0, 1 << 60, size=300))
     perturbed = base[:-5] + list(rng.integers(0, 1 << 60, size=5))
-    fps = simhash_batch(pd.Series([base, perturbed]))
+    fps = _sign([base, perturbed])["simhash"]
     ham = bin((int(fps[0]) ^ int(fps[1])) & ((1 << 64) - 1)).count("1")
     assert ham <= 10
 
@@ -48,14 +59,14 @@ def test_lsh_finds_identical_and_skips_disjoint(spark):
         ("b", "the quick brown fox jumps over the lazy dog again and again"),
         ("c", "completely different words about mountains rivers and stars xyz"),
     ]
-    df = with_minhash(spark.createDataFrame(rows, ["url", "text"]), cfg=CFG)
+    df = with_signatures(spark.createDataFrame(rows, ["url", "text"]), cfg=CFG)
     pairs = {(r["id_a"], r["id_b"]) for r in candidate_pairs(df, "url", cfg=CFG).collect()}
     assert ("a", "b") in pairs
     assert ("a", "c") not in pairs and ("b", "c") not in pairs
 
 
 def test_band_key_count(spark):
-    df = with_minhash(spark.createDataFrame([("a", "x y z w v u t s")], ["url", "text"]), cfg=CFG)
+    df = with_signatures(spark.createDataFrame([("a", "x y z w v u t s")], ["url", "text"]), cfg=CFG)
     assert band_keys(df, "url", cfg=CFG).count() == CFG.lsh_bands
 
 
@@ -63,7 +74,7 @@ def test_hot_band_cap(spark):
     # 30 identical docs: every band bucket has 30 members; cap at 10 ⇒ 0 pairs
     cfg = DedupConfig(max_band_size=10)
     rows = [(f"u{i:02d}", "same words everywhere forever and ever amen") for i in range(30)]
-    df = with_minhash(spark.createDataFrame(rows, ["url", "text"]), cfg=cfg)
+    df = with_signatures(spark.createDataFrame(rows, ["url", "text"]), cfg=cfg)
     assert candidate_pairs(df, "url", cfg=cfg).count() == 0
 
 
@@ -75,32 +86,63 @@ def test_simhash_candidates(spark):
         ("b", " ".join(near)),
         ("c", " ".join(f"other{i}" for i in range(240))),
     ]
-    df = with_simhash(spark.createDataFrame(rows, ["url", "text"]))
+    df = with_signatures(spark.createDataFrame(rows, ["url", "text"]))
     pairs = {(r["id_a"], r["id_b"]) for r in simhash_candidate_pairs(df, "url").collect()}
     assert ("a", "b") in pairs
     assert ("a", "c") not in pairs
 
 
-def test_simhash_salted_equals_plain_on_hot_bucket(spark):
-    """The SimHash tier's salted self-join must emit EXACTLY the plain
-    join's pairs on a corpus with a hot chunk bucket (30 identical
-    fingerprints ⇒ every chunk bucket has 30 members, above the
-    hot threshold, below the cap)."""
+def _hot_chunk_docs(spark):
+    """30 identical docs (one fingerprint ⇒ every chunk bucket holds
+    30 members) plus 10 unique ones."""
     base = " ".join(f"tok{i}" for i in range(100))
     rows = [(f"u{i:02d}", base if i < 30 else f"unique {i} " * 40)
             for i in range(40)]
-    df = with_simhash(spark.createDataFrame(rows, ["url", "text"]))
-    cfg = DedupConfig(max_chunk_bucket=100, band_salt_buckets=4)
-    plain = {(r["id_a"], r["id_b"], r["hamming"]) for r in
-             simhash_candidate_pairs(df, "url", cfg=cfg, salted=False,
-                                     strategy="join").collect()}
-    salted = {(r["id_a"], r["id_b"], r["hamming"]) for r in
-              simhash_candidate_pairs(df, "url", cfg=cfg, salted=True,
-                                      strategy="join").collect()}
-    bucket = {(r["id_a"], r["id_b"], r["hamming"]) for r in
-              simhash_candidate_pairs(df, "url", cfg=cfg,
-                                      strategy="bucket").collect()}
-    assert plain == salted == bucket and len(plain) >= 30 * 29 // 2
+    return with_signatures(spark.createDataFrame(rows, ["url", "text"]))
+
+
+def _simhash_oracle(sims, cfg):
+    """Brute force over the chunk keys: pairs sharing a chunk whose
+    bucket has 2..cap members, kept when hamming <= max."""
+    t = cfg.simhash_tables
+    width = 64 // t
+    mask = (1 << width) - 1
+    members = [(i, (c, ((h & oracles.M64) >> (c * width)) & mask))
+               for i, h in sims.items() for c in range(t)]
+    out = set()
+    for a, b in oracles.bucket_pairs(members, cfg.max_chunk_bucket):
+        ham = bin((sims[a] ^ sims[b]) & oracles.M64).count("1")
+        if ham <= cfg.simhash_max_hamming:
+            out.add((a, b, ham))
+    return out
+
+
+def test_simhash_bucket_pairs_match_oracle_on_hot_bucket(spark):
+    """The SimHash bucket path emits EXACTLY the brute-force pairs over
+    its chunk keys, on a corpus with a hot chunk bucket, with string
+    ids (hashed to longs for the shuffle) and long ids, under a cap
+    that keeps the hot bucket and one that drops it — and the same
+    pairs with and without the ``lineage`` counter."""
+    from acxspark.metrics import Lineage
+
+    docs = _hot_chunk_docs(spark)
+    for id_type, cap in [(t, c) for t in ("string", "long") for c in (100, 20)]:
+        df = docs.select(
+            F.expr("substring(url, 2)").cast(id_type).alias("url"), "simhash")
+        sims = {r["url"]: r["simhash"] for r in df.collect()}
+        cfg = DedupConfig(max_chunk_bucket=cap)
+        want = _simhash_oracle(sims, cfg)
+        got = {(r["id_a"], r["id_b"], r["hamming"]) for r in
+               simhash_candidate_pairs(df, "url", cfg=cfg).collect()}
+        lin = Lineage()
+        got_lin = {(r["id_a"], r["id_b"], r["hamming"]) for r in
+                   simhash_candidate_pairs(df, "url", cfg=cfg,
+                                           lineage=lin).collect()}
+        assert got == want == got_lin
+        # the 30 identical fingerprints: kept under cap 100, dropped at 20
+        hot = sum(1 for a, b, _ in want if sims[a] == sims[b])
+        assert hot == (30 * 29 // 2 if cap == 100 else 0)
+        assert [r["stage"] for r in lin.flush()] == ["simhash_band_rows"]
 
 
 def test_simhash_hot_bucket_cap(spark):
@@ -109,7 +151,7 @@ def test_simhash_hot_bucket_cap(spark):
     30 identical docs, cap 10 ⇒ every chunk bucket capped ⇒ 0 pairs."""
     rows = [(f"u{i:02d}", "same words everywhere forever and ever amen")
             for i in range(30)]
-    df = with_simhash(spark.createDataFrame(rows, ["url", "text"]))
+    df = with_signatures(spark.createDataFrame(rows, ["url", "text"]))
     cfg = DedupConfig(max_chunk_bucket=10)
     assert simhash_candidate_pairs(df, "url", cfg=cfg).count() == 0
     # and with the cap above the bucket size, all pairs come back
@@ -117,55 +159,49 @@ def test_simhash_hot_bucket_cap(spark):
     assert simhash_candidate_pairs(df, "url", cfg=cfg2).count() == 30 * 29 // 2
 
 
-def test_pair_strategies_identical(spark):
-    """All three pair-generation paths — plain self-join, salted
-    self-join (north_rule: salted band-key repartitioning), and the
-    round-4 groupBy-bucket default — must produce exactly the same
-    candidate set."""
+def test_lsh_bucket_pairs_match_oracle(spark):
+    """candidate_pairs emits EXACTLY the brute-force pairs over the
+    collected band keys (pairs sharing a band whose bucket has 2..cap
+    members), with string ids (hashed to longs for the shuffle) and
+    long ids, under a cap that keeps the 40-member hot bands and one
+    that drops them."""
     rows = []
     base = "the quick brown fox jumps over the lazy dog again and again extra words here"
     for i in range(40):
-        rows.append((f"d{i:03d}", base if i % 4 == 0 else base + f" tail {i} {i*3}"))
-    df = spark.createDataFrame(rows, "url string, text string")
-    cfg = DedupConfig(band_salt_buckets=4, max_band_size=40)  # hot_threshold=10 → the identical-doc bands go through the salted tier
-    sigs = with_minhash(df, "text", cfg, keep_shingles=False)
-    plain = {(r["id_a"], r["id_b"]) for r in
-             candidate_pairs(sigs, "url", "minhash", cfg, salted=False,
-                             strategy="join").collect()}
-    salted = {(r["id_a"], r["id_b"]) for r in
-              candidate_pairs(sigs, "url", "minhash", cfg, salted=True,
-                              strategy="join").collect()}
-    bucket = {(r["id_a"], r["id_b"]) for r in
-              candidate_pairs(sigs, "url", "minhash", cfg,
-                              strategy="bucket").collect()}
-    nobk = {(r["id_a"], r["id_b"]) for r in
-            candidate_pairs(sigs, "url", "minhash", cfg,
-                            strategy="bucket", persist_bands=False).collect()}
-    assert plain == salted == bucket == nobk and len(plain) > 0
+        rows.append((f"{i:03d}", base if i % 4 == 0 else base + f" tail {i} {i*3}"))
+    texts = spark.createDataFrame(rows, "url string, text string")
+    for id_type in ("string", "long"):
+        df = texts.select(F.col("url").cast(id_type).alias("url"), "text")
+        sigs = with_signatures(df, "text", CFG)
+        keys = [(r["url"], r["band_key"])
+                for r in band_keys(sigs, "url", cfg=CFG).collect()]
+        for cap in (40, 20):
+            cfg = DedupConfig(max_band_size=cap)
+            want = oracles.bucket_pairs(keys, cap)
+            got = {(r["id_a"], r["id_b"]) for r in
+                   candidate_pairs(sigs, "url", "minhash", cfg).collect()}
+            assert got == want and len(want) > 0
 
 
 def test_bucket_pairs_respect_cap(spark):
-    """The bucket strategy drops over-cap bands BEFORE collect_list
+    """Pair generation drops over-cap bands around collect_list
     (the memory guard): 30 identical docs with cap 10 ⇒ every band
     capped ⇒ 0 pairs; cap 100 ⇒ the full 30·29/2."""
     rows = [(f"u{i:02d}", "same words everywhere forever and ever amen again")
             for i in range(30)]
     df = spark.createDataFrame(rows, "url string, text string")
-    sigs = with_minhash(df, "text", DedupConfig(), keep_shingles=False)
+    sigs = with_signatures(df, "text", DedupConfig())
     low = DedupConfig(max_band_size=10)
-    assert candidate_pairs(sigs, "url", "minhash", low, strategy="bucket").count() == 0
+    assert candidate_pairs(sigs, "url", "minhash", low).count() == 0
     high = DedupConfig(max_band_size=100)
-    assert (candidate_pairs(sigs, "url", "minhash", high, strategy="bucket").count()
+    assert (candidate_pairs(sigs, "url", "minhash", high).count()
             == 30 * 29 // 2)
 
 
 def test_simhash_cap_drop_counter_observable(spark):
     """The hot-bucket cap's recall loss is a recorded lineage counter
     (ADVICE r2: make drops observable, not assumed)."""
-    from acxspark.config import DedupConfig
     from acxspark.metrics import Lineage
-    from acxspark.operators.signatures import with_signatures
-    from acxspark.operators.simhash import simhash_candidate_pairs
 
     cfg = DedupConfig(max_chunk_bucket=3)
     docs = spark.createDataFrame(
@@ -183,102 +219,71 @@ def test_simhash_cap_drop_counter_observable(spark):
     assert r["total"] > r["dropped_by_cap"]
 
 
-# ---- OPH mode (minhash_mode='oph') kernel pinning -------------------
+# ---- fused kernel vs the per-row oracles (tests/oracles.py) --------
 
 
-def _oph_reference(rows, p, seed):
-    """Per-row pure-python twin of signatures._minhash_oph_flat:
-    multiply-shift binning, scatter-min, nearest-LEFT circular
-    rotation densification with the distance-keyed mix."""
-    from acxspark.operators import signatures as S
-
-    M = (1 << 64) - 1
-    A, C, K = int(S._OPH_A), int(S._OPH_C), int(S._DENSE_K)
-    out = []
-    for hs in rows:
-        slots = [None] * p
-        for s in hs:
-            h = ((int(s) + seed) * A + C) & M
-            h ^= h >> 31
-            b = ((h >> 32) * p) >> 32
-            if slots[b] is None or h < slots[b]:
-                slots[b] = h
-        if all(v is None for v in slots):
-            out.append([np.int64(np.uint64((1 << 63) - 1))] * p)
-            continue
-        dense = []
-        for j in range(p):
-            if slots[j] is not None:
-                dense.append(slots[j])
-                continue
-            d = 1
-            while slots[(j - d) % p] is None:
-                d += 1
-            dense.append((slots[(j - d) % p] + d * K) & M)
-        out.append([np.int64(np.uint64(v)) for v in dense])
-    return np.array(out, dtype=np.int64)
+def _token_rows():
+    rng = np.random.default_rng(5)
+    rows = [rng.integers(-(1 << 63), (1 << 63) - 1, size=n, dtype=np.int64)
+            for n in (0, 1, 2, 3, 4, 9, 40, 300)]
+    rows.insert(3, None)
+    rows.append(np.array([7, 7, 7, 7, 7, 7], dtype=np.int64))  # repeated grams
+    return rows
 
 
-def test_oph_kernel_matches_per_row_reference():
-    from acxspark.operators.signatures import _minhash_oph_flat
-
-    rng = np.random.default_rng(7)
-    for p in (16, 100, 128):     # incl. a NON-power-of-two bin count
-        rows = [
-            rng.integers(0, 1 << 63, size=n, dtype=np.int64).astype(np.uint64)
-            for n in (0, 1, 3, 7, 40, 500)  # sparse docs exercise
-        ]                                    # the densification path
-        flat = np.concatenate([r for r in rows if len(r)]) \
-            if any(len(r) for r in rows) else np.array([], dtype=np.uint64)
-        n_sh = np.array([len(r) for r in rows], dtype=np.int64)
-        got = _minhash_oph_flat(flat, n_sh, p, seed=42)
-        want = _oph_reference(rows, p, seed=42)
-        assert np.array_equal(got, want)
-
-
-def test_oph_bins_cover_all_slots_for_non_power_of_two():
-    """Multiply-shift binning must reach EVERY slot (the former
-    top-bits shift starved slots >= 2^floor(log2 p) forever)."""
-    from acxspark.operators.signatures import _minhash_oph_flat
-
-    rng = np.random.default_rng(3)
-    hs = rng.integers(0, 1 << 63, size=20_000, dtype=np.int64).astype(np.uint64)
-    p = 100
-    sig = _minhash_oph_flat(hs, np.array([len(hs)]), p, seed=1)[0]
-    # a dense doc fills every bin directly: no two adjacent slots may
-    # both be densified borrows; cheap proxy — all values distinct and
-    # none equals the empty sentinel
-    assert len(set(sig.tolist())) == p
+def test_window_poly_shingles_match_oracle():
+    """Window-poly shingles, per row, in window order; a row shorter
+    than k gives one shingle over all its tokens, an empty or NULL row
+    none."""
+    rows = _token_rows()
+    for k in (1, 3, 5):
+        shingles, n_sh = _window_poly(*_flatten(pd.Series(rows)), k)
+        got = shingles.tolist()
+        pos = 0
+        for r, n in zip(rows, n_sh):
+            want = oracles.window_poly_shingles(
+                [] if r is None else [int(x) for x in r], k)
+            assert got[pos:pos + n] == want
+            pos += n
+        assert pos == len(got)
+        short = [i for i, r in enumerate(rows)
+                 if r is not None and 0 < len(r) < k]
+        assert all(n_sh[i] == 1 for i in short)
 
 
-def test_oph_slot_agreement_tracks_jaccard():
-    """Per-slot collision probability ≈ Jaccard (the estimator
-    property the broken bin-index densification violated)."""
-    from acxspark.operators.signatures import _minhash_oph_flat
+def test_kperm_minhash_and_simhash_match_oracle():
+    """kperm MinHash = min over DISTINCT shingles of a·x+b mod 2^64
+    with the seed-pinned ``_perms``; SimHash = the byte-MSB bit vote
+    over the shingle MULTISET; an empty row is I64MAX / 0."""
+    rows = _token_rows()
+    k, p, seed = 3, 16, 9
+    a, b = _perms(p, seed)
+    out = compute_signatures(pd.Series(rows), k, p, seed)
+    for r, mh, sh, shl in zip(rows, out["minhash"], out["simhash"],
+                              out["shingles"]):
+        grams = oracles.window_poly_shingles(
+            [] if r is None else [int(x) for x in r], k)
+        assert [oracles.to_i64(g) for g in grams] == list(shl)
+        assert list(mh) == oracles.kperm_minhash(grams, a, b)
+        assert int(sh) == oracles.simhash_bytewise(grams)
+    empty = compute_signatures(pd.Series([[]]), k, p, seed)
+    assert list(empty["minhash"][0]) == [oracles.I64MAX] * p
+    assert int(empty["simhash"][0]) == 0
 
-    rng = np.random.default_rng(11)
-    shared = rng.integers(0, 1 << 63, size=60, dtype=np.int64).astype(np.uint64)
-    only_a = rng.integers(0, 1 << 63, size=30, dtype=np.int64).astype(np.uint64)
-    only_b = rng.integers(0, 1 << 63, size=30, dtype=np.int64).astype(np.uint64)
-    a = np.concatenate([shared, only_a])     # J = 60 / 120 = 0.5
-    b = np.concatenate([shared, only_b])
-    agree = total = 0
-    for seed in range(40):                   # independent sketches
-        flat = np.concatenate([a, b])
-        n_sh = np.array([len(a), len(b)])
-        sig = _minhash_oph_flat(flat, n_sh, 128, seed=seed)
-        agree += int((sig[0] == sig[1]).sum())
-        total += 128
-    assert abs(agree / total - 0.5) < 0.05
 
-
-def test_unknown_minhash_mode_raises():
-    import pytest as _pytest
-
-    from acxspark.operators.signatures import compute_signatures, signature_col
-
-    with _pytest.raises(ValueError, match="minhash_mode"):
-        compute_signatures(pd.Series([[1, 2, 3]]), 3, 8, 1,
-                           minhash_mode="kprem")
-    with _pytest.raises(ValueError, match="minhash_mode"):
-        signature_col(F.lit("x"), DedupConfig(minhash_mode="oph "))
+def test_doc_frequency_cut_removes_grams_before_signing():
+    """``drop`` signs the row as if the dropped grams were never
+    there."""
+    rows = [r for r in _token_rows() if r is not None and len(r) > 5]
+    k, p, seed = 3, 16, 9
+    a, b = _perms(p, seed)
+    grams = [oracles.window_poly_shingles([int(x) for x in r], k)
+             for r in rows]
+    drop = np.sort(np.array([oracles.to_i64(g[0]) for g in grams],
+                            dtype=np.int64))
+    out = compute_signatures(pd.Series(rows), k, p, seed, drop=drop)
+    dropped = {int(x) & oracles.M64 for x in drop}
+    for g, mh, sh in zip(grams, out["minhash"], out["simhash"]):
+        kept = [x for x in g if x not in dropped]
+        assert list(mh) == oracles.kperm_minhash(kept, a, b)
+        assert int(sh) == oracles.simhash_bytewise(kept)

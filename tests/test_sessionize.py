@@ -178,3 +178,32 @@ def test_late_pre_gap_straggler_closes_as_own_session():
     closed = _drive(fn, st, [(6000.0, 1.0), (6500.0, 1.0)])
     assert closed == [(6000.0, 6500.0, 2, 2.0)]
     assert st.get[0] == 10000.0          # open session untouched
+
+
+def test_straggler_chain_bridged_by_in_gap_event_merges():
+    """A straggler chain that a later in-gap event of the same batch
+    pulls within the gap of the open session belongs to that session
+    (the batch oracle sees 7000, 8300, 10000 as one session): state
+    s0=10000, gap=1800, batch [7000, 8300]."""
+    from acxspark.streaming.sessionize import make_sessionizer
+
+    fn = make_sessionizer(1800)
+    st = _FakeState()
+    _drive(fn, st, [(10000.0, 1.0)])
+    assert _drive(fn, st, [(7000.0, 1.0), (8300.0, 1.0)]) == []
+    assert st.get == (7000.0, 10000.0, 3, 3.0)
+    st.hasTimedOut = True
+    assert _drive(fn, st, []) == [(7000.0, 10000.0, 3, 3.0)]
+
+
+def test_bridged_straggler_chain_merges_before_session_closes():
+    """The same bridge when a later event of the batch closes the
+    session: the chain joins the closed session, not its own."""
+    from acxspark.streaming.sessionize import make_sessionizer
+
+    fn = make_sessionizer(1800)
+    st = _FakeState()
+    _drive(fn, st, [(10000.0, 1.0)])
+    closed = _drive(fn, st, [(7000.0, 1.0), (8300.0, 1.0), (20000.0, 1.0)])
+    assert closed == [(7000.0, 10000.0, 3, 3.0)]
+    assert st.get == (20000.0, 20000.0, 1, 1.0)

@@ -6,7 +6,7 @@ buffer, so steady-state allocation is zero) scales from 1 to K
 concurrent processes on this host. This is the hardware ceiling for
 any ~1 op/byte stage (LSH band shuffle); compute-dense stages (kperm
 signatures, ~P ops/byte) can scale past it. Run it in the SAME window
-as a paired-gate capture (tools/paired_gate.py) to decompose a
+as a benchmark capture (perfbench/run.py) to decompose a
 pipeline-efficiency reading into code structure vs shared-bus steal:
 on this shared microVM, external steal consumes DRAM bandwidth and so
 depresses the K-proc aggregate far more than the 1-proc wall —
