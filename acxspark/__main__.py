@@ -109,6 +109,22 @@ def _text_lines(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
+def _write_lines(lines: DataFrame, path: str) -> int:
+    """Write the ``value`` column as text in ``_ord`` order and return
+    the line count from the same pass. The observe node sits ABOVE the
+    sort: below a global sort the range sampler scans the child twice
+    and the metric double-counts."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    (
+        lines.orderBy("_ord").select("value")
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .write.mode("overwrite").text(path)
+    )
+    return int(obs.get["n"])
+
+
 def _emit(obj: dict) -> None:
     print(json.dumps(obj))
 
@@ -135,20 +151,11 @@ def cmd_normalize(args, spark) -> int:
     preserved, only STRING fields are rewritten, and parsed objects
     re-dump sorted-compact like ``J::dump`` (functions/lineops.py —
     field semantics property-tested against the column functions)."""
-    from pyspark.sql import Observation
-
     from acxspark.functions.lineops import normalize_lines
 
     lines = _text_lines(spark, args.input)
-    obs = Observation()
     out = lines.select(normalize_lines(F.col("value")).alias("value"), "_ord")
-    # observe ABOVE the sort: below it the range sampler scans twice
-    (
-        out.orderBy("_ord").select("value")
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .write.mode("overwrite").text(args.out)
-    )
-    _emit({"normalized": int(obs.get["n"]), "out": args.out})
+    _emit({"normalized": _write_lines(out, args.out), "out": args.out})
     return 0
 
 
@@ -175,21 +182,12 @@ def cmd_dedupe(args, spark) -> int:
               F.try_variant_get(var, f"$.{args.key}", "string"))
         .otherwise(F.col("value"))
     )
-    from pyspark.sql import Observation
-
-    # the kept-count rides the write pass; the observe node sits ABOVE
-    # the final sort (below a global sort the range sampler scans the
-    # child twice and the metric double-counts — and first_wins forks
-    # `lines`, so it must also be above the union). the in-count is
-    # its own action but only a bare text scan.
+    # the kept-count rides the write pass, above first_wins' union
+    # (first_wins forks `lines`). the in-count is its own action but
+    # only a bare text scan.
     kept = first_wins(lines.withColumn("_key", key), "_key", "_ord")
-    obs = Observation()
-    (
-        kept.orderBy("_ord").select("value")
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .write.mode("overwrite").text(args.out)
-    )
-    n_in, n_kept = lines.count(), int(obs.get["n"])
+    n_kept = _write_lines(kept, args.out)
+    n_in = lines.count()
     _emit({"kept": n_kept, "dropped": n_in - n_kept, "out": args.out})
     return 0
 
@@ -200,19 +198,11 @@ def cmd_redact(args, spark) -> int:
     are skipped, only STRING email/phone fields are masked
     (functions/lineops.py twins of functions/mask.py's redact-cmd
     variants), objects re-dump sorted-compact like ``J::dump``."""
-    from pyspark.sql import Observation
-
     from acxspark.functions.lineops import redact_lines
 
     lines = _text_lines(spark, args.input).filter(F.col("value") != "")
-    obs = Observation()
     out = lines.select(redact_lines(F.col("value")).alias("value"), "_ord")
-    (
-        out.orderBy("_ord").select("value")
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .write.mode("overwrite").text(args.out)
-    )
-    _emit({"redacted": int(obs.get["n"]), "out": args.out})
+    _emit({"redacted": _write_lines(out, args.out), "out": args.out})
     return 0
 
 

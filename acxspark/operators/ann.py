@@ -521,8 +521,7 @@ def lsh_near_dup_pairs(
     subset of brute force) is oracle-checked — LSH is probabilistic by
     construction, so completeness has no SQL twin.
     """
-    from acxspark.operators.lsh import (bucket_pairs, huge_band_keys,
-                                        track_cache)
+    from acxspark.operators.lsh import bucket_pairs, track_cache
 
     if dim is None:  # infer from one row (schema carries no length)
         row = corpus.select(vec_col).filter(F.col(vec_col).isNotNull()).head()
@@ -560,13 +559,9 @@ def lsh_near_dup_pairs(
     keyed = track_cache(keyed.persist(), caches)
 
     # single full-volume shuffle (same design as lsh.candidate_pairs):
-    # sampled catastrophic-bucket pre-drop for the aggregation-buffer
-    # guard, exact cap enforced post-agg inside bucket_pairs
-    kc = keyed.join(
-        F.broadcast(huge_band_keys(keyed, max_bucket)),
-        "band_key", "left_anti",
-    )
-    cand = bucket_pairs(kc, id_col, cap=max_bucket).distinct()
+    # bucket_pairs pre-drops catastrophic buckets from a sample and
+    # enforces the exact cap post-agg
+    cand = bucket_pairs(keyed, id_col, cap=max_bucket).distinct()
 
     # exact re-check: vectors join the slim distinct id pairs — the
     # ONLY place embeddings move, and each id's vector moves once per

@@ -17,8 +17,10 @@ Parity with the reference's three exact tiers:
 
 3. ``or_key_components``: reference import dedup treats email-dup OR
    phone-dup as the same identity (src/storage.cpp:562-570) — a
-   transitive closure, routed through connected components over the
-   bipartite record↔key graph (SURVEY §7.3.2).
+   transitive closure, routed through ``connected_components`` (the
+   package's one union-find) over the bipartite record↔key graph
+   (SURVEY §7.3.2); vertex tags make CC's min-id label the min record
+   id.
 """
 
 from __future__ import annotations
@@ -89,67 +91,45 @@ def or_key_components(df: DataFrame, id_col: str, key_cols: list[str],
                       small_graph_cap: int = 1_000_000) -> DataFrame:
     """Transitive OR-key identity → (id, cluster_id).
 
-    Build bipartite edges record→("col:value") for each non-null key,
-    run CC, then label every record with the MIN record id of its
-    component (key nodes can't be guaranteed to sort after arbitrary
-    record ids, so the label is re-derived, never taken from CC).
+    Build bipartite edges record→key for each non-null key and run CC.
+    Record vertices are tagged ``"\\x00" + id`` and key vertices
+    ``"\\x01col:value"``, so every record sorts before every key; since
+    every component holds a record, CC's min-id label IS the min record
+    id of the component. The record rows are kept and the one-char tag
+    is stripped from both columns. ``connected_components`` picks its
+    own physical path: the driver union-find up to
+    ``small_graph_cap`` edge rows, the distributed star-join beyond.
 
-    Two physical shapes (identical output, both min-record-id):
-
-    * ≤ ``small_graph_cap`` edge rows — ONE limit(cap+1) collect and a
-      driver-side bipartite union-find that emits (record id, min
-      record id of component) directly as a broadcastable DataFrame.
-      Routing through connected_components here would probe+collect
-      the same edges a second time and then pay a distributed
-      groupBy+join just to turn component keys into min record ids —
-      pure overhead when the edge list already fits the driver
-      (measured: the r4 shape spent >0.5 s of or_key_clusters' 1.5 s
-      on exactly that).
-    * above the cap — the distributed star-join CC. With
-      ``hash_nodes`` (default) node ids ride CC's O(log n) rounds of
-      groupBy+join as 8-byte xxhash64 longs instead of full strings
-      (emails/urls 30–80 B — ~5× the per-round shuffle), the same
-      slim-id device as lsh.py's band shuffle; the original record
-      ids come back via one inner join on the hash, which also strips
-      key nodes (their hashes match no record id). Unlike LSH — where
-      a 64-bit collision only adds a candidate the exact verify
-      filters — a node-hash collision here would silently MERGE two
-      components, so the hashed node set is first screened with a
-      second-seed hash (one map-side-combinable agg over 16 B rows,
-      ~half a CC round's volume); a detected collision (P ≈ n²·2⁻⁶⁴ —
-      ~0.4 expected at 4×10⁹ nodes) falls back to the exact
-      string-node path.
+    With ``hash_nodes`` (default) a graph over the cap (one
+    short-circuit ``limit(cap+1).count()`` probe) instead rides CC's
+    O(log n) rounds of groupBy+join as 8-byte xxhash64 longs rather
+    than full strings (emails/urls 30–80 B — ~5× the per-round
+    shuffle), the same slim-id device as lsh.py's band shuffle. Hashing
+    loses the order, so the label is re-derived as the min record id
+    per component; the original record ids come back via one inner
+    join on the hash, which also strips key nodes (their hashes match
+    no record id). Unlike LSH — where a 64-bit collision only adds a
+    candidate the exact verify filters — a node-hash collision here
+    would silently MERGE two components, so the hashed node set is
+    first screened with a second-seed hash (one map-side-combinable
+    agg over 16 B rows, ~half a CC round's volume); a detected
+    collision (P ≈ n²·2⁻⁶⁴ — ~0.4 expected at 4×10⁹ nodes) falls back
+    to the exact string-node path.
     """
+    rid = F.concat(F.lit("\x00"), F.col(id_col).cast("string"))
     edges = None
     for kc in key_cols:
         e = df.select(
-            F.col(id_col).cast("string").alias("u"),
+            rid.alias("u"),
             F.concat(F.lit(f"\x01{kc}:"), F.col(kc).cast("string")).alias("v"),
         ).filter(F.col(kc).isNotNull() & (F.col(kc).cast("string") != "")
-                 # a NULL record id is no vertex: the distributed CC
-                 # drops it, and the driver union-find must too
+                 # a NULL record id is no vertex on any CC path
                  & F.col(id_col).isNotNull())
         edges = e if edges is None else edges.union(e)
 
-    out_schema = T.StructType([
-        T.StructField(id_col, T.StringType()),
-        T.StructField("cluster_id", T.StringType()),
-    ])
-
-    if small_graph_cap > 0:
-        # Arrow toPandas, not collect(): a cap's worth of Row objects
-        # holding email/url strings costs several GB of driver heap;
-        # columnar batches plus plain python lists do not (same device
-        # as connected_components' probe)
-        pdf = edges.limit(small_graph_cap + 1).toPandas()
-        if len(pdf) <= small_graph_cap:
-            return _bipartite_min_labels(
-                list(zip(pdf["u"].tolist(), pdf["v"].tolist())),
-                edges.sparkSession, out_schema,
-            )
-        del pdf
-
-    if hash_nodes:
+    if hash_nodes and (
+        edges.limit(small_graph_cap + 1).count() > small_graph_cap
+    ):
         # screen EVERY hash that will meet the join below: edge nodes
         # AND all record ids — a keyless record never enters the edge
         # set, but its hashed id still probes comp, so a collision
@@ -159,7 +139,7 @@ def or_key_components(df: DataFrame, id_col: str, key_cols: list[str],
         nodes = edges.select(F.col("u").alias("n")).union(
             edges.select(F.col("v").alias("n"))
         ).union(
-            df.select(F.col(id_col).cast("string").alias("n"))
+            df.select(rid.alias("n"))
         ).select(
             F.xxhash64("n").alias("h1"),
             F.xxhash64("n", F.lit(7)).alias("h2"),
@@ -179,7 +159,8 @@ def or_key_components(df: DataFrame, id_col: str, key_cols: list[str],
             records = df.select(
                 F.col(id_col).cast("string").alias("_rid")
             ).distinct().select(
-                F.xxhash64("_rid").alias("u"), F.col("_rid")
+                F.xxhash64(F.concat(F.lit("\x00"), "_rid")).alias("u"),
+                F.col("_rid"),
             ).join(comp, "u")
             canon = records.groupBy("component").agg(
                 F.min("_rid").alias("cluster_id")
@@ -189,43 +170,11 @@ def or_key_components(df: DataFrame, id_col: str, key_cols: list[str],
                 .select(F.col("_rid").alias(id_col), F.col("cluster_id"))
             )
 
-    comp = connected_components(edges, small_graph_cap=0)
-    records = comp.filter(~F.col("u").startswith("\x01"))
-    canon = records.groupBy("component").agg(F.min("u").alias("cluster_id"))
-    return (
-        records.join(canon, "component")
-        .select(F.col("u").alias(id_col), F.col("cluster_id"))
+    comp = connected_components(edges, small_graph_cap=small_graph_cap)
+    return comp.filter(F.col("u").startswith("\x00")).select(
+        F.substr("u", F.lit(2)).alias(id_col),
+        F.substr("component", F.lit(2)).alias("cluster_id"),
     )
-
-
-def _bipartite_min_labels(pairs: list[tuple], spark, schema) -> DataFrame:
-    """Driver union-find over bipartite (record, \\x01-key) edges →
-    (record id, min record id of component), broadcast-hinted. Same
-    min-per-component function as the distributed star-join fixpoint +
-    join-back — a well-defined function of the edge set, so the two
-    paths are bit-identical (pytest-pinned)."""
-    parent: dict = {}
-
-    def find(x):
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != r:  # path compression
-            parent[x], x = r, parent[x]
-        return r
-
-    for u, v in pairs:
-        ru, rv = find(u), find(v)
-        if ru != rv:
-            parent[ru] = rv
-    records = {u for u, _ in pairs}
-    comp_min: dict = {}
-    for u in records:
-        r = find(u)
-        if r not in comp_min or u < comp_min[r]:
-            comp_min[r] = u
-    rows = [(u, comp_min[find(u)]) for u in sorted(records)]
-    return F.broadcast(spark.createDataFrame(rows, schema))
 
 
 def keep_best(

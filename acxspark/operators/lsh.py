@@ -20,7 +20,8 @@ hottest key. Defenses, in order:
    urls, or signatures).
 
 The SimHash and hyperplane-ANN tiers share this machinery
-(:func:`huge_band_keys`, :func:`bucket_pairs`, :func:`join_back_ids`).
+(:func:`huge_band_keys`, :func:`bucket_pairs`, :func:`slim_ids`,
+:func:`join_back_ids`).
 """
 
 from __future__ import annotations
@@ -98,24 +99,7 @@ def candidate_pairs(df: DataFrame, id_col: str, sig_col: str = "minhash",
     triangular pairs map-side with a double explode. One shuffle of
     the band rows total; the worst task emits cap²/2 ≈ 20k pairs, so
     no salting is needed — the cap IS the skew bound."""
-    # STRING ids (urls ~40-80 B) would ride every band row through the
-    # pair-generation shuffle ``bands``× per doc. Hash them to 8-byte
-    # longs first and join the distinct pairs back to the originals at
-    # the end: band-shuffle bytes drop ~4× (the dominant byte mover of
-    # the whole pipeline), for two id-join shuffles over the (small)
-    # pair set + the (id, hash) projection.
-    # A 64-bit collision can only LOSE a pair when the two colliding
-    # urls are themselves a true dup pair (their hids compare equal and
-    # the triangular filter drops them) — P ≈ dup_pairs × 2⁻⁶⁴, ~5e-8
-    # expected losses at 10^12 docs — and can only ADD candidates
-    # otherwise (the join-back fans out), which the downstream exact
-    # verify filters.
-    hash_ids = isinstance(df.schema[id_col].dataType, StringType)
-    if hash_ids:
-        key_col = "_acx_hid"
-        src = df.withColumn(key_col, F.xxhash64(F.col(id_col)))
-    else:
-        key_col, src = id_col, df
+    src, key_col = slim_ids(df, id_col)
     # persisted: the exploded band rows feed BOTH the sampled hot-band
     # pre-drop and the pair generation — without the cache the explode
     # (bands × corpus rows) runs per consumer. The handle lands in
@@ -134,21 +118,33 @@ def candidate_pairs(df: DataFrame, id_col: str, sig_col: str = "minhash",
     # rows: ~90% of band keys are singletons, so an exact pre-count (a
     # second full-volume shuffle — the partial agg barely combines when
     # nearly every key is distinct) costs as much as the collect itself
-    # and found 0 over-cap bands. The cap is enforced EXACTLY post-agg
-    # (size(ids) ≤ cap); what a pre-count really buys is the
-    # aggregation-buffer memory guard, and a sampled pre-drop
-    # (:func:`huge_band_keys`) buys the same guard for 1% of the
-    # volume: any band big enough to threaten a buffer (≫ cap) is
-    # detected with near-certainty, and a missed marginal band buffers
-    # a few × cap × 8 B — harmless. Every pre-dropped band is
-    # (overwhelmingly) over cap, so the post-filter would have dropped
-    # it anyway — output is unchanged.
-    kc = bk.join(F.broadcast(huge_band_keys(bk, cfg.max_band_size)),
-                 "band_key", "left_anti")
-    pairs = bucket_pairs(kc, key_col, cap=cfg.max_band_size).distinct()
-    if hash_ids:
+    # and found 0 over-cap bands; bucket_pairs' sampled pre-drop buys
+    # the same buffer guard for 1% of the volume.
+    pairs = bucket_pairs(bk, key_col, cap=cfg.max_band_size).distinct()
+    if key_col != id_col:
         pairs = join_back_ids(pairs, df, id_col)
     return pairs
+
+
+def slim_ids(df: DataFrame, id_col: str) -> tuple[DataFrame, str]:
+    """``(df, key column)`` for the bucket shuffle: STRING ids (urls
+    ~40-80 B) would ride every band row through the pair-generation
+    shuffle ``bands``× per doc, so they get an 8-byte xxhash64 key
+    column ``_acx_hid`` and the caller joins its distinct pairs back to
+    the originals at the end (:func:`join_back_ids`): band-shuffle
+    bytes drop ~4× (the dominant byte mover of the whole pipeline), for
+    two id-join shuffles over the (small) pair set + the (id, hash)
+    projection. Any other id type is its own key.
+
+    A 64-bit collision can only LOSE a pair when the two colliding
+    urls are themselves a true dup pair (their hids compare equal and
+    the triangular filter drops them) — P ≈ dup_pairs × 2⁻⁶⁴, ~5e-8
+    expected losses at 10^12 docs — and can only ADD candidates
+    otherwise (the join-back fans out), which the downstream exact
+    verify filters."""
+    if isinstance(df.schema[id_col].dataType, StringType):
+        return df.withColumn("_acx_hid", F.xxhash64(F.col(id_col))), "_acx_hid"
+    return df, id_col
 
 
 def join_back_ids(pairs: DataFrame, df: DataFrame, id_col: str,
@@ -199,21 +195,29 @@ def huge_band_keys(bk: DataFrame, cap: int,
 
 
 def bucket_pairs(rows: DataFrame, id_col: str, cap: int) -> DataFrame:
-    """All (id_a < id_b) pairs sharing a band_key, via groupBy-collect
-    + map-side double explode. The aggregation buffer is one array of
-    ids per band key; callers bound it by pre-dropping catastrophic
-    bands (:func:`huge_band_keys`) and passing ``cap`` so the exact
-    cap semantics are enforced post-agg here. Pair emission (≤ cap²/2
-    rows from one task) happens after the shuffle, inside whole-stage
-    codegen — no join.
+    """All (id_a < id_b) pairs sharing a band_key whose bucket holds at
+    most ``cap`` ids, via groupBy-collect + map-side double explode.
+    The aggregation buffer is one array of ids per band key: the
+    catastrophic bands are pre-dropped from a 1% sample
+    (:func:`huge_band_keys`, a broadcast anti-join) — any band big
+    enough to threaten a buffer (≫ cap) is detected with
+    near-certainty, a missed marginal band buffers a few × cap × 8 B,
+    and every pre-dropped band is (overwhelmingly) over cap — and the
+    exact cap is enforced post-agg, so the output equals an exact
+    pre-count's. ``rows`` is read twice (sample + aggregation), so
+    callers pass it persisted. Pair emission (≤ cap²/2 rows from one
+    task) happens after the shuffle, inside whole-stage codegen — no
+    join.
 
     Within one band key each id appears at most once (a doc emits one
     row per band and band_idx is folded into the key hash), so the
     ``id_a < id_b`` filter yields each unordered pair exactly once per
     shared band; duplicates across bands are the caller's distinct."""
+    kept = rows.join(F.broadcast(huge_band_keys(rows, cap)), "band_key",
+                     "left_anti")
     n_ids = F.size(F.col("ids"))
     grouped = (
-        rows.groupBy("band_key")
+        kept.groupBy("band_key")
         .agg(F.collect_list(F.col(id_col)).alias("ids"))
         .filter((n_ids >= 2) & (n_ids <= cap))
     )

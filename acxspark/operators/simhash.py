@@ -14,10 +14,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 from acxspark.config import DEFAULT_CONFIG, DedupConfig
-from acxspark.operators.lsh import huge_band_keys, join_back_ids, track_cache
+from acxspark.operators.lsh import (huge_band_keys, join_back_ids, slim_ids,
+                                    track_cache)
 
 
 def hamming_distance(a, b) -> Column:
@@ -75,15 +75,9 @@ def simhash_candidate_pairs(df: DataFrame, id_col: str,
        popcount filter runs before any pair row crosses another wire.
     """
     # string ids hash to 8-byte longs for the bucket shuffle and join
-    # back at the end — same bytes-on-the-wire rationale and collision
-    # analysis as lsh.candidate_pairs (the collision failure mode here
+    # back at the end (lsh.slim_ids; the collision failure mode here
     # additionally requires the colliding pair to share a chunk bucket)
-    hash_ids = isinstance(df.schema[id_col].dataType, StringType)
-    if hash_ids:
-        key_col = "_acx_hid"
-        src = df.withColumn(key_col, F.xxhash64(F.col(id_col)))
-    else:
-        key_col, src = id_col, df
+    src, key_col = slim_ids(df, id_col)
     # the fingerprint (8 bytes) rides the bucket rows, so the exact
     # Hamming check needs no rejoin against the signature frame
     keyed = (
@@ -146,6 +140,6 @@ def simhash_candidate_pairs(df: DataFrame, id_col: str,
                 ham_b.alias("hamming"))
         .distinct()
     )
-    if hash_ids:
+    if key_col != id_col:
         pairs = join_back_ids(pairs, df, id_col, extra_cols=("hamming",))
     return pairs

@@ -1,5 +1,5 @@
 """Candidate verification: exact Jaccard + substring containment,
-both whole-stage codegen by default.
+both whole-stage codegen.
 
 Stage 4 (north_rule: "per-partition suffix-array exact-substring
 verification"). Candidate pairs from LSH/SimHash are re-checked:
@@ -8,24 +8,21 @@ verification"). Candidate pairs from LSH/SimHash are re-checked:
   array_intersect/array_union — whole-stage codegen, no UDF; keeps
   pairs with J >= cfg.jaccard_threshold.
 - ``containment_edges``: detects page-inside-page duplication that
-  Jaccard misses when the outer page is much larger. Default (round
-  4): a codegen ``contains(outer, inner)`` filter behind a 64-char
-  prefix probe — zero Python, zero grouping shuffle
-  (BENCH/r4_containment.json A/Bs it against the Python path on the
-  640k bench corpus, identical edges). The python/suffix-array paths
-  remain as the parity twin: applyInPandas over bounded candidate
-  groups, optional per-group suffix array binary-searched per pair.
+  Jaccard misses when the outer page is much larger: a codegen
+  ``contains(outer, inner)`` filter behind a 64-char prefix probe —
+  zero Python, zero grouping shuffle.
 
-Group-size guard (python path only): groups above ``max_group_docs``
-are truncated by doc order — the generalization of the reference's
-1 MiB record cap (reference src/storage.cpp:516) to group granularity
-(SURVEY §7.3.5). The JVM path needs no cap: there are no groups.
+Why ``contains`` and not the suffix array the north_rule names: a
+suffix array pays off only when many probes share one haystack, and
+here each outer text meets a handful of candidate inners. Building
+the array costs more than scanning the text once per probe, and the
+codegen scan needs no Python crossing and no grouping by document.
+Both decide the same predicate; ``tests/oracles.py`` keeps the
+suffix-array check as an oracle the codegen path is pinned against.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -75,83 +72,21 @@ def exact_jaccard_edges(pairs: DataFrame, docs_with_shingles: DataFrame,
 # ------------------------------------------------------------ containment
 
 
-def _suffix_array(s: str) -> list[int]:
-    """O(n log^2 n) doubling suffix array — library-free, deterministic.
-
-    KEPT ONLY for the opt-in ``use_suffix_array`` mode of
-    :func:`containment_edges`: an interpreted-Python SA build with a
-    per-comparison closure key costs minutes on a 1 MiB text, while
-    CPython's C-implemented two-way search (``needle in haystack``)
-    scans the same text in ~1 ms — the SA can only amortize when very
-    many probes (≫ SA build cost / scan cost ≈ thousands) share one
-    haystack, which the ≤64-doc group cap makes impossible. The
-    default path therefore uses ``in``; output is identical (tested).
-    """
-    n = len(s)
-    sa = list(range(n))
-    rank = [ord(c) for c in s]
-    tmp = [0] * n
-    k = 1
-    while True:
-        def key(i):
-            return (rank[i], rank[i + k] if i + k < n else -1)
-        sa.sort(key=key)
-        tmp[sa[0]] = 0
-        for j in range(1, n):
-            tmp[sa[j]] = tmp[sa[j - 1]] + (1 if key(sa[j]) != key(sa[j - 1]) else 0)
-        rank = tmp[:]
-        if rank[sa[-1]] == n - 1:
-            break
-        k <<= 1
-    return sa
-
-
-def _contains_via_sa(hay: str, sa: list[int], needle: str) -> bool:
-    """Binary search the suffix array for needle as a prefix."""
-    lo, hi = 0, len(sa)
-    m = len(needle)
-    while lo < hi:
-        mid = (lo + hi) // 2
-        if hay[sa[mid]: sa[mid] + m] < needle:
-            lo = mid + 1
-        else:
-            hi = mid
-    return lo < len(sa) and hay[sa[lo]: sa[lo] + m] == needle
-
-
 def containment_edges(pairs: DataFrame, docs: DataFrame, id_col: str,
                       text_col: str = "text",
-                      min_inner_chars: int = 64,
-                      max_group_docs: int = 64,
-                      use_suffix_array: bool = False,
-                      impl: str = "jvm") -> DataFrame:
+                      min_inner_chars: int = 64) -> DataFrame:
     """Mark candidate pairs where one text contains the other.
 
-    Default ``impl='jvm'`` (round 4): the substring decision runs
-    ENTIRELY inside whole-stage codegen — Python ``inner in outer``
-    and JVM ``contains(outer, inner)`` are the same predicate (both
-    exact substring over code points; surrogate pairs can't half-match
-    because the needle is well-formed), so the applyInPandas stage the
-    JVM path replaces was pure overhead: at 100 TB the old shape was
-    ~10^8 Python group invocations ("hours on 4000 cores",
-    docs/SCALE.md); the new shape is a codegen filter on the pair
-    stream — zero Python, zero grouping shuffle, and no group-cap
-    truncation (the cap only ever existed to bound the Python groups).
-    A cheap probe (does inner's first-64-char prefix occur in outer?)
-    gates the full scan so a non-matching pair costs one short
-    ``locate``, and Java's naive indexOf can only degenerate on pairs
-    that already share a 64-char block.
-
-    ``impl='python'`` keeps the applyInPandas path (grouped by id_a;
-    ``max_group_docs`` caps the PAIRS evaluated per group, applied
-    after an in-group sort on id_b so the truncated subset is
-    deterministic — applyInPandas delivers rows in shuffle-arrival
-    order, which varies run to run) — the parity twin for tests and
-    for adversarial corpora where CPython's two-way search beats
-    naive indexOf. ``use_suffix_array=True`` (implies the python
-    path) keeps the per-group suffix-array probe (north_rule names
-    it; same output, tested) for environments with a C-speed SA
-    builder.
+    The substring decision runs entirely inside whole-stage codegen:
+    ``contains(outer, inner)`` is exact substring over code points
+    (surrogate pairs can't half-match because the needle is
+    well-formed), the shorter text is the inner one (text_a on equal
+    lengths), and an inner text under ``min_inner_chars`` or a NULL
+    text is never a containment. A cheap probe (does inner's
+    first-64-char prefix occur in outer?) gates the full scan so a
+    non-matching pair costs one short ``locate``, and Java's naive
+    indexOf can only degenerate on pairs that already share a 64-char
+    block. There are no groups, so there is no group-size cap.
     """
     d = docs.select(F.col(id_col), F.col(text_col))
     # participating-id semi-join, same rationale as exact_jaccard_edges:
@@ -167,45 +102,18 @@ def containment_edges(pairs: DataFrame, docs: DataFrame, id_col: str,
         pairs.join(d.select(F.col(id_col).alias("id_a"), F.col(text_col).alias("text_a")), "id_a")
         .join(d.select(F.col(id_col).alias("id_b"), F.col(text_col).alias("text_b")), "id_b")
     )
-
-    if impl == "jvm" and not use_suffix_array:
-        inner = F.when(
-            F.length("text_a") <= F.length("text_b"), F.col("text_a")
-        ).otherwise(F.col("text_b"))
-        outer = F.when(
-            F.length("text_a") <= F.length("text_b"), F.col("text_b")
-        ).otherwise(F.col("text_a"))
-        return (
-            j.select("id_a", "id_b", inner.alias("_in"), outer.alias("_out"))
-            .filter(F.length("_in") >= min_inner_chars)
-            # probe-then-scan: the 64-char prefix locate rejects the
-            # overwhelming share of non-containments at bounded cost
-            .filter(F.contains(F.col("_out"), F.substring(F.col("_in"), 1, 64)))
-            .filter(F.contains(F.col("_out"), F.col("_in")))
-            .select("id_a", "id_b")
-        )
-
-    def check(pdf: pd.DataFrame) -> pd.DataFrame:
-        # deterministic truncation: sort before head — group row order
-        # is shuffle-arrival order and differs across runs/parallelism
-        pdf = pdf.sort_values("id_b", kind="mergesort").head(max_group_docs)
-        rows = []
-        sa_cache: dict[str, list[int]] = {}
-        for r in pdf.itertuples(index=False):
-            a, b = r.text_a or "", r.text_b or ""
-            inner, outer = (a, b) if len(a) <= len(b) else (b, a)
-            if len(inner) < min_inner_chars or not inner or not outer:
-                contained = False
-            elif use_suffix_array:
-                if outer not in sa_cache:
-                    sa_cache[outer] = _suffix_array(outer)
-                contained = _contains_via_sa(outer, sa_cache[outer], inner)
-            else:
-                contained = inner in outer
-            if contained:
-                rows.append({"id_a": r.id_a, "id_b": r.id_b})
-        return pd.DataFrame(rows, columns=["id_a", "id_b"])
-
-    id_type = dict(docs.dtypes)[id_col]
-    schema = f"id_a {id_type}, id_b {id_type}"
-    return j.groupBy("id_a").applyInPandas(check, schema=schema)
+    inner = F.when(
+        F.length("text_a") <= F.length("text_b"), F.col("text_a")
+    ).otherwise(F.col("text_b"))
+    outer = F.when(
+        F.length("text_a") <= F.length("text_b"), F.col("text_b")
+    ).otherwise(F.col("text_a"))
+    return (
+        j.select("id_a", "id_b", inner.alias("_in"), outer.alias("_out"))
+        .filter(F.length("_in") >= min_inner_chars)
+        # probe-then-scan: the 64-char prefix locate rejects the
+        # overwhelming share of non-containments at bounded cost
+        .filter(F.contains(F.col("_out"), F.substring(F.col("_in"), 1, 64)))
+        .filter(F.contains(F.col("_out"), F.col("_in")))
+        .select("id_a", "id_b")
+    )

@@ -11,7 +11,7 @@ input_hint):
   → exact tier   (sha2 content hash, first-wins)
   → minhash tier (shingles → signatures → LSH bands → candidates)
   → simhash tier (fingerprint → Hamming-ball candidates)
-  → verify       (exact Jaccard at τ + suffix-array containment)
+  → verify       (exact Jaccard at τ + substring containment)
   → cluster      (large-star/small-star CC, checkpointed)
   → span dedup   (opt-in ExactSubstr pass on the survivors: shared
                   token spans >= k stripped from all but their first
@@ -173,223 +173,169 @@ def run_pipeline(web: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG,
         if stamp else "cc_edges"
     )
 
-    def _survivor_tail(clusters: DataFrame) -> DataFrame:
-        """survivors → (opt-in) span dedup → (opt-in) redact.
-
-        Shared by the fresh path and the edge-snapshot resume path so a
-        resumed run applies IDENTICAL post-clustering stages — resume
-        must change where work restarts, never what it computes.
-        first-wins canonical: cluster_id IS the minimum url (cc.py), so
-        the survivor set is simply url == cluster_id."""
-        survivors = docs.join(
-            clusters.filter(F.col("url") == F.col("cluster_id")).select("url"),
-            "url", "left_semi",
-        )
-        if span_dedup_k:
-            # ExactSubstr pass (Lee et al. 2021) on the SURVIVORS only —
-            # the doc-level tiers above drop whole near-dup documents;
-            # this strips the residual shared spans (quoted boilerplate)
-            # between documents different enough to both survive. Runs on
-            # survivors (≤ half the corpus on real crawls, docs/SCALE.md)
-            # and BEFORE redact: masking rewrites tokens and would split
-            # genuinely shared spans.
-            from acxspark.operators.spandedup import span_dedup
-
-            cleaned = span_dedup(survivors, id_col="url",
-                                 text_col=text_col, k=span_dedup_k)
-            survivors = lin.observe(
-                survivors.drop(text_col).join(
-                    cleaned.select(
-                        "url", F.col("clean_text").alias(text_col),
-                        "n_removed",
-                    ),
-                    "url",
-                ),
-                "span_dedup",
-                rows=F.count(F.lit(1)),
-                tokens_removed=F.sum("n_removed"),
-            ).drop("n_removed")
-        if redact:
-            # post-clustering, never before: masking changes content
-            # hashes and would split exact clusters (north_rule order)
-            from acxspark.plans.redact import scrub_text
-
-            survivors = scrub_text(survivors, text_col)
-        return survivors
-
     if _fresh("edges"):
         # full candidate-tier resume: every tier's output is in the
         # committed edge snapshot — jump straight to clustering
         edges = catalog.read(spark, "edges")
-        edge_pairs = edges.select("id_a", "id_b")
-        clusters = cluster_assignments(
-            docs.select("url"), "url", edge_pairs, catalog=catalog,
-            table=cc_table,
-        )
-        catalog.write("clusters", clusters, meta=wmeta)
-        clusters = lin.observe(catalog.read(spark, "clusters"),
-                               "clusters_assigned")
-        return PipelineResult(clusters=clusters, edges=edges,
-                              survivors=_survivor_tail(clusters),
-                              lineage=lin, caches=caches)
-
-    # ---- exact tier: content-hash edges url ↔ first-url --------------
-    # star edges (min-url ↔ member), not cliques: linear in group size,
-    # so a pathological 10^6-copy boilerplate page costs 10^6 edges not
-    # 10^12. CC collapses the star to one cluster identically.
-    # persisted: consumed by the sha_min groupBy AND the exact-edge
-    # join — without the cache the sha256 pass over the full corpus
-    # text runs once per consumer (the slim url+sha cache costs
-    # ~100 B/row; the recompute costs a full-corpus hash pass)
-    hashed = docs.select(
-        "url", F.sha2(F.col(text_col), 256).alias("text_sha")
-    ).persist()
-    caches.append(hashed)
-    # persisted: consumed by the exact-edge join, the representatives
-    # semi-join, and (catalog path) the signature-snapshot sha join
-    sha_min = hashed.groupBy("text_sha").agg(F.min("url").alias("min_url"),
-                                             F.count("*").alias("n")).persist()
-    caches.append(sha_min)
-    exact_edges = (
-        hashed.join(sha_min.filter(F.col("n") > 1), "text_sha")
-        .filter(F.col("url") != F.col("min_url"))
-        .select(F.col("min_url").alias("id_a"), F.col("url").alias("id_b"))
-        .withColumn("tier", F.lit("exact"))
-    )
-
-    # ---- shared signature scan: ONE fused Arrow pass, persisted slim --
-    # sigs caches (url, shingles, minhash, simhash) — the text column
-    # never rides the cache, so at 100 TB the cached footprint is the
-    # hash arrays, not the corpus. Every downstream tier (LSH explode,
-    # both sides of the Jaccard join, SimHash probe) reads this one
-    # cache; without it the self-joins re-run the signature UDF per
-    # side. The fused batch-vectorized UDF (operators/signatures.py)
-    # replaces three separate per-row UDF scans.
-    #
-    # Near-dup tiers run on EXACT-DUP REPRESENTATIVES only (min-url
-    # per content hash): byte-identical copies collide in all 32
-    # bands, so each exact cluster of size k would shuffle O(k²)
-    # fully-duplicated candidate rows through LSH/Jaccard/SimHash —
-    # work the exact tier's star edges already did. On real web
-    # crawls exact-dup mass is 30-50%, so this cuts signature compute
-    # AND candidate shuffle superlinearly. Recall is unaffected: if
-    # dup(A)=RA near-dups dup(B)=RB, edges A–RA, B–RB (exact) and
-    # RA–RB (near) put all four in one CC component.
-    reps = sha_min.select(F.col("min_url").alias("url"))
-    if _fresh("signatures"):
-        sigs = catalog.read(spark, "signatures").persist()
     else:
-        sign_input = docs.join(reps, "url", "left_semi")
-        hot = None
-        if getattr(cfg, "shingle_max_doc_freq", None) is not None:
-            # derive the doc-frequency drop set HERE (not inside
-            # with_signatures) so it can be committed: increments must
-            # sign their deltas with the BASE corpus's set — a
-            # delta-derived set diverges and breaks band collisions
-            # against the committed signatures (plans/incremental.py)
-            from acxspark.operators.signatures import hot_shingle_hashes
+        # ---- exact tier: content-hash edges url ↔ first-url ----------
+        # star edges (min-url ↔ member), not cliques: linear in group size,
+        # so a pathological 10^6-copy boilerplate page costs 10^6 edges not
+        # 10^12. CC collapses the star to one cluster identically.
+        # persisted: consumed by the sha_min groupBy AND the exact-edge
+        # join — without the cache the sha256 pass over the full corpus
+        # text runs once per consumer (the slim url+sha cache costs
+        # ~100 B/row; the recompute costs a full-corpus hash pass)
+        hashed = docs.select(
+            "url", F.sha2(F.col(text_col), 256).alias("text_sha")
+        ).persist()
+        caches.append(hashed)
+        # persisted: consumed by the exact-edge join, the representatives
+        # semi-join, and (catalog path) the signature-snapshot sha join
+        sha_min = hashed.groupBy("text_sha").agg(F.min("url").alias("min_url"),
+                                                 F.count("*").alias("n")).persist()
+        caches.append(sha_min)
+        exact_edges = (
+            hashed.join(sha_min.filter(F.col("n") > 1), "text_sha")
+            .filter(F.col("url") != F.col("min_url"))
+            .select(F.col("min_url").alias("id_a"), F.col("url").alias("id_b"))
+            .withColumn("tier", F.lit("exact"))
+        )
 
-            hot = hot_shingle_hashes(sign_input, text_col, cfg)
-        sigs = with_signatures(
-            sign_input, text_col=text_col, cfg=cfg, id_col="url",
-            hot_hashes=hot,
+        # ---- shared signature scan: ONE fused Arrow pass, persisted slim
+        # sigs caches (url, shingles, minhash, simhash) — the text column
+        # never rides the cache, so at 100 TB the cached footprint is the
+        # hash arrays, not the corpus. Every downstream tier (LSH explode,
+        # both sides of the Jaccard join, SimHash probe) reads this one
+        # cache; without it the self-joins re-run the signature UDF per
+        # side. The fused batch-vectorized UDF (operators/signatures.py)
+        # replaces three separate per-row UDF scans.
+        #
+        # Near-dup tiers run on EXACT-DUP REPRESENTATIVES only (min-url
+        # per content hash): byte-identical copies collide in all 32
+        # bands, so each exact cluster of size k would shuffle O(k²)
+        # fully-duplicated candidate rows through LSH/Jaccard/SimHash —
+        # work the exact tier's star edges already did. On real web
+        # crawls exact-dup mass is 30-50%, so this cuts signature compute
+        # AND candidate shuffle superlinearly. Recall is unaffected: if
+        # dup(A)=RA near-dups dup(B)=RB, edges A–RA, B–RB (exact) and
+        # RA–RB (near) put all four in one CC component.
+        reps = sha_min.select(F.col("min_url").alias("url"))
+        if _fresh("signatures"):
+            sigs = catalog.read(spark, "signatures").persist()
+        else:
+            sign_input = docs.join(reps, "url", "left_semi")
+            hot = None
+            if getattr(cfg, "shingle_max_doc_freq", None) is not None:
+                # derive the doc-frequency drop set HERE (not inside
+                # with_signatures) so it can be committed: increments must
+                # sign their deltas with the BASE corpus's set — a
+                # delta-derived set diverges and breaks band collisions
+                # against the committed signatures (plans/incremental.py)
+                from acxspark.operators.signatures import hot_shingle_hashes
+
+                hot = hot_shingle_hashes(sign_input, text_col, cfg)
+            sigs = with_signatures(
+                sign_input, text_col=text_col, cfg=cfg, id_col="url",
+                hot_hashes=hot,
+            )
+            if catalog is not None:
+                # the checkpoint anchor (docs/SCALE.md): the signature
+                # table is the resume point that makes a killed job skip
+                # the most expensive scan; reading the committed parquet
+                # back also serves as the cache for this run. text_sha
+                # rides along (32 B/row) so INCREMENTAL runs
+                # (plans/incremental.py) can run the exact tier against
+                # this snapshot without touching old text. The sha column
+                # comes from the persisted sha_min (url → sha is
+                # functional and every sig row IS a min_url), never from a
+                # second corpus-wide hash projection.
+                rep_sha = sha_min.select(
+                    F.col("min_url").alias("url"), "text_sha"
+                )
+                catalog.write("signatures", sigs.join(rep_sha, "url"), meta=wmeta)
+                sigs = catalog.read(spark, "signatures")
+                if hot is not None:
+                    # committed AFTER signatures, same stamp: a crash
+                    # during the signature scan must not leave a
+                    # new-stamp drop set beside old signatures — the
+                    # increment's coherence check (plans/incremental.py)
+                    # compares these stamps before trusting the set
+                    catalog.write(
+                        "hot_shingles",
+                        spark.createDataFrame([(int(x),) for x in hot],
+                                              "h long"),
+                        meta=wmeta,
+                    )
+                # membership artifact over the committed sha set: lets
+                # every later INCREMENT (plans/incremental.py) answer
+                # "was this text ever committed?" without the once-per-
+                # increment corpus scan (operators/bloom.py; sized by
+                # n_docs — an overcount vs the rep-only sha set, which
+                # only lowers the fpp). Committed alongside signatures so
+                # the two snapshots can never drift apart silently: the
+                # same stamp guards both.
+                from acxspark.operators.bloom import build_bloom, shards_for
+
+                ns = shards_for(stamp["n_docs"])
+                catalog.write(
+                    "sha_bloom",
+                    build_bloom(sigs.select("text_sha"), "text_sha",
+                                n_shards=ns, expected_items=stamp["n_docs"]),
+                    meta={**wmeta, "n_shards": ns},
+                )
+            sigs = sigs.persist()
+        caches.append(sigs)
+
+        # ---- minhash tier --------------------------------------------
+        cands = lin.observe(
+            candidate_pairs(sigs, "url", "minhash", cfg, caches=caches),
+            "pairs_emitted",
+        ).persist()
+        caches.append(cands)
+        # persisted: consumed by the containment anti-join AND the edge
+        # union → without the cache the two sig-joins re-run per consumer
+        near_edges = exact_jaccard_edges(cands, sigs, "url", cfg).select(
+            "id_a", "id_b"
+        ).withColumn("tier", F.lit("near")).persist()
+        caches.append(near_edges)
+
+        # ---- simhash tier (recall supplement for tiny-edit dups) -----
+        sim_edges = simhash_candidate_pairs(
+            sigs, "url", "simhash", cfg, caches=caches
+        ).select(
+            "id_a", "id_b"
+        ).withColumn("tier", F.lit("simhash"))
+
+        # ---- containment tier (page-in-page, Jaccard-blind) ----------
+        # only pairs the Jaccard tier did NOT already verify need the
+        # containment check — verified pairs are already edges, and CC is
+        # insensitive to duplicate edges, so re-checking them buys nothing.
+        unverified = cands.join(
+            near_edges.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
+        )
+        contain_edges = containment_edges(
+            unverified,
+            docs.select("url", text_col).withColumnRenamed(text_col, "text"),
+            "url",
+        ).withColumn("tier", F.lit("contain"))
+
+        edges = (
+            exact_edges.unionByName(near_edges).unionByName(sim_edges)
+            .unionByName(contain_edges)
         )
         if catalog is not None:
-            # the checkpoint anchor (docs/SCALE.md): the signature
-            # table is the resume point that makes a killed job skip
-            # the most expensive scan; reading the committed parquet
-            # back also serves as the cache for this run. text_sha
-            # rides along (32 B/row) so INCREMENTAL runs
-            # (plans/incremental.py) can run the exact tier against
-            # this snapshot without touching old text. The sha column
-            # comes from the persisted sha_min (url → sha is
-            # functional and every sig row IS a min_url), never from a
-            # second corpus-wide hash projection.
-            rep_sha = sha_min.select(
-                F.col("min_url").alias("url"), "text_sha"
-            )
-            catalog.write("signatures", sigs.join(rep_sha, "url"), meta=wmeta)
-            sigs = catalog.read(spark, "signatures")
-            if hot is not None:
-                # committed AFTER signatures, same stamp: a crash
-                # during the signature scan must not leave a
-                # new-stamp drop set beside old signatures — the
-                # increment's coherence check (plans/incremental.py)
-                # compares these stamps before trusting the set
-                catalog.write(
-                    "hot_shingles",
-                    spark.createDataFrame([(int(x),) for x in hot],
-                                          "h long"),
-                    meta=wmeta,
-                )
-            # membership artifact over the committed sha set: lets
-            # every later INCREMENT (plans/incremental.py) answer
-            # "was this text ever committed?" without the once-per-
-            # increment corpus scan (operators/bloom.py; sized by
-            # n_docs — an overcount vs the rep-only sha set, which
-            # only lowers the fpp). Committed alongside signatures so
-            # the two snapshots can never drift apart silently: the
-            # same stamp guards both.
-            from acxspark.operators.bloom import build_bloom, shards_for
-
-            ns = shards_for(stamp["n_docs"])
-            catalog.write(
-                "sha_bloom",
-                build_bloom(sigs.select("text_sha"), "text_sha",
-                            n_shards=ns, expected_items=stamp["n_docs"]),
-                meta={**wmeta, "n_shards": ns},
-            )
-        sigs = sigs.persist()
-    caches.append(sigs)
-
-    # ---- minhash tier ------------------------------------------------
-    cands = lin.observe(
-        candidate_pairs(sigs, "url", "minhash", cfg, caches=caches),
-        "pairs_emitted",
-    ).persist()
-    caches.append(cands)
-    # persisted: consumed by the containment anti-join AND the edge
-    # union → without the cache the two sig-joins re-run per consumer
-    near_edges = exact_jaccard_edges(cands, sigs, "url", cfg).select(
-        "id_a", "id_b"
-    ).withColumn("tier", F.lit("near")).persist()
-    caches.append(near_edges)
-
-    # ---- simhash tier (recall supplement for tiny-edit dups) ---------
-    sim_edges = simhash_candidate_pairs(
-        sigs, "url", "simhash", cfg, caches=caches
-    ).select(
-        "id_a", "id_b"
-    ).withColumn("tier", F.lit("simhash"))
-
-    # ---- containment tier (page-in-page, Jaccard-blind) --------------
-    # only pairs the Jaccard tier did NOT already verify need the
-    # suffix-array check — verified pairs are already edges, and CC is
-    # insensitive to duplicate edges, so re-checking them buys nothing.
-    unverified = cands.join(
-        near_edges.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
-    )
-    contain_edges = containment_edges(
-        unverified,
-        docs.select("url", text_col).withColumnRenamed(text_col, "text"),
-        "url",
-    ).withColumn("tier", F.lit("contain"))
-
-    edges = exact_edges.unionByName(near_edges).unionByName(sim_edges).unionByName(
-        contain_edges
-    )
+            catalog.write("edges", edges, meta=wmeta)
+            edges = catalog.read(spark, "edges")
 
     # ---- clustering ---------------------------------------------------
     # localCheckpoint: CC iterates joins over the edges — without the
     # cut, every CC round would re-run all four tiers above. With a
     # catalog, the committed edge snapshot IS the lineage cut (and the
     # resume point for the whole candidate phase).
-    if catalog is not None:
-        catalog.write("edges", edges, meta=wmeta)
-        edges = catalog.read(spark, "edges")
-        edge_pairs = edges.select("id_a", "id_b")
-    else:
-        edge_pairs = edges.select("id_a", "id_b").localCheckpoint(eager=True)
+    edge_pairs = edges.select("id_a", "id_b")
+    if catalog is None:
+        edge_pairs = edge_pairs.localCheckpoint(eager=True)
     clusters = cluster_assignments(
         docs.select("url"), "url", edge_pairs, catalog=catalog,
         table=cc_table,
@@ -401,6 +347,43 @@ def run_pipeline(web: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG,
         clusters = catalog.read(spark, "clusters")
     clusters = lin.observe(clusters, "clusters_assigned")
 
+    # ---- survivors → (opt-in) span dedup → (opt-in) redact ------------
+    # first-wins canonical: cluster_id IS the minimum url (cc.py), so
+    # the survivor set is simply url == cluster_id.
+    survivors = docs.join(
+        clusters.filter(F.col("url") == F.col("cluster_id")).select("url"),
+        "url", "left_semi",
+    )
+    if span_dedup_k:
+        # ExactSubstr pass (Lee et al. 2021) on the SURVIVORS only —
+        # the doc-level tiers above drop whole near-dup documents;
+        # this strips the residual shared spans (quoted boilerplate)
+        # between documents different enough to both survive. Runs on
+        # survivors (≤ half the corpus on real crawls, docs/SCALE.md)
+        # and BEFORE redact: masking rewrites tokens and would split
+        # genuinely shared spans.
+        from acxspark.operators.spandedup import span_dedup
+
+        cleaned = span_dedup(survivors, id_col="url",
+                             text_col=text_col, k=span_dedup_k)
+        survivors = lin.observe(
+            survivors.drop(text_col).join(
+                cleaned.select(
+                    "url", F.col("clean_text").alias(text_col),
+                    "n_removed",
+                ),
+                "url",
+            ),
+            "span_dedup",
+            rows=F.count(F.lit(1)),
+            tokens_removed=F.sum("n_removed"),
+        ).drop("n_removed")
+    if redact:
+        # post-clustering, never before: masking changes content
+        # hashes and would split exact clusters (north_rule order)
+        from acxspark.plans.redact import scrub_text
+
+        survivors = scrub_text(survivors, text_col)
+
     return PipelineResult(clusters=clusters, edges=edges,
-                          survivors=_survivor_tail(clusters),
-                          lineage=lin, caches=caches)
+                          survivors=survivors, lineage=lin, caches=caches)

@@ -42,6 +42,14 @@ def package_zip() -> str:
     return str(out)
 
 
+def _default_driver_mem() -> str:
+    """Half of host RAM, clamped to 2g–8g. A long-lived JVM grows
+    toward its heap cap; a cap near all of RAM gets it OOM-killed by
+    the kernel, and the other half is left to the Python workers."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(2, min(8, ram // (2 << 30)))}g"
+
+
 def get_spark(
     app_name: str = "acxspark",
     parallelism: int | None = None,
@@ -55,7 +63,7 @@ def get_spark(
     ``$SPARK_GRAFT_CPUS`` or ``*``.
 
     ``cluster=True`` (the spark-submit ship path, tools/submit_dedup.py):
-    do NOT set master / driver memory / local dirs / GC flags — those
+    do NOT set master / driver memory / GC flags — those
     belong to spark-submit and the cluster manager. Only the
     engine-semantic confs (AQE, Arrow, shuffle sizing, zstd, UTC) are
     applied, and the package zip is still shipped to executors.
@@ -114,18 +122,14 @@ def get_spark(
         # LOCAL-ONLY host tuning — a cluster manager owns all of these.
         b = (
             b
-            # shuffle/spill on tmpfs: the host disk is ~600 MB/s virtio;
-            # RAM-backed local dirs take it out of the shuffle path (the
-            # cluster equivalent: NVMe spark.local.dir per executor)
-            .config(
-                "spark.local.dir",
-                "/dev/shm/spark-tmp" if os.path.isdir("/dev/shm") else "/tmp",
-            )
-            # 32 executor threads share one heap in local mode: size it
-            # so allocation-heavy stages don't become GC-bound
-            # (measured: the shingle scan anti-scaled at 8g). GC choice
-            # is ParallelGC — see the extraJavaOptions note below.
-            .config("spark.driver.memory", os.environ.get("ACX_DRIVER_MEM", "16g"))
+            # executor threads share this one heap in local mode;
+            # $ACX_DRIVER_MEM overrides the host-derived default. GC
+            # choice is ParallelGC — see the extraJavaOptions note
+            # below. No spark.local.dir: shuffle/spill goes to Spark's
+            # default (the JVM temp dir, or $SPARK_LOCAL_DIRS), not to
+            # a tmpfs dir where it would compete with the heap for RAM.
+            .config("spark.driver.memory",
+                    os.environ.get("ACX_DRIVER_MEM") or _default_driver_mem())
             # AlwaysPreTouch: this host (microVM) serializes first-touch
             # page faults globally — a 32-thread JVM allocating across a
             # lazily-faulted heap measured 20x slower than 8 threads on

@@ -1,10 +1,13 @@
-"""Pure-Python reference math for the signature kernel and the bucket
-pair generators — the per-row oracles the fused Arrow kernel
-(acxspark/operators/signatures.py) and the Spark bucket paths
-(acxspark/operators/lsh.py, simhash.py, ann.py) are pinned against.
+"""Pure-Python reference math for the signature kernel, the bucket
+pair generators and the containment check — the per-row oracles the
+fused Arrow kernel (acxspark/operators/signatures.py), the Spark
+bucket paths (acxspark/operators/lsh.py, simhash.py, ann.py) and the
+codegen substring filter (acxspark/operators/verify.py) are pinned
+against.
 
-Everything here is plain integer arithmetic mod 2^64 over Python ints,
-one row at a time, so it shares no code path with what it checks.
+Everything here is plain integer arithmetic mod 2^64 over Python ints
+or plain string search, one row at a time, so it shares no code path
+with what it checks.
 """
 
 from __future__ import annotations
@@ -77,3 +80,59 @@ def bucket_pairs(members, cap: int) -> set[tuple]:
         if 2 <= len(ids) <= cap:
             out.update(combinations(sorted(ids), 2))
     return out
+
+
+def _inner_outer(a, b, min_inner_chars: int):
+    """(inner, outer) of a candidate pair — the shorter text is inner,
+    text a on equal lengths — or None when the pair cannot be a
+    containment (a NULL text, or an inner under ``min_inner_chars``)."""
+    if a is None or b is None:
+        return None
+    inner, outer = (a, b) if len(a) <= len(b) else (b, a)
+    if len(inner) < min_inner_chars:
+        return None
+    return inner, outer
+
+
+def contains_scan(a, b, min_inner_chars: int = 64) -> bool:
+    """Containment by CPython's substring search (``inner in outer``)."""
+    io = _inner_outer(a, b, min_inner_chars)
+    return io is not None and io[0] in io[1]
+
+
+def suffix_array(s: str) -> list[int]:
+    """O(n log² n) prefix-doubling suffix array over code points."""
+    n = len(s)
+    sa = list(range(n))
+    rank = [ord(c) for c in s]
+    k = 1
+    while n:
+        def key(i):
+            return rank[i], rank[i + k] if i + k < n else -1
+        sa.sort(key=key)
+        tmp = [0] * n
+        for j in range(1, n):
+            tmp[sa[j]] = tmp[sa[j - 1]] + (key(sa[j]) != key(sa[j - 1]))
+        rank = tmp
+        if rank[sa[-1]] == n - 1:
+            break
+        k <<= 1
+    return sa
+
+
+def contains_suffix_array(a, b, min_inner_chars: int = 64) -> bool:
+    """Containment by binary search for the inner text among the
+    prefixes of the outer text's suffixes."""
+    io = _inner_outer(a, b, min_inner_chars)
+    if io is None:
+        return False
+    inner, outer = io
+    sa = suffix_array(outer)
+    lo, hi, m = 0, len(sa), len(inner)
+    while lo < hi:
+        mid = (lo + hi) // 2
+        if outer[sa[mid]: sa[mid] + m] < inner:
+            lo = mid + 1
+        else:
+            hi = mid
+    return lo < len(sa) and outer[sa[lo]: sa[lo] + m] == inner

@@ -43,6 +43,14 @@ def test_exact_text_dedup(spark):
     assert len(groups) == 1 and groups[0]["doc_ids"] == [1, 2]
 
 
+def _or_key_labels(df, **kw):
+    """Sorted (id, cluster_id) over the email/phone keys."""
+    return sorted(
+        (r["id"], r["cluster_id"])
+        for r in or_key_components(df, "id", ["email", "phone"], **kw).collect()
+    )
+
+
 def test_or_key_transitive_identity(spark):
     # A~B share email, B~C share phone ⇒ {A,B,C} one identity
     # (reference src/storage.cpp:562-570 semantics, SURVEY §7.3.2)
@@ -69,16 +77,9 @@ def test_or_key_three_paths_identical(spark):
     ]
     df = spark.createDataFrame(rows, ["id", "email", "phone"])
 
-    def labels(**kw):
-        return sorted(
-            (r["id"], r["cluster_id"])
-            for r in or_key_components(df, "id", ["email", "phone"], **kw)
-            .collect()
-        )
-
-    fast = labels()
-    hashed = labels(small_graph_cap=0, hash_nodes=True)
-    strings = labels(small_graph_cap=0, hash_nodes=False)
+    fast = _or_key_labels(df)
+    hashed = _or_key_labels(df, small_graph_cap=0, hash_nodes=True)
+    strings = _or_key_labels(df, small_graph_cap=0, hash_nodes=False)
     assert fast == hashed == strings
     assert len(fast) == 200
 
@@ -92,17 +93,27 @@ def test_or_key_null_record_id_same_on_every_path(spark):
             ("C", "c@x", None)]
     df = spark.createDataFrame(rows, "id string, email string, phone string")
 
-    def labels(**kw):
-        return sorted(
-            (r["id"], r["cluster_id"])
-            for r in or_key_components(df, "id", ["email", "phone"], **kw)
-            .collect()
-        )
-
-    fast = labels()
-    assert fast == labels(small_graph_cap=0, hash_nodes=True) \
-        == labels(small_graph_cap=0, hash_nodes=False)
+    fast = _or_key_labels(df)
+    assert fast == _or_key_labels(df, small_graph_cap=0, hash_nodes=True) \
+        == _or_key_labels(df, small_graph_cap=0, hash_nodes=False)
     assert fast == [("A", "A"), ("B", "B"), ("C", "C")]
+
+
+def test_or_key_record_id_shaped_like_key_node_same_on_every_path(spark):
+    """Regression: key vertices are spelled "\\x01col:value", and a
+    record id starting with "\\x01" must still be its own record
+    vertex — even one spelled exactly like B's phone key vertex. The
+    string-node path used to drop it as a key node (losing its row);
+    the driver and hashed paths made it the same vertex as B's phone
+    key (merging B into its cluster)."""
+    rec = "\x01phone:p2"
+    rows = [("A", "a@x", None), (rec, "a@x", None), ("B", None, "p2")]
+    df = spark.createDataFrame(rows, "id string, email string, phone string")
+
+    want = sorted([("A", rec), (rec, rec), ("B", "B")])
+    assert _or_key_labels(df) == want
+    assert _or_key_labels(df, small_graph_cap=0, hash_nodes=True) == want
+    assert _or_key_labels(df, small_graph_cap=0, hash_nodes=False) == want
 
 
 def test_line_dedup_first_occurrence_across_corpus(spark):

@@ -390,3 +390,32 @@ def test_fold_of_all_unique_delta_with_no_edges_completes(spark, tmp_path):
         recs = [json.loads(line) for line in f]
     assert [r["rows"] for r in recs if r["stage"] == "incr_edges"] == [0]
     assert [r["n"] for r in recs if r["stage"] == "clusters_bridged"] == [0]
+
+
+def test_delta_doc_bridging_two_old_clusters_joins_smaller_label(
+        spark, tmp_path):
+    """Labels are frozen across folds: a delta doc that near-matches
+    two old clusters cannot merge them. It joins the smaller old label
+    and the fold records one bridge (``clusters_bridged`` n=1) for the
+    next compaction to resolve."""
+    import json
+
+    # z is 114 distinct words; each old doc swaps 15 words at one end,
+    # so each shares 97 of 127 3-shingles with z (Jaccard 0.76) but
+    # only 82 of 142 with the other (0.58): both near z, not each other
+    words = [f"w{i}" for i in range(114)]
+    z = " ".join(words)
+    head = " ".join([f"h{i}" for i in range(15)] + words[15:])
+    tail = " ".join(words[:-15] + [f"t{i}" for i in range(15)])
+    cfg = DedupConfig()
+    cat = ParquetSnapshotCatalog(tmp_path / "cat")
+    fold_batch(spark.createDataFrame([("p2", head), ("p1", tail)], SCHEMA),
+               0, cat, cfg=cfg)
+    assert _clusters(spark, cat) == {"p1": "p1", "p2": "p2"}
+    s = fold_batch(spark.createDataFrame([("z1", z)], SCHEMA), 1, cat,
+                   cfg=cfg, lineage_dir=str(tmp_path / "lin"))
+    assert s["action"] == "increment"
+    assert _clusters(spark, cat) == {"p1": "p1", "p2": "p2", "z1": "p1"}
+    with open(tmp_path / "lin" / "batch-1.jsonl") as f:
+        recs = [json.loads(line) for line in f]
+    assert [r["n"] for r in recs if r["stage"] == "clusters_bridged"] == [1]

@@ -6,6 +6,7 @@ byte-identical-extraction determinism property
 import pyspark.sql.functions as F
 import pytest
 
+import oracles
 from acxspark.config import DEFAULT_CONFIG
 from acxspark.corpus import generate, to_spark
 from acxspark.plans.pipeline import extract_stage, run_pipeline
@@ -26,13 +27,13 @@ def result(spark, corpus):
     return res, clusters
 
 
-def test_containment_jvm_python_sa_agree(spark, corpus):
-    """All three containment impls — the default codegen
-    contains() path, the applyInPandas ``inner in outer`` path, and
-    the per-group suffix-array path — must emit exactly the same
-    edges on the planted containment fixtures (kind='contain') plus
-    negatives; and the default path's physical plan must contain NO
-    Python stage (that's the whole point of it)."""
+def test_containment_matches_oracles(spark, corpus):
+    """The codegen containment filter emits exactly the pairs both
+    oracles — CPython's ``inner in outer`` and the suffix-array binary
+    search — accept, on the planted containment fixtures
+    (kind='contain'), negatives, an inner text one char under and one
+    exactly at ``min_inner_chars`` (64), and an equal-length pair; and
+    its physical plan contains NO Python stage."""
     from acxspark.operators.verify import containment_edges
 
     web, tp, _ = to_spark(spark, corpus)
@@ -43,20 +44,29 @@ def test_containment_jvm_python_sa_agree(spark, corpus):
     # candidate pairs: the planted containment pairs + some non-pairs
     urls = [r["url"] for r in web.select("url").limit(20).collect()]
     negatives = list(zip(urls[:10], urls[10:20]))
-    cand = spark.createDataFrame(
-        [(a, b) for a, b in contain_truth + negatives], "id_a string, id_b string"
-    )
-    docs = web.select("url", "text")
-    jvm_df = containment_edges(cand, docs, "url")
-    jvm = {(r["id_a"], r["id_b"]) for r in jvm_df.collect()}
-    py = {(r["id_a"], r["id_b"]) for r in containment_edges(
-        cand, docs, "url", impl="python").collect()}
-    sa = {(r["id_a"], r["id_b"]) for r in containment_edges(
-        cand, docs, "url", impl="python", use_suffix_array=True).collect()}
-    assert jvm == py == sa
-    assert set(contain_truth) <= jvm  # planted pairs all detected
+    outer = "".join(f"w{i:03d} " for i in range(40))
+    edge = [("x/outer", outer), ("x/in63", outer[5:68]),
+            ("x/in64", outer[5:69]), ("x/same", outer)]
+    edge_pairs = [("x/in63", "x/outer"), ("x/in64", "x/outer"),
+                  ("x/outer", "x/same")]
+    docs = web.select("url", "text").unionByName(
+        spark.createDataFrame(edge, "url string, text string"))
+    pairs = contain_truth + negatives + edge_pairs
+    cand = spark.createDataFrame(pairs, "id_a string, id_b string")
+    got_df = containment_edges(cand, docs, "url")
+    got = {(r["id_a"], r["id_b"]) for r in got_df.collect()}
 
-    plan = jvm_df._jdf.queryExecution().executedPlan().toString()
+    text = {r["url"]: r["text"] for r in docs.collect()}
+    scan = {(a, b) for a, b in pairs
+            if oracles.contains_scan(text[a], text[b])}
+    sa = {(a, b) for a, b in pairs
+          if oracles.contains_suffix_array(text[a], text[b])}
+    assert got == scan == sa
+    assert set(contain_truth) <= got  # planted pairs all detected
+    assert ("x/in63", "x/outer") not in got
+    assert {("x/in64", "x/outer"), ("x/outer", "x/same")} <= got
+
+    plan = got_df._jdf.queryExecution().executedPlan().toString()
     for marker in ("FlatMapGroupsInPandas", "MapInPandas", "ArrowEvalPython",
                    "BatchEvalPython"):
         assert marker not in plan, marker
