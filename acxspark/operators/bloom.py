@@ -1,23 +1,27 @@
-"""Sharded Bloom-filter membership artifact for incremental dedup.
+"""Sharded Bloom-filter membership artifact: a library block.
 
-The incremental plan (plans/incremental.py) never shuffles the old
-corpus, but its exact tier still SCANS the snapshot's (url, text_sha)
-columns once per increment — O(|corpus|) I/O forever. This module
-builds a once-per-corpus membership artifact that answers "was this
-key ever committed?" in O(|delta|) with NO old-side access at all for
-the (overwhelming) definitely-new majority, and a partition-prunable
-confirm lookup for the fpp-sized maybe set (reference parity: the
-uniqueness-at-write mutex probe, src/dedupe.cpp's seen-set, re-scaled
-so the seen-set never has to fit one machine).
+Answers "was this key ever committed?" in O(|delta|) with NO old-side
+access at all for the definitely-new majority, and a confirm lookup
+for the fpp-sized maybe set (reference parity: the uniqueness-at-write
+mutex probe, src/dedupe.cpp's seen-set, re-scaled so the seen-set
+never has to fit one machine). Its one caller in the package is the
+driver-contract query ``bloom_new_docs`` (queries.py).
+
+Neither plan uses it: the incremental fold's exact-tier sha probe
+(plans/incremental.py) scans the whole old ``text_sha`` column either
+way, so a bloom gate in front of it would only shrink the broadcast
+side while adding a Python check, a delta build and a merge to every
+fold. It pays only beside a snapshot layout that lets the maybe-set
+confirm prune the old scan (a sha table bucketed with
+io_paths.write_bucketed_by_key).
 
 Design (all public building blocks):
 - the key space is hash-SHARDED: shard = xxhash64(key, 2) mod
   n_shards. Each shard owns an independent Bloom bitmap sized for
   n/n_shards items, so no single bitmap ever has to fit in one task's
-  memory at 10^12 keys — pick n_shards from
-  :func:`shards_for` (default ~4M items/shard → ~5 MB bitmaps at 10
-  bits/item; 10^12 keys = 250k shard rows, ~1.2 TB total, stored as
-  an ordinary parquet table, never collected or broadcast).
+  memory at 10^12 keys — e.g. ~4M items/shard gives ~5 MB bitmaps at
+  10 bits/item; 10^12 keys = 250k shard rows, ~1.2 TB total, stored as
+  an ordinary parquet table, never collected or broadcast.
 - ONE 64-bit key hash rides the wire per row; the k probe positions
   derive from its two 32-bit halves by double hashing
   (Kirsch–Mitzenmacher 2006: h_i = lo + i·hi mod m preserves the
@@ -60,14 +64,8 @@ _BLOOM_SCHEMA = T.StructType(
 
 # Per-shard bitmaps must stay < 2^32 bits (512 MB) for the 32-bit
 # double-hashing halves to cover every position — far above any sane
-# shard sizing (shards_for targets ~5 MB).
+# shard sizing (~5 MB at 4M items/shard).
 _MAX_SHARD_BITS = 1 << 32
-
-
-def shards_for(n_items: int, items_per_shard: int = 4_000_000) -> int:
-    """Shard count that keeps each build group (16 B × items) and each
-    bitmap (bits_per_item × items / 8) comfortably inside one task."""
-    return max(1, -(-n_items // items_per_shard))
 
 
 def _positions(h: np.ndarray, k: int, m: int) -> np.ndarray:
@@ -112,8 +110,8 @@ def build_bloom(df: DataFrame, key_col: str, n_shards: int,
                       ) // 64 * 64 + 64)
     if m >= _MAX_SHARD_BITS:
         raise ValueError(
-            f"shard bitmap {m} bits >= 2^32: raise n_shards "
-            f"(shards_for({expected_items}))"
+            f"shard bitmap {m} bits >= 2^32: raise n_shards so each "
+            f"shard's bitmap stays below it"
         )
 
     def fill(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -257,15 +255,14 @@ def bloom_params(bloom: DataFrame,
 
 def merge_blooms(a: DataFrame, b: DataFrame,
                  geometry: tuple[int, int] | None = None) -> DataFrame:
-    """Shard-wise OR of two same-geometry artifacts — how an
-    incremental run folds its delta's keys into the committed
-    membership state at O(|delta shards|) cost (never a corpus
-    rebuild). Full-outer on shard so one-sided shards pass through;
-    the OR is an Arrow-batched pandas_udf over the two bitmap columns
-    (one row per shard, so the batch is a handful of MB-sized
-    buffers, never per-key work). An EMPTY side (all-refetch delta)
-    is geometry-compatible with anything and the merge degenerates to
-    the other side's rows.
+    """Shard-wise OR of two same-geometry artifacts — folds a delta's
+    keys into a committed membership artifact at O(|delta shards|)
+    cost (never a corpus rebuild). Full-outer on shard so one-sided
+    shards pass through; the OR is an Arrow-batched pandas_udf over
+    the two bitmap columns (one row per shard, so the batch is a
+    handful of MB-sized buffers, never per-key work). An EMPTY side
+    (all-refetch delta) is geometry-compatible with anything and the
+    merge degenerates to the other side's rows.
 
     ``geometry``: the (m_bits, k) both sides are known to share — a
     delta built by :func:`build_bloom` with the artifact's own

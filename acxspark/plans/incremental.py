@@ -21,10 +21,18 @@ text_sha) and `clusters` snapshots to the catalog
     → snapshots updated (signatures ∪ new, clusters ∪ new) so the
       NEXT increment sees this one.
 
-Scale: the per-increment cost is O(|new| + matched-band rows of old),
-never O(|corpus|²) — the old side is touched only through two
-equi-joins (sha, band_key) that a real deployment serves from the
-bucketed/partitioned snapshot tables.
+Scale: no old×old pair is ever formed, so the quadratic term the full
+run paid stays paid, and every new×old join broadcasts the delta
+side. The fold is still O(|corpus|) in three places:
+- the exact tier scans the whole old `text_sha` column (the
+  broadcast probe prunes nothing on the old scan);
+- the minhash tier recomputes 32 band keys from every old `minhash`;
+- label resolution takes a corpus-wide `distinct()` over the old
+  cluster labels, and the commit rewrites the full `signatures` and
+  `clusters` snapshots.
+A fold therefore costs less than a full re-run by a constant factor,
+not by |corpus|/|delta|; at sizes where that matters, run the full
+pipeline as a compaction.
 
 Deliberate semantic deltas from a monolithic full run, documented:
 - the containment tier (page-in-page) does not run across increments
@@ -180,39 +188,20 @@ def run_incremental(new_web: DataFrame, catalog,
     old_clusters = old_clusters.join(batch_urls, "url", "left_anti")
 
     # ---- exact tier vs old ------------------------------------------
-    # With a committed `sha_bloom` artifact (operators/bloom.py,
-    # written by run_pipeline alongside the signatures snapshot), the
-    # delta's definitely-new shas — the crawl-increment majority —
-    # are dropped from the probe BEFORE the old side is touched: only
-    # the bloom-maybe set (true re-fetches + fpp) rides the broadcast
-    # into the old scan, which a bucketed/partition-pruned snapshot
-    # then serves as point lookups instead of a corpus pass. Zero
-    # false negatives ⇒ exact_cross is IDENTICAL with or without the
-    # gate (pytest-pinned). Catalogs predating the artifact skip it.
-    exact_probe = new_hashed
-    bloom = None
-    if catalog.has("sha_bloom"):
-        from acxspark.operators.bloom import might_contain
-
-        bloom_ns = int(catalog.latest_meta("sha_bloom")["n_shards"])
-        bloom = catalog.read(spark, "sha_bloom").persist()
-        caches.append(bloom)
-        maybe = lin.observe(
-            might_contain(new_hashed, "text_sha", bloom, bloom_ns)
-            .filter(F.col("might_contain"))
-            .select("text_sha"),
-            "incr_bloom_maybe",
-        )
-        exact_probe = new_hashed.join(F.broadcast(maybe), "text_sha")
-    # BROADCAST the (gated) delta hash set into the old scan (sha
-    # column only) — map-side, the old side never shuffles, the scan
-    # reads two slim columns. Materialised: consumed by the
-    # matched-edge union AND the re-fetch signature skip below.
+    # BROADCAST the delta's full hash set into the old scan (sha
+    # column only) — map-side, the old side never shuffles, but the
+    # scan still reads the WHOLE old (url, text_sha) projection: the
+    # plain parquet snapshot has no layout the probe could prune by,
+    # so this is one O(|corpus|) pass of two slim columns per fold. A
+    # membership prefilter on the delta side (operators/bloom.py)
+    # would only shrink the broadcast, not this scan, so none runs.
+    # Materialised: consumed by the matched-edge union AND the
+    # re-fetch signature skip below.
     exact_cross = _materialise(
         old_sigs.select(F.col("url").alias("id_b"), "text_sha")
         .join(
             F.broadcast(
-                exact_probe.select(F.col("url").alias("id_a"), "text_sha")
+                new_hashed.select(F.col("url").alias("id_a"), "text_sha")
             ),
             "text_sha",
         )
@@ -286,8 +275,9 @@ def run_incremental(new_web: DataFrame, catalog,
     # ---- minhash tier vs old ---------------------------------------
     # The incremental contract is delta ≪ corpus, so the delta's band
     # keys (|delta| × 32 longs) BROADCAST and the old band stream is a
-    # map-side pruned scan (url + minhash columns) — the corpus is
-    # never shuffled, mirroring the exact tier above. For a delta too
+    # map-side scan of the (url, minhash) columns of EVERY old row,
+    # whose band keys are recomputed here — the corpus is never
+    # shuffled, mirroring the exact tier above. For a delta too
     # large to broadcast, run the full pipeline instead; the crossover
     # is roughly where |delta| stops fitting a broadcast anyway.
     nb = _materialise(
@@ -469,34 +459,12 @@ def run_incremental(new_web: DataFrame, catalog,
         # exclude the batch's urls (the replay anti-join above), so a
         # re-applied batch's committed rows are replaced, and since its
         # assignments are deterministic (frozen base labels +
-        # exact-match-to-self) the replacement is row-identical. The
-        # bloom merge below is idempotent by algebra (OR-ing the same
-        # delta twice is the same bits).
+        # exact-match-to-self) the replacement is row-identical.
         meta = {"incremental": True, **(snapshot_meta or {})}
         catalog.write("signatures", old_sigs.unionByName(new_sigs),
                       meta=meta)
         catalog.write("clusters", old_clusters.unionByName(assignments),
                       meta=meta)
-        if bloom is not None:
-            # fold ONLY the delta's newly-signed shas into the
-            # membership artifact: a same-geometry delta bloom OR-ed
-            # shard-wise — O(|delta shards|), never a corpus rebuild.
-            from acxspark.operators.bloom import (
-                bloom_params,
-                build_bloom,
-                merge_blooms,
-            )
-
-            geometry = bloom_params(bloom)
-            delta = build_bloom(
-                new_sigs.select("text_sha"), "text_sha",
-                n_shards=bloom_ns, m_bits=geometry[0], k=geometry[1],
-            )
-            catalog.write(
-                "sha_bloom",
-                merge_blooms(bloom, delta, geometry=geometry),
-                meta={**meta, "n_shards": bloom_ns},
-            )
 
     return IncrementalResult(assignments=assignments, lineage=lin,
                              caches=caches)

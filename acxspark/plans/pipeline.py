@@ -267,23 +267,6 @@ def run_pipeline(web: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG,
                                               "h long"),
                         meta=wmeta,
                     )
-                # membership artifact over the committed sha set: lets
-                # every later INCREMENT (plans/incremental.py) answer
-                # "was this text ever committed?" without the once-per-
-                # increment corpus scan (operators/bloom.py; sized by
-                # n_docs — an overcount vs the rep-only sha set, which
-                # only lowers the fpp). Committed alongside signatures so
-                # the two snapshots can never drift apart silently: the
-                # same stamp guards both.
-                from acxspark.operators.bloom import build_bloom, shards_for
-
-                ns = shards_for(stamp["n_docs"])
-                catalog.write(
-                    "sha_bloom",
-                    build_bloom(sigs.select("text_sha"), "text_sha",
-                                n_shards=ns, expected_items=stamp["n_docs"]),
-                    meta={**wmeta, "n_shards": ns},
-                )
             sigs = sigs.persist()
         caches.append(sigs)
 

@@ -2,8 +2,9 @@
 the committed dedup state, exactly-once.
 
 The batch plans already carry the heavy machinery — ``run_pipeline``
-commits `signatures`/`edges`/`clusters`/`sha_bloom` snapshots and
-``run_incremental`` folds a delta against them at O(|delta|) cost
+commits `signatures`/`edges`/`clusters` snapshots and
+``run_incremental`` folds a delta against them without re-pairing the
+old corpus, though it still scans and rewrites the old snapshots
 (plans/incremental.py). This module is the Structured Streaming
 wrapper that turns a continuous crawl feed into a sequence of those
 increments (north_rule: resumable from checkpoint with per-partition

@@ -1,6 +1,7 @@
-"""Sharded Bloom membership artifact (operators/bloom.py).
+"""Sharded Bloom membership artifact (operators/bloom.py), and the
+incremental fold's exact tier, which runs without it.
 
-Pins the three properties the incremental-dedup use depends on:
+Pins the three properties the `bloom_new_docs` query depends on:
 zero false negatives (exactness of genuinely_new_rows), an fpp in the
 theoretical ballpark (the artifact actually prunes), and bitmap
 determinism across partitionings (the artifact is a committable
@@ -13,7 +14,6 @@ from acxspark.operators.bloom import (
     build_bloom,
     genuinely_new_rows,
     might_contain,
-    shards_for,
 )
 
 N_OLD = 3_000
@@ -122,13 +122,6 @@ def test_oversized_shard_bitmap_raises(spark):
                     expected_items=1 << 40, bits_per_item=10)
 
 
-def test_shards_for():
-    assert shards_for(1) == 1
-    assert shards_for(4_000_000) == 1
-    assert shards_for(4_000_001) == 2
-    assert shards_for(10**12) == 250_000
-
-
 def test_merge_blooms_equals_joint_build(frames, spark):
     from acxspark.operators.bloom import bloom_params, build_bloom, merge_blooms
 
@@ -186,60 +179,83 @@ def _incremental_fixture_frames(spark):
     return A, B
 
 
-def test_incremental_bloom_gate_is_transparent(spark, tmp_path):
-    """run_incremental over a catalog WITH the sha_bloom artifact must
-    assign identically to one without it (the gate only prunes the
-    old-side probe — zero false negatives make it invisible), while
-    exact re-fetches skip the signature stage entirely."""
-    import shutil
-
+def _committed_base(spark, root):
     from acxspark.catalog import ParquetSnapshotCatalog
     from acxspark.config import DedupConfig
-    from acxspark.plans.incremental import run_incremental
     from acxspark.plans.pipeline import run_pipeline
 
-    A, B = _incremental_fixture_frames(spark)
+    A, _ = _incremental_fixture_frames(spark)
+    cat = ParquetSnapshotCatalog(root)
+    run_pipeline(A, cfg=DedupConfig(), catalog=cat).release()
+    return cat
 
-    def run(with_bloom: bool):
-        cat = ParquetSnapshotCatalog(
-            tmp_path / ("with" if with_bloom else "without")
-        )
-        run_pipeline(A, cfg=DedupConfig(), catalog=cat).release()
-        assert cat.has("sha_bloom")
-        if not with_bloom:
-            shutil.rmtree(cat.root / "sha_bloom")
-        inc = run_incremental(B, cat, cfg=DedupConfig())
-        got = {r["url"]: r["cluster_id"] for r in inc.assignments.collect()}
-        for df in inc.caches:
-            df.unpersist()
-        return got, inc.lineage, cat
 
-    got_b, lin_b, cat_b = run(True)
-    got_p, _, _ = run(False)
-    assert got_b == got_p
-    assert got_b["b1"] == "a1" and got_b["b2"] == "a3"
+def _fold(cat, batch):
+    from acxspark.config import DedupConfig
+    from acxspark.plans.incremental import run_incremental
+
+    inc = run_incremental(batch, cat, cfg=DedupConfig())
+    got = {r["url"]: r["cluster_id"] for r in inc.assignments.collect()}
+    for df in inc.caches:
+        df.unpersist()
+    return got, inc.lineage
+
+
+def test_incremental_refetches_skip_signing(spark, tmp_path):
+    """Exact re-fetches of committed pages join their old cluster
+    through the sha probe and skip the signature stage entirely; the
+    snapshot stays reps-only across two increments."""
+    _, B = _incremental_fixture_frames(spark)
+    cat = _committed_base(spark, tmp_path / "cat")
+    got, lin = _fold(cat, B)
+    assert got["b1"] == "a1" and got["b2"] == "a3"
     # the two re-fetches were never signed; the other three were
-    assert dict(lin_b.observations)["incr_signed"].get["rows"] == 3
+    assert dict(lin.observations)["incr_signed"].get["rows"] == 3
     # and the snapshot stayed reps-only: no second row for a1/a3's shas
-    sigs = cat_b.read(spark, "signatures")
+    sigs = cat.read(spark, "signatures")
     assert sigs.groupBy("text_sha").count().filter("count > 1").count() == 0
 
-    # second increment: a re-fetch of FIRST-increment content must hit
-    # the MERGED bloom and keep its frozen label
+    # second increment: a re-fetch of FIRST-increment content keeps its
+    # frozen label
     C = spark.createDataFrame(
         [("c1", "brand new cluster of words " * 8)],  # re-fetch of b4
         "url string, text string",
     )
-    n_sigs_before = cat_b.read(spark, "signatures").count()
-    inc2 = run_incremental(C, cat_b, cfg=DedupConfig())
-    got2 = {r["url"]: r["cluster_id"] for r in inc2.assignments.collect()}
+    n_sigs_before = cat.read(spark, "signatures").count()
+    got2, _ = _fold(cat, C)
     assert got2["c1"] == "b4"
     # the re-fetch was never signed: the snapshot gained no rows (the
     # incr_signed Observation can't be .get here — an all-empty
     # observed subtree may never fire metrics; Lineage.flush tolerates
     # that, so assert on the committed state instead)
-    assert cat_b.read(spark, "signatures").count() == n_sigs_before
-    # and the merged bloom survived the empty delta
-    assert cat_b.read(spark, "sha_bloom").count() >= 1
-    for df in inc2.caches:
-        df.unpersist()
+    assert cat.read(spark, "signatures").count() == n_sigs_before
+
+
+def test_incremental_ignores_stale_sha_bloom_table(spark, tmp_path):
+    """A catalog committed by older code also holds a `sha_bloom`
+    table. The fold neither reads nor rewrites it: assignments match a
+    fold over the same catalog without it, and its manifest is left
+    as it was."""
+    import shutil
+
+    from acxspark.catalog import ParquetSnapshotCatalog
+
+    _, B = _incremental_fixture_frames(spark)
+    plain = _committed_base(spark, tmp_path / "plain")
+    assert not plain.has("sha_bloom")
+    shutil.copytree(plain.root, tmp_path / "stale")
+    stale = ParquetSnapshotCatalog(tmp_path / "stale")
+    n_docs = plain.latest_meta("signatures")["n_docs"]
+    stale.write(
+        "sha_bloom",
+        build_bloom(stale.read(spark, "signatures").select("text_sha"),
+                    "text_sha", n_shards=1, expected_items=n_docs),
+        meta={"n_shards": 1},
+    )
+    manifest = stale.latest_meta("sha_bloom")
+
+    got_plain, _ = _fold(plain, B)
+    got_stale, _ = _fold(stale, B)
+    assert got_stale == got_plain
+    assert stale.latest_meta("sha_bloom") == manifest
+    assert stale.latest_meta("clusters")["version"] == 1

@@ -328,8 +328,9 @@ def test_replay_with_unassignable_docs_and_complete_outdir_is_plain_skip(
 
 #: Spark jobs one increment fold of INC1 may run (a job group around
 #: fold_batch). The fold with nested persist() intermediates and
-#: separate bookkeeping actions ran 151 here; the flattened one 74.
-FOLD_JOB_BUDGET = 100
+#: separate bookkeeping actions ran 151 here; the flattened one 74;
+#: without the sha-bloom gate 61 (the budget keeps ~25% headroom).
+FOLD_JOB_BUDGET = 76
 
 
 def _persistent_rdd_ids(sc) -> set[int]:
