@@ -31,8 +31,7 @@ class DedupConfig:
     num_perm: int = 128
     lsh_bands: int = 32
     lsh_rows: int = 4             # num_perm == lsh_bands * lsh_rows
-    # SimHash
-    simhash_bits: int = 64
+    # SimHash (64-bit fingerprints: operators/signatures.py)
     simhash_tables: int = 4       # bit-chunk tables for Hamming-ball probe
     simhash_max_hamming: int = 3  # pigeonhole: d < tables ⇒ one chunk equal
     # verification. τ is on SHINGLE-level Jaccard: a 5% token-edit dup

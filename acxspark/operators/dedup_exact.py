@@ -9,11 +9,10 @@ Parity with the reference's three exact tiers:
    (partition by key order by seq) == 1 — NOT bare dropDuplicates,
    whose winner is partition-placement-dependent.
 
-2. ``exact_text_dedup``: content identity via sha2(text, 256) — the
-   hash-groupBy exact tier of the web pipeline. Group sizes are
-   bounded (dup cluster sizes), so the window over the hash key is
-   safe at scale; the heavy text column never shuffles (only hash +
-   id + seq do, then a semi-join back).
+2. ``exact_star_edges``: content identity via sha2(text, 256) — the
+   exact tier of the web pipeline and of the crawl fold, as star edges
+   from each hash group's min url. Only (url, hash) shuffles; the
+   text column never does.
 
 3. ``or_key_components``: reference import dedup treats email-dup OR
    phone-dup as the same identity (src/storage.cpp:562-570) — a
@@ -57,32 +56,30 @@ def first_wins(df: DataFrame, key_col: str, seq_col: str) -> DataFrame:
     return winners.unionByName(null_key)
 
 
-def exact_text_dedup(df: DataFrame, id_col: str, text_col: str = "text",
-                     seq_col: str | None = None) -> DataFrame:
-    """Survivors of content-hash dedup; winner = min seq (or min id).
-
-    Shuffle carries only (hash, id, seq); survivors re-join the full
-    rows by id (semi join) so 100 TB of text bytes move zero times.
-    """
-    order = seq_col or id_col
-    slim = df.select(F.col(id_col), F.col(order).alias("_ord"),
-                     F.sha2(F.col(text_col), 256).alias("_h"))
-    w = Window.partitionBy("_h").orderBy(F.col("_ord").asc(), F.col(id_col).asc())
-    winners = slim.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") == 1
-    ).select(id_col)
-    return df.join(winners, id_col, "left_semi")
+def sha_groups(hashed: DataFrame) -> DataFrame:
+    """(text_sha, min_url, n): one row per content hash of ``hashed``
+    (url, text_sha) — its first-wins representative and its size."""
+    return hashed.groupBy("text_sha").agg(
+        F.min("url").alias("min_url"), F.count("*").alias("n")
+    )
 
 
-def exact_dup_groups(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
-    """(hash, n_docs, doc_ids) for groups with >1 member — the
-    hash-groupBy exact-dup report."""
+def exact_star_edges(hashed: DataFrame,
+                     groups: DataFrame | None = None) -> DataFrame:
+    """Exact-content edges (id_a = min url of a content hash, id_b =
+    every other url with it) over ``hashed`` (url, text_sha) — the
+    exact tier of the batch plan and the crawl fold. ``groups``:
+    ``sha_groups(hashed)`` when the caller reuses it.
+
+    Stars by groupBy-min + join, not cliques: a 10^6-copy page costs
+    10^6 edges, not 10^12, and no group is collected into one
+    aggregation buffer. CC labels a star as it would the clique."""
+    if groups is None:
+        groups = sha_groups(hashed)
     return (
-        df.select(F.sha2(F.col(text_col), 256).alias("text_sha"), F.col(id_col))
-        .groupBy("text_sha")
-        .agg(F.count("*").alias("n_docs"),
-             F.sort_array(F.collect_list(id_col)).alias("doc_ids"))
-        .filter(F.col("n_docs") > 1)
+        hashed.join(groups.filter(F.col("n") > 1), "text_sha")
+        .filter(F.col("url") != F.col("min_url"))
+        .select(F.col("min_url").alias("id_a"), F.col("url").alias("id_b"))
     )
 
 

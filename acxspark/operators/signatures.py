@@ -30,6 +30,7 @@ Layout per batch (R rows, M total tokens, S total shingles):
 
 from __future__ import annotations
 
+import sys
 from functools import lru_cache
 
 import numpy as np
@@ -349,7 +350,7 @@ def hot_shingle_hashes(df: DataFrame, text_col: str,
     the same threshold can be estimated from a corpus sample; exact
     counting is used here because it is also the oracle-checkable
     form (ngram.py max_doc_freq does the identical cut SQL-side)."""
-    mod = getattr(cfg, "df_sample_mod", 1)
+    mod = cfg.df_sample_mod
     if mod > 1:
         # deterministic content-keyed sample (see config.df_sample_mod):
         # identical at every parallelism level, unlike F.sample
@@ -378,6 +379,56 @@ def hot_shingle_hashes(df: DataFrame, text_col: str,
     return np.sort(np.array([r["g"] for r in hot], dtype=np.int64))
 
 
+# ---- drop-set store: the one owner of the committed drop set and its
+# stamp rule. A base commit (plans/pipeline.py) commits the set it
+# signed with; every crawl fold (plans/incremental.py) MUST sign its
+# delta with it: a delta-derived set cuts a different gram population,
+# and signatures over different gram sets neither band-collide nor
+# Jaccard-compare. The set is trusted only while its stamp equals the
+# base stamp below.
+_DROP_SET_TABLE = "hot_shingles"
+_STAMP_KEYS = ("config", "n_docs", "input_hash")
+
+
+def base_stamp(catalog) -> dict:
+    """Stamp of the base commit the committed signatures descend from:
+    a base commit's top-level stamp, or the ``base`` a fold carried
+    forward. Folds commit ``{"base": base_stamp(catalog)}``, never
+    top-level stamp keys, so the batch plan's resume never takes a
+    folded snapshot for a fresh base."""
+    m = catalog.latest_meta("signatures")
+    return m.get("base") or {k: m.get(k) for k in _STAMP_KEYS}
+
+
+def commit_drop_set(catalog, spark, hot: np.ndarray, meta: dict) -> None:
+    """Commit a base run's drop set under its signatures' stamp. Call
+    AFTER the signatures commit: a crash during the signature scan
+    must not leave a new-stamp set beside old signatures."""
+    catalog.write(_DROP_SET_TABLE, spark.createDataFrame(
+        [(int(x),) for x in hot], "h long"), meta=meta)
+
+
+def committed_drop_set(catalog, spark, cfg: DedupConfig,
+                       base: dict) -> np.ndarray | None:
+    """The drop set a fold signs with: None without the cut; else the
+    committed set if its stamp matches ``base``, or None after a
+    warning (a stale set would diverge from the committed signatures;
+    ``with_signatures`` then derives one from the delta)."""
+    if cfg.shingle_max_doc_freq is None:
+        return None
+    if catalog.has(_DROP_SET_TABLE):
+        hm = catalog.latest_meta(_DROP_SET_TABLE)
+        if all(hm.get(k) == base.get(k) for k in _STAMP_KEYS):
+            rows = catalog.read(spark, _DROP_SET_TABLE).collect()
+            return np.sort(np.array([r["h"] for r in rows], dtype=np.int64))
+    print("acxspark.incremental: shingle_max_doc_freq set but no committed "
+          "hot_shingles snapshot matches the signatures stamp — falling "
+          "back to a DELTA-derived drop set, which may diverge from the "
+          "base signatures (re-run the full pipeline with a catalog to "
+          "commit a coherent one)", file=sys.stderr)
+    return None
+
+
 def with_signatures(df: DataFrame, text_col: str = "text",
                     cfg: DedupConfig = DEFAULT_CONFIG,
                     id_col: str = "url",
@@ -394,13 +445,9 @@ def with_signatures(df: DataFrame, text_col: str = "text",
     corpus size (the mid-size quadratic candidate ramp).
 
     ``hot_hashes``: a PRE-COMPUTED sorted drop set to use instead of
-    deriving one from ``df``. Incremental runs MUST pass the base
-    corpus's committed set (plans/incremental.py): a delta-derived set
-    diverges from the one the committed signatures were cut with, and
-    signatures computed over different gram sets neither band-collide
-    nor Jaccard-compare correctly."""
-    mdf = getattr(cfg, "shingle_max_doc_freq", None)
-    if mdf is None:
+    deriving one from ``df`` — a fold passes the base's committed set
+    (:func:`committed_drop_set`)."""
+    if cfg.shingle_max_doc_freq is None:
         sig = signature_col(F.col(text_col), cfg)
     else:
         drop = hot_hashes if hot_hashes is not None \

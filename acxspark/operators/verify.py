@@ -4,9 +4,10 @@ both whole-stage codegen.
 Stage 4 (north_rule: "per-partition suffix-array exact-substring
 verification"). Candidate pairs from LSH/SimHash are re-checked:
 
-- ``verified_edges``: exact shingle-set Jaccard with
-  array_intersect/array_union — whole-stage codegen, no UDF; keeps
-  pairs with J >= cfg.jaccard_threshold.
+- ``exact_jaccard_edges``: exact shingle-set Jaccard
+  (``shingle_jaccard``: array_intersect/array_union sizes) —
+  whole-stage codegen, no UDF; keeps pairs with
+  J >= cfg.jaccard_threshold.
 - ``containment_edges``: detects page-inside-page duplication that
   Jaccard misses when the outer page is much larger: a codegen
   ``contains(outer, inner)`` filter behind a 64-char prefix probe —
@@ -23,12 +24,22 @@ suffix-array check as an oracle the codegen path is pinned against.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from acxspark.config import DEFAULT_CONFIG, DedupConfig
 
 # ---------------------------------------------------------------- jaccard
+
+
+def shingle_jaccard(sh_a: str, sh_b: str) -> Column:
+    """Exact Jaccard of two shingle-array columns (distinct elements;
+    an empty union reads 0) — the engine's one Jaccard expression:
+    batch verify, the fold's new×old check and the streaming flagger
+    each filter ``>= τ`` on it."""
+    inter = F.size(F.array_intersect(sh_a, sh_b))
+    union = F.size(F.array_union(sh_a, sh_b))
+    return inter / F.greatest(union, F.lit(1))
 
 
 def exact_jaccard_edges(pairs: DataFrame, docs_with_shingles: DataFrame,
@@ -59,11 +70,9 @@ def exact_jaccard_edges(pairs: DataFrame, docs_with_shingles: DataFrame,
     sh = sh.join(pair_ids, id_col, "left_semi")
     a = sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
     b = sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
     return (
         pairs.join(a, "id_a").join(b, "id_b")
-        .withColumn("jaccard", inter / F.greatest(union, F.lit(1)))
+        .withColumn("jaccard", shingle_jaccard("sh_a", "sh_b"))
         .filter(F.col("jaccard") >= cfg.jaccard_threshold)
         .select("id_a", "id_b", "jaccard")
     )

@@ -54,47 +54,24 @@ from pyspark.sql import functions as F
 from acxspark.config import DEFAULT_CONFIG, DedupConfig
 from acxspark.metrics import Lineage
 from acxspark.operators.cc import connected_components
+from acxspark.operators.dedup_exact import exact_star_edges
 from acxspark.operators.lsh import band_keys, candidate_pairs
-from acxspark.operators.signatures import with_signatures
-from acxspark.operators.verify import exact_jaccard_edges
+from acxspark.operators.signatures import (
+    base_stamp, committed_drop_set, with_signatures,
+)
+from acxspark.operators.verify import exact_jaccard_edges, shingle_jaccard
+from acxspark.plans.blocks import Releasable, materialise
 
 
 @dataclass
-class IncrementalResult:
+class IncrementalResult(Releasable):
     assignments: DataFrame   # url, cluster_id — NEW docs only
     lineage: Lineage
-    # release handles (``unpersist()``) for every persisted or
-    # checkpointed intermediate. The assignments plan reads the
-    # checkpoint blocks, so release only after consuming it: a
-    # released block cannot be recomputed.
+    # release handles for every persisted or checkpointed
+    # intermediate. The assignments plan reads the checkpoint blocks,
+    # so release() only after consuming it: a released block cannot
+    # be recomputed.
     caches: list
-
-
-class _CheckpointBlocks:
-    """``unpersist()`` handle for the blocks of an eager
-    localCheckpoint, so the ``caches`` contract releases them too.
-    ``DataFrame.unpersist`` does not reach them: the checkpointed RDD
-    backs the frame's LogicalRDD leaf, not a cache-manager entry."""
-
-    def __init__(self, df: DataFrame):
-        self._sc = df.sparkSession.sparkContext._jsc.sc()
-        self._rdd_id = df._jdf.queryExecution().logical().rdd().id()
-
-    def unpersist(self, blocking: bool = False) -> None:
-        # SparkContext.unpersistRDD, not RDD.unpersist: the same block
-        # removal without a lineage-truncated warning per checkpoint
-        self._sc.unpersistRDD(self._rdd_id, blocking)
-
-
-def _materialise(df: DataFrame, caches: list) -> DataFrame:
-    """Eager localCheckpoint: one job computes ``df`` into executor
-    blocks and every later query plans against the LogicalRDD leaf
-    instead of re-analysing (and, for broadcast subtrees, re-running)
-    the nested tree beneath it. Observations attached below fire in
-    that job."""
-    cp = df.localCheckpoint(eager=True)
-    caches.append(_CheckpointBlocks(cp))
-    return cp
 
 
 def _cross_jaccard_edges(pairs: DataFrame, new_sigs: DataFrame,
@@ -114,11 +91,9 @@ def _cross_jaccard_edges(pairs: DataFrame, new_sigs: DataFrame,
                         F.col("shingles").alias("sh_b"))
         .join(F.broadcast(pairs.select("id_b")), "id_b", "left_semi")
     )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
     return (
         pairs.join(a, "id_a").join(b, "id_b")
-        .withColumn("jaccard", inter / F.greatest(union, F.lit(1)))
+        .withColumn("jaccard", shingle_jaccard("sh_a", "sh_b"))
         .filter(F.col("jaccard") >= cfg.jaccard_threshold)
         .select("id_a", "id_b")
     )
@@ -128,7 +103,6 @@ def run_incremental(new_web: DataFrame, catalog,
                     cfg: DedupConfig = DEFAULT_CONFIG,
                     text_col: str = "text",
                     lineage_path: str | None = None,
-                    update_snapshots: bool = True,
                     snapshot_meta: dict | None = None) -> IncrementalResult:
     """Assign every NEW doc a cluster id against the committed state.
 
@@ -145,7 +119,8 @@ def run_incremental(new_web: DataFrame, catalog,
     exactly-once guard).
 
     The delta-side intermediates are eager localCheckpoints
-    (:func:`_materialise`), released through ``caches``. They live in
+    (:func:`~acxspark.plans.blocks.materialise`), dropped by
+    ``release()``. They live in
     executor blocks only: a lost block fails this run before the
     clusters commit stamps the batch, and the streaming ledger replays
     the whole batch (the idempotent slow path above).
@@ -161,11 +136,14 @@ def run_incremental(new_web: DataFrame, catalog,
     # re-run before this + the broadcast-delta joins below)
     old_sigs = catalog.read(spark, "signatures")
     old_clusters = catalog.read(spark, "clusters")
+    # read before this fold recommits the snapshots: gates the
+    # committed drop set and rides this fold's commits forward
+    base = base_stamp(catalog)
 
     # the delta, hashed once: every tier below reads url/text/text_sha
     # from these blocks (text_sha matches the snapshot schema, so the
     # signatures union below stays aligned)
-    new_docs = _materialise(lin.observe(
+    new_docs = materialise(lin.observe(
         new_web.filter(F.length(text_col) <= cfg.max_text_bytes).select(
             "url", text_col, F.sha2(F.col(text_col), 256).alias("text_sha")
         ),
@@ -197,7 +175,7 @@ def run_incremental(new_web: DataFrame, catalog,
     # would only shrink the broadcast, not this scan, so none runs.
     # Materialised: consumed by the matched-edge union AND the
     # re-fetch signature skip below.
-    exact_cross = _materialise(
+    exact_cross = materialise(
         old_sigs.select(F.col("url").alias("id_b"), "text_sha")
         .join(
             F.broadcast(
@@ -226,48 +204,11 @@ def run_incremental(new_web: DataFrame, catalog,
         new_docs.join(F.broadcast(refetch_urls), "url", "left_anti"),
         "incr_signed",
     )
-    drop_set = None
-    if getattr(cfg, "shingle_max_doc_freq", None) is not None:
-        # the delta MUST be signed with the BASE corpus's committed
-        # drop set: a delta-derived set cuts a different gram
-        # population, and signatures over different gram sets neither
-        # band-collide nor Jaccard-compare against the snapshot
-        import sys
-
-        import numpy as np
-
-        # coherence gate: the drop set is only trustworthy when its
-        # stamp matches the signatures snapshot it was derived with —
-        # a set left behind by an older/aborted run would diverge from
-        # the committed signatures, the exact drift this path prevents
-        coherent = False
-        if catalog.has("hot_shingles"):
-            hm = catalog.latest_meta("hot_shingles")
-            sm = catalog.latest_meta("signatures")
-            coherent = all(
-                hm.get(k) == sm.get(k)
-                for k in ("config", "n_docs", "input_hash")
-            )
-        if coherent:
-            drop_set = np.sort(np.array(
-                [r["h"] for r in
-                 catalog.read(spark, "hot_shingles").collect()],
-                dtype=np.int64,
-            ))
-        else:
-            print(
-                "acxspark.incremental: shingle_max_doc_freq set but no "
-                "committed hot_shingles snapshot matches the "
-                "signatures stamp — falling back to a DELTA-derived "
-                "drop set, which may diverge from the base signatures "
-                "(re-run the full pipeline with a catalog to commit a "
-                "coherent one)",
-                file=sys.stderr,
-            )
-    new_sigs = _materialise(
+    # signed with the BASE corpus's drop set (signatures.py store)
+    new_sigs = materialise(
         with_signatures(
             to_sign, text_col=text_col, cfg=cfg, id_col="url",
-            hot_hashes=drop_set,
+            hot_hashes=committed_drop_set(catalog, spark, cfg, base),
         ).join(new_hashed, "url"),
         caches,
     )
@@ -280,13 +221,13 @@ def run_incremental(new_web: DataFrame, catalog,
     # shuffled, mirroring the exact tier above. For a delta too
     # large to broadcast, run the full pipeline instead; the crossover
     # is roughly where |delta| stops fitting a broadcast anyway.
-    nb = _materialise(
+    nb = materialise(
         band_keys(new_sigs, "url", "minhash", cfg).select(
             F.col("url").alias("id_a"), "band_key"
         ),
         caches,
     )
-    ob_hit = _materialise(
+    ob_hit = materialise(
         band_keys(old_sigs, "url", "minhash", cfg)
         .select(F.col("url").alias("id_b"), "band_key")
         .join(F.broadcast(nb.select("band_key")), "band_key", "left_semi"),
@@ -309,7 +250,7 @@ def run_incremental(new_web: DataFrame, catalog,
     # materialised: consumed by the jaccard b-side semi-broadcast AND
     # the outer pair join — a broadcast subtree evaluates
     # independently, so without the cut the band-match chain runs twice
-    cross_pairs = _materialise(
+    cross_pairs = materialise(
         ob_hit.join(F.broadcast(hot), "band_key", "left_anti")
         .join(
             F.broadcast(nb.join(F.broadcast(hot), "band_key", "left_anti")),
@@ -323,27 +264,15 @@ def run_incremental(new_web: DataFrame, catalog,
 
     # ---- minhash tier within the increment (normal bucket path) ----
     # materialised: exact_jaccard_edges reads its pairs three times
-    intra_cands = _materialise(
+    intra_cands = materialise(
         candidate_pairs(new_sigs, "url", "minhash", cfg, caches=caches),
         caches,
     )
     near_intra = exact_jaccard_edges(intra_cands, new_sigs, "url", cfg).select(
         "id_a", "id_b"
     )
-    # star edges (min-url ↔ member) via groupBy-min + join — the same
-    # linear-memory shape as pipeline.py's exact tier. The former
-    # collect_list/explode built the whole dup group as ONE array in a
-    # single aggregation buffer: a pathological increment (10^6 copies
-    # of one page in one batch) would materialize a 10^6-element array
-    # on one reducer. The join shape streams instead.
-    intra_min = new_hashed.groupBy("text_sha").agg(
-        F.min("url").alias("id_a"), F.count("*").alias("_n")
-    )
-    intra_exact = (
-        new_hashed.join(intra_min.filter(F.col("_n") > 1), "text_sha")
-        .filter(F.col("url") != F.col("id_a"))
-        .select("id_a", F.col("url").alias("id_b"))
-    )
+    # exact tier within the increment: the batch plan's star edges
+    intra_exact = exact_star_edges(new_hashed)
 
     # ---- frozen-base clustering ------------------------------------
     # old matches become edges to the OLD CLUSTER LABEL (not the old
@@ -360,7 +289,7 @@ def run_incremental(new_web: DataFrame, catalog,
     # Its row count and byte volume ride the same job (Observation):
     # they feed the broadcast-hint gate below.
     edge_obs = Observation()
-    all_edges = _materialise(
+    all_edges = materialise(
         matched.unionByName(near_intra).unionByName(intra_exact).observe(
             edge_obs,
             F.count(F.lit(1)).alias("rows"),
@@ -451,20 +380,18 @@ def run_incremental(new_web: DataFrame, catalog,
     assignments = lin.observe(assignments, "incr_assigned").persist()
     caches.append(assignments)
 
-    if update_snapshots:
-        # next increment sees this one: union the snapshots. At real
-        # scale these are Iceberg APPENDs, not rewrites. The commit is
-        # IDEMPOTENT under batch replay (streaming restart, crash
-        # between the two table writes): old_sigs/old_clusters already
-        # exclude the batch's urls (the replay anti-join above), so a
-        # re-applied batch's committed rows are replaced, and since its
-        # assignments are deterministic (frozen base labels +
-        # exact-match-to-self) the replacement is row-identical.
-        meta = {"incremental": True, **(snapshot_meta or {})}
-        catalog.write("signatures", old_sigs.unionByName(new_sigs),
-                      meta=meta)
-        catalog.write("clusters", old_clusters.unionByName(assignments),
-                      meta=meta)
+    # next increment sees this one: union the snapshots. At real
+    # scale these are Iceberg APPENDs, not rewrites. The commit is
+    # IDEMPOTENT under batch replay (streaming restart, crash between
+    # the two table writes): old_sigs/old_clusters already exclude the
+    # batch's urls (the replay anti-join above), so a re-applied
+    # batch's committed rows are replaced, and since its assignments
+    # are deterministic (frozen base labels + exact-match-to-self) the
+    # replacement is row-identical. ``base``: see signatures.base_stamp.
+    meta = {"incremental": True, "base": base, **(snapshot_meta or {})}
+    catalog.write("signatures", old_sigs.unionByName(new_sigs), meta=meta)
+    catalog.write("clusters", old_clusters.unionByName(assignments),
+                  meta=meta)
 
     return IncrementalResult(assignments=assignments, lineage=lin,
                              caches=caches)

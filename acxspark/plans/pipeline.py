@@ -38,10 +38,14 @@ from acxspark.config import DEFAULT_CONFIG, DedupConfig
 from acxspark.corpus import extract_text
 from acxspark.metrics import Lineage
 from acxspark.operators.cc import cluster_assignments
+from acxspark.operators.dedup_exact import exact_star_edges, sha_groups
 from acxspark.operators.lsh import candidate_pairs
-from acxspark.operators.signatures import with_signatures
+from acxspark.operators.signatures import (
+    commit_drop_set, hot_shingle_hashes, with_signatures,
+)
 from acxspark.operators.simhash import simhash_candidate_pairs
 from acxspark.operators.verify import containment_edges, exact_jaccard_edges
+from acxspark.plans.blocks import Releasable, materialise
 
 
 @pandas_udf(T.StringType())
@@ -76,22 +80,15 @@ def extraction_violations(web: DataFrame, url_col: str = "url",
 
 
 @dataclass
-class PipelineResult:
+class PipelineResult(Releasable):
     clusters: DataFrame      # url, cluster_id
     edges: DataFrame         # id_a, id_b, tier
     survivors: DataFrame     # canonical (first-wins) docs, redacted
     lineage: Lineage
-    caches: list[DataFrame] = None  # persisted intermediates, release()-able
-
-    def release(self) -> None:
-        """Unpersist every intermediate this run cached (docs, sigs,
-        candidate pairs, near edges, LSH band rows). Call when done
-        consuming the result DataFrames — repeated library runs in one
-        session otherwise accumulate cached partitions until eviction.
-        The returned DataFrames stay valid (plans recompute)."""
-        for df in self.caches or []:
-            df.unpersist()
-        self.caches = []
+    # release handles: cached docs, sigs, pairs, near edges, band rows
+    # and (no catalog) the edge checkpoint, which only CC reads — the
+    # returned DataFrames stay valid after release()
+    caches: list = None
 
 
 def run_pipeline(web: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG,
@@ -116,7 +113,7 @@ def run_pipeline(web: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG,
     never part of the resume stamp comparison; streaming/ingest.py
     stamps the micro-batch id through it)."""
     lin = Lineage(lineage_path, cfg.fingerprint())
-    caches: list[DataFrame] = []
+    caches: list = []
 
     if url_dedup:
         # stage 0 (crawl order of operations): a re-crawled page —
@@ -178,10 +175,7 @@ def run_pipeline(web: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG,
         # committed edge snapshot — jump straight to clustering
         edges = catalog.read(spark, "edges")
     else:
-        # ---- exact tier: content-hash edges url ↔ first-url ----------
-        # star edges (min-url ↔ member), not cliques: linear in group size,
-        # so a pathological 10^6-copy boilerplate page costs 10^6 edges not
-        # 10^12. CC collapses the star to one cluster identically.
+        # ---- exact tier: content-hash star edges url ↔ first-url ------
         # persisted: consumed by the sha_min groupBy AND the exact-edge
         # join — without the cache the sha256 pass over the full corpus
         # text runs once per consumer (the slim url+sha cache costs
@@ -192,14 +186,10 @@ def run_pipeline(web: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG,
         caches.append(hashed)
         # persisted: consumed by the exact-edge join, the representatives
         # semi-join, and (catalog path) the signature-snapshot sha join
-        sha_min = hashed.groupBy("text_sha").agg(F.min("url").alias("min_url"),
-                                                 F.count("*").alias("n")).persist()
+        sha_min = sha_groups(hashed).persist()
         caches.append(sha_min)
-        exact_edges = (
-            hashed.join(sha_min.filter(F.col("n") > 1), "text_sha")
-            .filter(F.col("url") != F.col("min_url"))
-            .select(F.col("min_url").alias("id_a"), F.col("url").alias("id_b"))
-            .withColumn("tier", F.lit("exact"))
+        exact_edges = exact_star_edges(hashed, sha_min).withColumn(
+            "tier", F.lit("exact")
         )
 
         # ---- shared signature scan: ONE fused Arrow pass, persisted slim
@@ -226,14 +216,9 @@ def run_pipeline(web: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG,
         else:
             sign_input = docs.join(reps, "url", "left_semi")
             hot = None
-            if getattr(cfg, "shingle_max_doc_freq", None) is not None:
-                # derive the doc-frequency drop set HERE (not inside
-                # with_signatures) so it can be committed: increments must
-                # sign their deltas with the BASE corpus's set — a
-                # delta-derived set diverges and breaks band collisions
-                # against the committed signatures (plans/incremental.py)
-                from acxspark.operators.signatures import hot_shingle_hashes
-
+            if cfg.shingle_max_doc_freq is not None:
+                # derived HERE, not inside with_signatures, so folds
+                # can sign with it (commit_drop_set below)
                 hot = hot_shingle_hashes(sign_input, text_col, cfg)
             sigs = with_signatures(
                 sign_input, text_col=text_col, cfg=cfg, id_col="url",
@@ -256,17 +241,7 @@ def run_pipeline(web: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG,
                 catalog.write("signatures", sigs.join(rep_sha, "url"), meta=wmeta)
                 sigs = catalog.read(spark, "signatures")
                 if hot is not None:
-                    # committed AFTER signatures, same stamp: a crash
-                    # during the signature scan must not leave a
-                    # new-stamp drop set beside old signatures — the
-                    # increment's coherence check (plans/incremental.py)
-                    # compares these stamps before trusting the set
-                    catalog.write(
-                        "hot_shingles",
-                        spark.createDataFrame([(int(x),) for x in hot],
-                                              "h long"),
-                        meta=wmeta,
-                    )
+                    commit_drop_set(catalog, spark, hot, wmeta)
             sigs = sigs.persist()
         caches.append(sigs)
 
@@ -312,13 +287,13 @@ def run_pipeline(web: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG,
             edges = catalog.read(spark, "edges")
 
     # ---- clustering ---------------------------------------------------
-    # localCheckpoint: CC iterates joins over the edges — without the
+    # eager checkpoint: CC iterates joins over the edges — without the
     # cut, every CC round would re-run all four tiers above. With a
     # catalog, the committed edge snapshot IS the lineage cut (and the
     # resume point for the whole candidate phase).
     edge_pairs = edges.select("id_a", "id_b")
     if catalog is None:
-        edge_pairs = edge_pairs.localCheckpoint(eager=True)
+        edge_pairs = materialise(edge_pairs, caches)
     clusters = cluster_assignments(
         docs.select("url"), "url", edge_pairs, catalog=catalog,
         table=cc_table,

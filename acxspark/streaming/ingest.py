@@ -150,7 +150,7 @@ def fold_batch(batch_df: DataFrame, batch_id: int, catalog,
     # waste).
     target = batch_df.sparkSession.sparkContext.defaultParallelism
     floor = 4 * target
-    budget = int(getattr(cfg, "incr_max_batch_rows", 0) or 0)
+    budget = cfg.incr_max_batch_rows
     # ONE bounded probe answers the emptiness check and both width
     # gates (repartition floor and the oversized-split budget below) —
     # budget ≥ floor in any realistic config, so probing to
@@ -233,7 +233,6 @@ def fold_batch(batch_df: DataFrame, batch_id: int, catalog,
                                       text_col=text_col,
                                       lineage_path=sub_lineage,
                                       snapshot_meta=sub_meta)
-                total += res.assignments.count()
                 if out_dir:
                     # one OVERWRITTEN directory per sub-fold (standard
                     # partition layout, so reading batch-<id> discovers
@@ -243,30 +242,32 @@ def fold_batch(batch_df: DataFrame, batch_id: int, catalog,
                     res.assignments.write.mode("overwrite").parquet(
                         str(Path(out_dir) / f"batch-{batch_id}" / f"sub={j}")
                     )
-                res.lineage.flush()
-                for df in res.caches or []:
-                    df.unpersist()
+                total += _n_assigned(res)
+                res.release()
             return {"batch_id": batch_id, "action": "increment_split",
                     "n_docs": total, "n_subbatches": len(groups)}
 
     # a cold start counts its clusters before the lineage flush (its
-    # clusters_assigned metric fires on that action); an increment's
-    # incr_assigned Observation counted them while the clusters
-    # snapshot committed them
+    # clusters_assigned metric fires on that action)
     n = None if action == "increment" else assignments.count()
     if out_dir:
         assignments.write.mode("overwrite").parquet(
             str(Path(out_dir) / f"batch-{batch_id}")
         )
-    recs = res.lineage.flush()
     if n is None:
-        n = next((r["rows"] for r in recs
-                  if r["stage"] == "incr_assigned"), None)
-    if n is None:  # the metric did not fire
-        n = assignments.count()
-    for df in res.caches or []:
-        df.unpersist()
+        n = _n_assigned(res)
+    else:
+        res.lineage.flush()
+    res.release()
     return {"batch_id": batch_id, "action": action, "n_docs": n}
+
+
+def _n_assigned(res) -> int:
+    """Flush an increment's lineage; its doc count is the incr_assigned
+    Observation (fired by the clusters commit), else a count."""
+    recs = res.lineage.flush()
+    n = next((r["rows"] for r in recs if r["stage"] == "incr_assigned"), None)
+    return res.assignments.count() if n is None else n
 
 
 def ingest_crawl_stream(stream_df: DataFrame, catalog, checkpoint_dir: str,

@@ -123,6 +123,7 @@ def streaming_near_dup_flags(
     from acxspark.config import DEFAULT_CONFIG
     from acxspark.operators.lsh import band_struct_col
     from acxspark.operators.signatures import signature_col
+    from acxspark.operators.verify import shingle_jaccard
 
     cfg = cfg or DEFAULT_CONFIG
     docs = stream_docs.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
@@ -139,10 +140,9 @@ def streaming_near_dup_flags(
     # SLIM band rows on the static side — (dup_of, band_key) longs
     # only. Carrying the corpus shingle arrays through the band
     # explode replicated every array lsh_bands× per micro-batch scan,
-    # exactly the byte volume the batch twin (incremental.py
-    # _cross_jaccard_edges) was rewritten to avoid; the arrays join in
-    # AFTER the band match, once per matched candidate, from the
-    # unexploded snapshot.
+    # the byte volume the fold's new×old check (plans/incremental.py)
+    # keeps off its old side; the arrays join in AFTER the band match,
+    # once per matched candidate, from the unexploded snapshot.
     corpus_bands = (
         corpus_sigs.select(
             F.col(url_col).alias("dup_of"),
@@ -154,13 +154,11 @@ def streaming_near_dup_flags(
         F.col(url_col).alias("dup_of"), F.col("shingles").alias("_sh_b")
     )
 
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
-    union = F.size(F.array_union("_sh_a", "_sh_b"))
     matches = (
         stream_bands.join(corpus_bands, "band_key")  # stream-static
         .select(url_col, ts_col, "_sh_a", "dup_of")
         .join(corpus_sh, "dup_of")  # slim shingle lookup, stream-static
-        .withColumn("jaccard", inter / F.greatest(union, F.lit(1)))
+        .withColumn("jaccard", shingle_jaccard("_sh_a", "_sh_b"))
         .filter(F.col("jaccard") >= cfg.jaccard_threshold)
         .select(url_col, ts_col, "dup_of", F.round("jaccard", 4).alias("jaccard"))
     )

@@ -196,8 +196,7 @@ def _fold(cat, batch):
 
     inc = run_incremental(batch, cat, cfg=DedupConfig())
     got = {r["url"]: r["cluster_id"] for r in inc.assignments.collect()}
-    for df in inc.caches:
-        df.unpersist()
+    inc.release()
     return got, inc.lineage
 
 

@@ -5,8 +5,7 @@ src/storage.cpp:562-570)."""
 import pyspark.sql.functions as F
 
 from acxspark.operators.dedup_exact import (
-    exact_dup_groups,
-    exact_text_dedup,
+    exact_star_edges,
     first_wins,
     or_key_components,
 )
@@ -34,13 +33,16 @@ def test_first_wins_deterministic_across_partitionings(spark):
     assert a == b == list(range(7))
 
 
-def test_exact_text_dedup(spark):
-    rows = [(1, "same text"), (2, "same text"), (3, "other")]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = sorted(r["doc_id"] for r in exact_text_dedup(df, "doc_id").collect())
-    assert got == [1, 3]
-    groups = exact_dup_groups(df, "doc_id").collect()
-    assert len(groups) == 1 and groups[0]["doc_ids"] == [1, 2]
+def test_exact_star_edges(spark):
+    # three copies of one text form a star from the min url; a unique
+    # text forms no edge
+    rows = [("u2", "same text"), ("u1", "same text"), ("u3", "same text"),
+            ("u4", "other")]
+    hashed = spark.createDataFrame(rows, ["url", "text"]).select(
+        "url", F.sha2("text", 256).alias("text_sha")
+    )
+    got = sorted(tuple(r) for r in exact_star_edges(hashed).collect())
+    assert got == [("u1", "u2"), ("u1", "u3")]
 
 
 def _or_key_labels(df, **kw):

@@ -83,10 +83,8 @@ def test_stream_ingest_matches_sequential_batches(spark, tmp_path):
                       cfg=DedupConfig(), catalog=ref)
     r0.release()
     for rows in (INC1, INC2):
-        ri = run_incremental(spark.createDataFrame(rows, SCHEMA), ref,
-                             cfg=DedupConfig())
-        for df in ri.caches:
-            df.unpersist()
+        run_incremental(spark.createDataFrame(rows, SCHEMA), ref,
+                        cfg=DedupConfig()).release()
 
     got, want = _clusters(spark, cat), _clusters(spark, ref)
     assert got == want
@@ -142,16 +140,14 @@ def test_replay_after_partial_commit_is_idempotent(spark, tmp_path):
     i1 = run_incremental(B, cat, cfg=DedupConfig())
     want = {r["url"]: r["cluster_id"] for r in i1.assignments.collect()}
     sigs_after = {r["url"] for r in cat.read(spark, "signatures").collect()}
-    for df in i1.caches:
-        df.unpersist()
+    i1.release()
     cat.write("clusters",
               spark.createDataFrame(pre_clusters), meta={"rewound": True})
 
     # replay against the half-committed state
     i2 = run_incremental(B, cat, cfg=DedupConfig())
     got = {r["url"]: r["cluster_id"] for r in i2.assignments.collect()}
-    for df in i2.caches:
-        df.unpersist()
+    i2.release()
     assert got == want                       # same labels, incl. near dups
     assert {r["url"] for r in cat.read(spark, "signatures").collect()} \
         == sigs_after                        # no duplicate signature rows
@@ -203,10 +199,8 @@ def test_oversized_batch_splits_into_equivalent_subfolds(spark, tmp_path):
     cat_c = ParquetSnapshotCatalog(tmp_path / "c")
     fold_batch(base, 0, cat_c, cfg=cfg)
     sub0 = delta.filter(F.pmod(F.xxhash64("url"), F.lit(k)) == 0)
-    r0 = run_incremental(sub0, cat_c, cfg=cfg,
-                         snapshot_meta={"ingest_batch_part": "1/0"})
-    for df in r0.caches:
-        df.unpersist()
+    run_incremental(sub0, cat_c, cfg=cfg,
+                    snapshot_meta={"ingest_batch_part": "1/0"}).release()
     # no ingest_batch_id stamp → the replayed batch is NOT skipped
     s2 = fold_batch(delta, 1, cat_c, cfg=cfg)
     assert s2["action"] == "increment_split"
@@ -359,6 +353,22 @@ def test_fold_stays_in_job_budget_and_releases_its_blocks(spark, tmp_path):
     got = _clusters(spark, cat)
     assert got["b1"] == "a3" and got["b2"] == "a1"
     assert got["b3"] == got["b4"] == "b3"
+
+
+def test_pipeline_release_drops_its_edge_checkpoint(spark):
+    """Without a catalog the batch plan checkpoints its edge set for
+    CC; release() must drop those blocks with the caches, and the
+    results must stay readable (only CC read the checkpoint)."""
+    sc = spark.sparkContext
+    web = spark.createDataFrame(INC0, SCHEMA)
+    before = _persistent_rdd_ids(sc)
+    res = run_pipeline(web, cfg=DedupConfig())
+    clusters = sorted(tuple(r) for r in res.clusters.collect())
+    n_survivors = res.survivors.count()
+    res.release()
+    assert _persistent_rdd_ids(sc) <= before
+    assert sorted(tuple(r) for r in res.clusters.collect()) == clusters
+    assert res.survivors.count() == n_survivors == 3
 
 
 def test_fold_of_all_unique_delta_with_no_edges_completes(spark, tmp_path):

@@ -262,6 +262,32 @@ def test_embedding_lsh_complete_at_sf01(spark):
     assert lsh == exact, (len(lsh), len(exact))
 
 
+_BOILER = ("all rights reserved copyright terms of service privacy "
+           "policy contact us about careers press blog help center ")
+
+
+def _dfcut_doc(i: int, w: str = "winter") -> str:
+    # boilerplate + ~80 doc-unique tokens (so only the BOILERPLATE is
+    # corpus-hot); a one-word edit stays well above the Jaccard
+    # threshold
+    words = " ".join(f"tok{i}x{j}" for j in range(75))
+    return _BOILER * 3 + f"story {i} begins {words} under a pale {w} sky "
+
+
+def _dfcut_base(spark, tmp_path):
+    """A 30-doc base committed with shingle_max_doc_freq=0.5."""
+    from acxspark.catalog import ParquetSnapshotCatalog
+    from acxspark.config import DedupConfig
+
+    cfg = DedupConfig(shingle_max_doc_freq=0.5)
+    cat = ParquetSnapshotCatalog(tmp_path / "cat")
+    web = spark.createDataFrame([(f"u{i}", _dfcut_doc(i)) for i in range(30)],
+                                "url string, text string")
+    run_pipeline(web, cfg=cfg, catalog=cat).release()
+    assert cat.has("hot_shingles")  # the base committed its drop set
+    return cfg, cat
+
+
 def test_dfcut_incremental_uses_committed_hot_set(spark, tmp_path):
     """Increments must sign their delta with the BASE corpus's
     committed drop set: a boilerplate gram that is corpus-hot but
@@ -269,27 +295,9 @@ def test_dfcut_incremental_uses_committed_hot_set(spark, tmp_path):
     signatures, breaking band collisions against the snapshot. The
     committed hot_shingles snapshot carries the set across runs; a
     delta near-dup of a committed doc must still join its cluster."""
-    from acxspark.catalog import ParquetSnapshotCatalog
-    from acxspark.config import DedupConfig
     from acxspark.plans.incremental import run_incremental
 
-    boiler = ("all rights reserved copyright terms of service privacy "
-              "policy contact us about careers press blog help center ")
-
-    def body(i: int, w: str = "winter") -> str:
-        # ~80 tokens, all doc-unique (so only the BOILERPLATE is
-        # corpus-hot); a one-word edit stays well above the Jaccard
-        # threshold
-        words = " ".join(f"tok{i}x{j}" for j in range(75))
-        return f"story {i} begins {words} under a pale {w} sky "
-
-    rows = [(f"u{i}", boiler * 3 + body(i)) for i in range(30)]
-    cfg = DedupConfig(shingle_max_doc_freq=0.5)
-    cat = ParquetSnapshotCatalog(tmp_path / "cat")
-    web = spark.createDataFrame(rows, "url string, text string")
-    res = run_pipeline(web, cfg=cfg, catalog=cat)
-    res.release()
-    assert cat.has("hot_shingles")  # the base committed its drop set
+    cfg, cat = _dfcut_base(spark, tmp_path)
 
     # delta: near-dup of u3 (one-word edit). In the 2-doc delta the
     # boilerplate sits at df=0.5 — NOT hot by delta-local counting —
@@ -297,13 +305,55 @@ def test_dfcut_incremental_uses_committed_hot_set(spark, tmp_path):
     # with delta-local frequencies would keep the boilerplate grams
     # and dilute the Jaccard against u3's committed signature
     delta = spark.createDataFrame(
-        [("d1", boiler * 3 + body(3, "summer")),
+        [("d1", _dfcut_doc(3, "summer")),
          ("d2", "entirely new content " * 15)],
         "url string, text string",
     )
     inc = run_incremental(delta, cat, cfg=cfg)
     got = {r["url"]: r["cluster_id"] for r in inc.assignments.collect()}
-    for df in inc.caches:
-        df.unpersist()
+    inc.release()
     assert got["d1"] == "u3"   # near-dup found against the snapshot
     assert got["d2"] == "d2"
+
+
+def test_dfcut_second_fold_still_uses_committed_hot_set(spark, tmp_path,
+                                                        capsys):
+    """A fold recommits the signatures snapshot; the fold after it
+    must still find the base's drop set coherent and sign its delta
+    with it. The committed shingles of fold 2's delta doc equal a
+    signing with the committed set, and no fallback is announced."""
+    import numpy as np
+
+    from acxspark.operators.signatures import with_signatures
+    from acxspark.plans.incremental import run_incremental
+
+    cfg, cat = _dfcut_base(spark, tmp_path)
+    schema = "url string, text string"
+    run_incremental(spark.createDataFrame(
+        [("d1", _dfcut_doc(3, "summer")), ("d2", "entirely new content " * 15)],
+        schema), cat, cfg=cfg).release()
+    capsys.readouterr()
+    # the base stamp rides nested: top-level stamp keys would let the
+    # batch plan resume from this folded snapshot as a fresh base
+    meta = cat.latest_meta("signatures")
+    assert "config" not in meta and meta["base"]["config"] == cfg.fingerprint()
+
+    # as in the single-fold test, the boilerplate is NOT hot by
+    # delta-local counting: only the committed set cuts it
+    delta2 = spark.createDataFrame(
+        [("e1", _dfcut_doc(5, "autumn")), ("e2", "other fresh words " * 15)],
+        schema)
+    inc = run_incremental(delta2, cat, cfg=cfg)
+    got = {r["url"]: r["cluster_id"] for r in inc.assignments.collect()}
+    inc.release()
+    assert "falling back" not in capsys.readouterr().err
+    assert got["e1"] == "u5"
+
+    hot = np.sort(np.array(
+        [r["h"] for r in cat.read(spark, "hot_shingles").collect()],
+        dtype=np.int64))
+    want = with_signatures(delta2.filter(F.col("url") == "e1"), cfg=cfg,
+                           hot_hashes=hot).collect()[0]["shingles"]
+    committed = (cat.read(spark, "signatures").filter(F.col("url") == "e1")
+                 .collect()[0]["shingles"])
+    assert committed == want
