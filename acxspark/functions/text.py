@@ -2,19 +2,15 @@
 
 All introduced per the graft brief (no reference counterpart — the
 reference ends at contact fields): language ID, quality scoring, token
-counting, document fingerprinting. Every function here is a pure
-column expression EXCEPT the rolling-hash fingerprint (stateful scan →
-pandas UDF). Formulas are intentionally replicable in ANSI SQL so the
-DuckDB oracle can verify them bit-for-bit.
+counting. Every function here is a pure column expression. Formulas
+are intentionally replicable in ANSI SQL so the DuckDB oracle can
+verify them bit-for-bit.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql import types as T
 
 from acxspark.functions.normalize import _c, canonical_text
 
@@ -115,33 +111,6 @@ def quality_score(col) -> Column:
         + F.lit(0.25) * stop_ok
         + F.lit(0.25) * wl_ok
     )
-
-
-_FP_MOD = (1 << 61) - 1
-_FP_BASE = 257
-
-
-@pandas_udf(T.LongType())
-def _fingerprint_udf(s: pd.Series) -> pd.Series:
-    """Polynomial rolling hash of utf-8 bytes mod 2^61-1 (deterministic,
-    seed-free). Arrow-batched; numpy-free inner loop is fine because
-    Python ints do the modular arithmetic exactly."""
-
-    def one(v):
-        if v is None:
-            return None
-        h = 0
-        for b in v.encode("utf-8"):
-            h = (h * _FP_BASE + b) % _FP_MOD
-        return h
-
-    return s.map(one)
-
-
-def doc_fingerprint(col) -> Column:
-    """Rolling-hash fingerprint of canonical text (content identity
-    cheaper to compare than sha256 strings; used for exact-tier keys)."""
-    return _fingerprint_udf(canonical_text(_c(col)))
 
 
 # Gopher rule battery (Rae et al. 2021, arXiv:2112.11446 §A1.1) — the

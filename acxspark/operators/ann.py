@@ -125,7 +125,6 @@ def near_dup_pairs_blocked(
     threshold: float = 0.5,
     sim_decimals: int = 4,
     max_broadcast_rows: int = 1_000_000,
-    on_overflow: str = "raise",
 ) -> DataFrame:
     """Same output as :func:`near_dup_pairs`, computed as one numpy
     matmul per Arrow batch against a broadcast of the normalized
@@ -139,13 +138,12 @@ def near_dup_pairs_blocked(
     This path pulls the (id, vector) projection through the driver to
     build the broadcast matrix, so it is HARD-GUARDED: corpora above
     ``max_broadcast_rows`` (default 10^6 ≈ 512 MB at 64-dim float64)
-    either raise (``on_overflow='raise'``) or fall back to the
-    bucketed :func:`lsh_near_dup_pairs` scale path
-    (``on_overflow='lsh'`` — probabilistic recall, no driver collect,
-    no all-pairs scan). The guard is enforced — not a docstring
-    promise — and costs ZERO extra jobs: the probe and the collect are
-    the same ``limit(cap+1).toPandas()`` action (cap+1 rows bound the
-    transfer either way; one row over the cap proves overflow without
+    raise; past it the scale path is :func:`lsh_near_dup_pairs`
+    (probabilistic recall, no driver collect, no all-pairs scan). The
+    guard is enforced — not a docstring promise — and costs ZERO
+    extra jobs: the probe and the collect are the same
+    ``limit(cap+1).toPandas()`` action (cap+1 rows bound the transfer
+    either way; one row over the cap proves overflow without
     evaluating the upstream plan twice).
     """
     import pandas as pd
@@ -155,16 +153,10 @@ def near_dup_pairs_blocked(
     slim = corpus.select(id_col, vec_col)
     pdf = slim.limit(max_broadcast_rows + 1).toPandas()
     if len(pdf) > max_broadcast_rows:
-        if on_overflow == "lsh":
-            return lsh_near_dup_pairs(
-                corpus, id_col, vec_col, threshold=threshold,
-                dim=None, sim_decimals=sim_decimals,
-            )
         raise ValueError(
             f"near_dup_pairs_blocked: corpus exceeds "
             f"max_broadcast_rows={max_broadcast_rows}; the broadcast "
-            "matrix would not fit. Use lsh_near_dup_pairs (or pass "
-            "on_overflow='lsh')."
+            "matrix would not fit. Use lsh_near_dup_pairs."
         )
     ids = pdf[id_col].to_numpy()
     mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
@@ -485,7 +477,7 @@ def lsh_near_dup_pairs(
     threshold: float = 0.5,
     n_planes: int | None = 8,
     n_tables: int = 4,
-    dim: int | None = 64,
+    dim: int = 64,
     seed: int = 42,
     sim_decimals: int = 4,
     max_bucket: int = 1000,
@@ -523,14 +515,6 @@ def lsh_near_dup_pairs(
     """
     from acxspark.operators.lsh import bucket_pairs, track_cache
 
-    if dim is None:  # infer from one row (schema carries no length)
-        row = corpus.select(vec_col).filter(F.col(vec_col).isNotNull()).head()
-        if row is None:
-            raise ValueError(
-                "lsh_near_dup_pairs: cannot infer dim from an empty "
-                "corpus (or all-NULL vector column); pass dim explicitly"
-            )
-        dim = len(row[0])
     if n_planes is None:
         n_planes = auto_n_planes(corpus.count())
 

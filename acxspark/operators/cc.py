@@ -65,8 +65,12 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def _union_find_labels(pairs: list[tuple], spark, schema,
-                       hint_broadcast: bool = True) -> DataFrame:
+def _id_bytes(x) -> int:
+    # characters of a string id (what F.length counts), 8 for a long
+    return len(x) if isinstance(x, str) else 8
+
+
+def _union_find_labels(pairs: list[tuple], spark, schema) -> DataFrame:
     """Driver-side union-find over a SMALL edge list → (u, component)
     with component = min id, bit-identical to the star-join fixpoint
     (both are 'min id per component', a well-defined function of the
@@ -87,32 +91,32 @@ def _union_find_labels(pairs: list[tuple], spark, schema,
             parent[ru] = rv
     comp_min: dict = {}
     nodes = set()
+    edge_bytes = 0
     for u, v in pairs:
         nodes.add(u)
         nodes.add(v)
+        edge_bytes += _id_bytes(u) + _id_bytes(v)
     for n in nodes:
         r = find(n)
         if r not in comp_min or n < comp_min[r]:
             comp_min[r] = n
     rows = [(n, comp_min[find(n)]) for n in sorted(nodes)]
     out = spark.createDataFrame(rows, schema)
-    # Broadcast hint is caller-controlled: a createDataFrame result
-    # has unknown stats, so without the hint the downstream label
-    # join plans as a SortMergeJoin (two exchanges) until AQE repairs
-    # it at runtime. The cap guarantees the table is broadcast-sized
-    # by construction, so the hint is always SAFE — but it is only
-    # VALID where the labels land on a build side (build side of an
-    # inner join, right side of a left-outer assignment join). A
-    # caller that puts the labels on a preserved outer side (e.g.
-    # run_incremental's left-outer label-resolution join) must pass
-    # hint_broadcast=False or Spark warns and drops the hint.
-    return F.broadcast(out) if hint_broadcast else out
+    # The one hint rule: every caller puts the labels on a build side
+    # (the right side of its assignment left join), and a
+    # createDataFrame result has unknown stats, so without a hint that
+    # join plans as a SortMergeJoin until AQE repairs it at runtime.
+    # The hint is sized in BYTES, because F.broadcast bypasses AQE's
+    # size check: the table holds ≲2 ids per distinct node, so twice
+    # the edge byte volume bounds it. Past 64 MB (1M edges of 150-200 B
+    # crawl urls come to several hundred MB) the join stays unhinted
+    # and AQE converts iff runtime bytes allow.
+    return F.broadcast(out) if 2 * edge_bytes <= (64 << 20) else out
 
 
 def connected_components(edges: DataFrame, max_iter: int = 50,
                          catalog=None, table: str = "cc_edges",
-                         small_graph_cap: int = 1_000_000,
-                         hint_broadcast_labels: bool = True) -> DataFrame:
+                         small_graph_cap: int = 1_000_000) -> DataFrame:
     """edges(u, v) → labels(u, component) where component = min id.
 
     Ids may be any orderable type (string urls or long doc ids).
@@ -129,9 +133,9 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
     the distributed loop) and only when no catalog demands per-round
     resume snapshots, the labels come from a driver-side union-find:
     the SAME min-id-per-component function of the edge set, returned
-    as a broadcastable DataFrame. At 10^11-edge web scale the cap
-    routes straight to the distributed loop. Set ``small_graph_cap=0``
-    to force the distributed path.
+    broadcast-hinted while its bytes allow. At 10^11-edge web scale
+    the cap routes straight to the distributed loop. Set
+    ``small_graph_cap=0`` to force the distributed path.
 
     Resume is input-guarded: every round's snapshot carries a
     fingerprint of the ORIGINAL edge set, and a resume whose current
@@ -167,10 +171,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
                 F.col("u"), F.col("v").alias("component")
             ).schema
             pairs = list(zip(pdf["u"].tolist(), pdf["v"].tolist()))
-            return _union_find_labels(
-                pairs, e.sparkSession, schema,
-                hint_broadcast=hint_broadcast_labels,
-            )
+            return _union_find_labels(pairs, e.sparkSession, schema)
         del pdf  # over cap: fall through to the distributed loop
 
     start_iter = 0

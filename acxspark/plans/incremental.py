@@ -22,14 +22,14 @@ text_sha) and `clusters` snapshots to the catalog
       NEXT increment sees this one.
 
 Scale: no old×old pair is ever formed, so the quadratic term the full
-run paid stays paid, and every new×old join broadcasts the delta
-side. The fold is still O(|corpus|) in three places:
+run paid stays paid; every new×old join broadcasts the delta side;
+and label resolution reads only the old labels the delta matched,
+each a tagged CC vertex. The fold is still O(|corpus|) in three
+places:
 - the exact tier scans the whole old `text_sha` column (the
   broadcast probe prunes nothing on the old scan);
 - the minhash tier recomputes 32 band keys from every old `minhash`;
-- label resolution takes a corpus-wide `distinct()` over the old
-  cluster labels, and the commit rewrites the full `signatures` and
-  `clusters` snapshots.
+- the commit rewrites the full `signatures` and `clusters` snapshots.
 A fold therefore costs less than a full re-run by a constant factor,
 not by |corpus|/|delta|; at sizes where that matters, run the full
 pipeline as a compaction.
@@ -38,10 +38,11 @@ Deliberate semantic deltas from a monolithic full run, documented:
 - the containment tier (page-in-page) does not run across increments
   — schedule periodic full compactions for it;
 - a new doc that NEAR-matches two different old clusters cannot merge
-  them (labels are frozen): it joins the minimum old label and the
-  bridge is counted in lineage (`clusters_bridged`) for the next
-  compaction to resolve. Exact-dup bridges cannot happen (identical
-  text ⇒ identical sha ⇒ one old cluster).
+  them (labels are frozen): it joins the minimum old label, and the
+  other old labels of its component are counted in lineage
+  (`clusters_bridged`: the old labels the next compaction retires).
+  Exact-dup bridges cannot happen (identical text ⇒ identical sha ⇒
+  one old cluster).
 """
 
 from __future__ import annotations
@@ -276,102 +277,70 @@ def run_incremental(new_web: DataFrame, catalog,
 
     # ---- frozen-base clustering ------------------------------------
     # old matches become edges to the OLD CLUSTER LABEL (not the old
-    # doc), so one old cluster is one vertex and its label is frozen
+    # doc), so one old cluster is one vertex and its label is frozen.
+    # Vertex tags order the labeling: every old label ("\x00") sorts
+    # before every delta url ("\x01"), so CC's min-id label is already
+    # the frozen-base answer — the component's smallest old label if
+    # it holds one (labels are frozen: first occurrence wins across
+    # BATCHES, the reference's first-wins order lifted to increments),
+    # else its smallest delta url. The same device as
+    # dedup_exact.or_key_components; nothing reads the old labels
+    # beyond the matched ones.
+    def delta(c):
+        return F.concat(F.lit("\x01"), F.col(c)).alias(c)
+
     matched = lin.observe(
         old_clusters.withColumnRenamed("url", "id_b")
         .join(F.broadcast(exact_cross.unionByName(near_cross)), "id_b")
-        .select("id_a", F.col("cluster_id").alias("id_b"))
+        .select(delta("id_a"),
+                F.concat(F.lit("\x00"), "cluster_id").alias("id_b"))
         .distinct(),
         "incr_old_matches",
     )
     # ONE eager materialization of the full edge set before CC, so
-    # CC's probe and the label/bridge aggregations below read blocks.
-    # Its row count and byte volume ride the same job (Observation):
-    # they feed the broadcast-hint gate below.
+    # CC's probe reads blocks. Its row count rides the same job
+    # (Observation).
     edge_obs = Observation()
     all_edges = materialise(
-        matched.unionByName(near_intra).unionByName(intra_exact).observe(
-            edge_obs,
-            F.count(F.lit(1)).alias("rows"),
-            F.coalesce(
-                F.sum(F.length("id_a") + F.length("id_b")), F.lit(0)
-            ).alias("bytes"),
-        ),
+        matched.unionByName(
+            near_intra.unionByName(intra_exact)
+            .select(delta("id_a"), delta("id_b"))
+        ).observe(edge_obs, F.count(F.lit(1)).alias("rows")),
         caches,
     )
     # bounded wait, never Observation.get: a metric that does not fire
-    # must cost the broadcast hint below, not hang the fold
+    # must cost its record, not hang the fold
     edge_stats = Lineage.get_fired(edge_obs, timeout=10.0)
     if edge_stats is not None:
         lin.record("incr_edges", **edge_stats)
-    # hint_broadcast_labels=False: comp lands on the PRESERVED left
-    # side of the label-resolution left-outer join below, where an
-    # embedded broadcast hint is invalid (Spark warns and drops it).
-    # The hint is instead applied at the one VALID use site (the inner
-    # label join below), and only when the edge count proves comp is
-    # broadcast-sized.
     comp = connected_components(all_edges.select(
         F.col("id_a").alias("u"), F.col("id_b").alias("v")
-    ), hint_broadcast_labels=False)
+    ))
 
-    # label resolution: any old label in the component wins (labels
-    # are frozen — first occurrence wins across BATCHES, the
-    # reference's first-wins order lifted to increments); ties across
-    # two old labels take the min and count a bridge.
-    # inner join, comp on the build side: the delta's component table
-    # is bounded by the batch while old_label_set grows with the whole
-    # corpus — at 10^12-doc scale the small side must be comp. A
-    # normal increment (≤1M edges ⇒ comp ≤2M slim rows, the same
-    # bound as CC's fast-path cap) gets an explicit broadcast hint so
-    # the plan never starts as an SMJ; an arbitrarily large BACKFILL
-    # increment stays unhinted (a forced broadcast could not be
-    # sized), where AQE converts at runtime if comp turns out small.
-    # Components with no old label simply have no row here; the
-    # left join below restores them with old_min = NULL.
-    old_label_set = old_clusters.select(
-        F.col("cluster_id").alias("u")
-    ).distinct()
-    # the forced hint must be sized in BYTES, not rows: 1M edges of
-    # 150-200 B crawl urls put comp at several hundred MB, and
-    # F.broadcast bypasses AQE's size check entirely — the driver
-    # would have to build it regardless. comp carries ≲2 url-sized
-    # strings per distinct node, so twice the edge byte volume
-    # upper-bounds the build; past the cap the join stays unhinted
-    # and AQE converts iff runtime bytes allow.
-    comp_build = comp
-    if (edge_stats is not None and edge_stats["rows"] <= 1_000_000
-            and 2 * edge_stats["bytes"] <= (64 << 20)):
-        comp_build = F.broadcast(comp)
-    comp_labels = (
-        comp_build.join(old_label_set, "u")
-        .groupBy("component")
-        .agg(
-            F.min("u").alias("old_min"),
-            F.count(F.lit(1)).alias("n_old"),
-        )
-    )
-    # the bridge count rides the assignments pass (Observation). The
-    # optimizer drops the observed node when comp or comp_labels is
-    # empty, so the record is absent exactly when no component holds
-    # an old label (0 bridges); an edgeless fold records its 0 here
+    # a new doc that bridges two old clusters joins the smaller label;
+    # every other old label in its component is one a later compaction
+    # retires. The count rides the assignments pass (Observation). The
+    # optimizer drops the observed node when comp is empty, so an
+    # edgeless fold records its 0 here
     if edge_stats is not None and edge_stats["rows"] == 0:
         lin.record("clusters_bridged", n=0)
     else:
-        comp_labels = lin.observe(comp_labels, "clusters_bridged",
-                                  n=F.count_if(F.col("n_old") > 1))
-    # no forced broadcast: comp_labels is usually micro-batch-sized,
-    # but a backfill increment can be arbitrarily large — AQE converts
-    # to BHJ at runtime exactly when the exchanged bytes allow it
-    resolved = (
-        comp.join(comp_labels, "component", "left")
-        .select(
-            F.col("u").alias("url"),
-            F.coalesce("old_min", "component").alias("cluster_id"),
+        comp = lin.observe(
+            comp, "clusters_bridged",
+            n=F.count_if(F.col("u").startswith("\x00")
+                         & (F.col("u") != F.col("component"))),
         )
-    )
+    # delta rows only, both tags stripped; a doc with no edge is its
+    # own cluster
     assignments = (
         new_docs.select("url")
-        .join(resolved, "url", "left")
+        .join(
+            comp.filter(F.col("u").startswith("\x01")).select(
+                F.substr("u", F.lit(2)).alias("url"),
+                F.substr("component", F.lit(2)).alias("cluster_id"),
+            ),
+            "url", "left",
+        )
         .select(
             "url",
             F.coalesce(F.col("cluster_id"), F.col("url")).alias("cluster_id"),

@@ -323,8 +323,9 @@ def test_replay_with_unassignable_docs_and_complete_outdir_is_plain_skip(
 #: Spark jobs one increment fold of INC1 may run (a job group around
 #: fold_batch). The fold with nested persist() intermediates and
 #: separate bookkeeping actions ran 151 here; the flattened one 74;
-#: without the sha-bloom gate 61 (the budget keeps ~25% headroom).
-FOLD_JOB_BUDGET = 76
+#: without the sha-bloom gate 61; with tagged-vertex labels (no
+#: corpus-wide label lookup) 54 (the budget keeps ~25% headroom).
+FOLD_JOB_BUDGET = 67
 
 
 def _persistent_rdd_ids(sc) -> set[int]:
@@ -430,3 +431,9 @@ def test_delta_doc_bridging_two_old_clusters_joins_smaller_label(
     with open(tmp_path / "lin" / "batch-1.jsonl") as f:
         recs = [json.loads(line) for line in f]
     assert [r["n"] for r in recs if r["stage"] == "clusters_bridged"] == [1]
+    # tag order, not url order: a0 sorts below the old label p1 it
+    # near-matches (tail with its last word changed) and must still
+    # join p1 — no delta url outranks an old label
+    a0 = " ".join(words[:-15] + [f"t{i}" for i in range(14)] + ["u14"])
+    fold_batch(spark.createDataFrame([("a0", a0)], SCHEMA), 2, cat, cfg=cfg)
+    assert _clusters(spark, cat)["a0"] == "p1"
