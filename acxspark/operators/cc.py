@@ -126,13 +126,13 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
 
     Small-graph fast path (round 4): the star-join loop costs
     O(log n) × 2 shuffles + one driver barrier per round — pure
-    scheduling overhead when the edge set fits the driver. Below
-    ``small_graph_cap`` RAW edge rows (pre-dedup, so the probe is one
-    shuffle-free ``limit(cap+1)`` Arrow fetch — a graph whose raw rows
-    overflow but whose distinct rows would not conservatively takes
-    the distributed loop) and only when no catalog demands per-round
-    resume snapshots, the labels come from a driver-side union-find:
-    the SAME min-id-per-component function of the edge set, returned
+    scheduling overhead when the edge set fits the driver. Size alone
+    picks the path: below ``small_graph_cap`` RAW edge rows (pre-dedup,
+    so the probe is one shuffle-free ``limit(cap+1)`` Arrow fetch — a
+    graph whose raw rows overflow but whose distinct rows would not
+    conservatively takes the distributed loop) the labels come from a
+    driver-side union-find, with no rounds to snapshot or resume: the
+    SAME min-id-per-component function of the edge set, returned
     broadcast-hinted while its bytes allow. At 10^11-edge web scale
     the cap routes straight to the distributed loop. Set
     ``small_graph_cap=0`` to force the distributed path.
@@ -155,7 +155,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
     )
     e = e_raw.distinct()
 
-    if catalog is None and small_graph_cap > 0:
+    if small_graph_cap > 0:
         # probe the undeduplicated rows: CollectLimit short-circuits
         # the scan with no dedup shuffle (the old probe sat above the
         # distinct, which forced a full-volume shuffle that the

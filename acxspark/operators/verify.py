@@ -29,14 +29,27 @@ from pyspark.sql import functions as F
 
 from acxspark.config import DEFAULT_CONFIG, DedupConfig
 
+
+def _paired_rows(docs: DataFrame, pairs: DataFrame, id_col: str,
+                 col: str) -> DataFrame:
+    """(id, ``col``) of the ``docs`` whose id appears in any pair — both
+    verifiers' participating-id prune."""
+    pair_ids = (
+        pairs.select(F.col("id_a").alias(id_col))
+        .unionByName(pairs.select(F.col("id_b").alias(id_col)))
+        .distinct()
+    )
+    return docs.select(id_col, col).join(pair_ids, id_col, "left_semi")
+
+
 # ---------------------------------------------------------------- jaccard
 
 
 def shingle_jaccard(sh_a: str, sh_b: str) -> Column:
     """Exact Jaccard of two shingle-array columns (distinct elements;
     an empty union reads 0) — the engine's one Jaccard expression:
-    batch verify, the fold's new×old check and the streaming flagger
-    each filter ``>= τ`` on it."""
+    ``exact_jaccard_edges`` (the batch plan's and the crawl fold's
+    verify) and the streaming flagger each filter ``>= τ`` on it."""
     inter = F.size(F.array_intersect(sh_a, sh_b))
     union = F.size(F.array_union(sh_a, sh_b))
     return inter / F.greatest(union, F.lit(1))
@@ -61,13 +74,7 @@ def exact_jaccard_edges(pairs: DataFrame, docs_with_shingles: DataFrame,
     pairs plan more than once (this joins ``pairs`` twice more)
     should pass a persisted ``pairs``, as plans/pipeline.py does.
     """
-    sh = docs_with_shingles.select(F.col(id_col), F.col("shingles"))
-    pair_ids = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .unionByName(pairs.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    sh = sh.join(pair_ids, id_col, "left_semi")
+    sh = _paired_rows(docs_with_shingles, pairs, id_col, "shingles")
     a = sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
     b = sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
     return (
@@ -97,16 +104,8 @@ def containment_edges(pairs: DataFrame, docs: DataFrame, id_col: str,
     indexOf can only degenerate on pairs that already share a 64-char
     block. There are no groups, so there is no group-size cap.
     """
-    d = docs.select(F.col(id_col), F.col(text_col))
-    # participating-id semi-join, same rationale as exact_jaccard_edges:
-    # texts are the heaviest column in the pipeline — prune the doc side
-    # to ids that appear in any unverified pair before the text joins
-    pair_ids = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .unionByName(pairs.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    d = d.join(pair_ids, id_col, "left_semi")
+    # texts are the heaviest column: pruned before the pair joins
+    d = _paired_rows(docs, pairs, id_col, text_col)
     j = (
         pairs.join(d.select(F.col(id_col).alias("id_a"), F.col(text_col).alias("text_a")), "id_a")
         .join(d.select(F.col(id_col).alias("id_b"), F.col(text_col).alias("text_b")), "id_b")

@@ -6,14 +6,16 @@ The production shape at 10^12 documents: the full pipeline runs once
 text_sha) and `clusters` snapshots to the catalog
 (plans/pipeline.py); every subsequent crawl increment runs THIS plan:
 
-  new batch → signatures (new rows only)
-    → exact tier   vs old:   sha equi-join against the snapshot
-    → minhash tier vs old:   band-key equi-join new×old (never
-                             old×old — the quadratic term the full
-                             run already paid stays paid)
-    → minhash tier within:   the normal capped band-bucket pairs on
-                             the new rows only
-    → exact-Jaccard verify at τ (same shingle arrays both sides)
+  new batch, ids tagged old "\x00" + url / delta "\x01" + url so every
+  old id sorts first, through the batch plan's own operators:
+    → exact tier:   sha star over the delta ∪ the old rows its sha
+                    set probes (a delta doc sharing a probed sha is a
+                    re-fetch)
+    → signatures:   the delta rows that are not re-fetches
+    → minhash tier: candidate_pairs within the delta; one capped
+                    bucket_pairs over the delta ∪ old rows of every
+                    matched band (its cap counts both sides)
+    → exact-Jaccard verify at τ over both pair sets
     → clustering with a FROZEN base: old cluster labels never change
       (downstream consumers hold references to them); new docs join
       the matched old cluster, or form new clusters labeled first-wins
@@ -21,11 +23,11 @@ text_sha) and `clusters` snapshots to the catalog
     → snapshots updated (signatures ∪ new, clusters ∪ new) so the
       NEXT increment sees this one.
 
-Scale: no old×old pair is ever formed, so the quadratic term the full
-run paid stays paid; every new×old join broadcasts the delta side;
-and label resolution reads only the old labels the delta matched,
-each a tagged CC vertex. The fold is still O(|corpus|) in three
-places:
+Scale: old rows enter a tier (and are tagged) only once a broadcast
+delta probe matched them, and one filter drops their old×old pairs,
+so the quadratic term the full run paid stays paid; label resolution
+reads only the old labels the delta matched, each a tagged CC vertex.
+The fold is still O(|corpus|) in three places:
 - the exact tier scans the whole old `text_sha` column (the
   broadcast probe prunes nothing on the old scan);
 - the minhash tier recomputes 32 band keys from every old `minhash`;
@@ -49,18 +51,18 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from acxspark.config import DEFAULT_CONFIG, DedupConfig
 from acxspark.metrics import Lineage
 from acxspark.operators.cc import connected_components
 from acxspark.operators.dedup_exact import exact_star_edges
-from acxspark.operators.lsh import band_keys, candidate_pairs
+from acxspark.operators.lsh import band_keys, bucket_pairs, candidate_pairs
 from acxspark.operators.signatures import (
     base_stamp, committed_drop_set, with_signatures,
 )
-from acxspark.operators.verify import exact_jaccard_edges, shingle_jaccard
+from acxspark.operators.verify import exact_jaccard_edges
 from acxspark.plans.blocks import Releasable, materialise
 
 
@@ -75,29 +77,23 @@ class IncrementalResult(Releasable):
     caches: list
 
 
-def _cross_jaccard_edges(pairs: DataFrame, new_sigs: DataFrame,
-                         old_sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """exact_jaccard_edges with the two sides drawn from different
-    frames (new=id_a, old=id_b).
+# vertex tags: every old id sorts before every delta id. A tagged old
+# id reaches a predicate only from behind a materialised cut: above
+# one, the optimizer pushes the predicate (or its inferred IS NOT NULL)
+# into the snapshot scan, tagging every corpus row.
+OLD, NEW = "\x00", "\x01"
 
-    The old side is pruned BEFORE its shingles move: a broadcast
-    semi-join on the candidate ids cuts the (url, shingles) scan to
-    the matched rows only — the corpus snapshot's array column never
-    shuffles (measured: shuffling it was the incremental plan's
-    original bottleneck)."""
-    a = new_sigs.select(F.col("url").alias("id_a"),
-                        F.col("shingles").alias("sh_a"))
-    b = (
-        old_sigs.select(F.col("url").alias("id_b"),
-                        F.col("shingles").alias("sh_b"))
-        .join(F.broadcast(pairs.select("id_b")), "id_b", "left_semi")
-    )
-    return (
-        pairs.join(a, "id_a").join(b, "id_b")
-        .withColumn("jaccard", shingle_jaccard("sh_a", "sh_b"))
-        .filter(F.col("jaccard") >= cfg.jaccard_threshold)
-        .select("id_a", "id_b")
-    )
+
+def _tag(tag: str, c: str) -> Column:
+    return F.concat(F.lit(tag), F.col(c)).alias(c)
+
+
+def _untag(c: str) -> Column:
+    return F.substr(c, F.lit(2))
+
+
+def _is(tag: str, c: str) -> Column:
+    return F.col(c).startswith(tag)
 
 
 def run_incremental(new_web: DataFrame, catalog,
@@ -135,8 +131,8 @@ def run_incremental(new_web: DataFrame, catalog,
     # caching the full rows defeats pruning and made every old-side
     # pass pay the array column (measured 4.5× slower than a full
     # re-run before this + the broadcast-delta joins below)
-    old_sigs = catalog.read(spark, "signatures")
-    old_clusters = catalog.read(spark, "clusters")
+    sig_snap = catalog.read(spark, "signatures")
+    cluster_snap = catalog.read(spark, "clusters")
     # read before this fold recommits the snapshots: gates the
     # committed drop set and rides this fold's commits forward
     base = base_stamp(catalog)
@@ -162,11 +158,15 @@ def run_incremental(new_web: DataFrame, catalog,
     # doc sha-matches its OWN committed signature, gets classified a
     # re-fetch, skips signing — and silently loses its near-dup edges.
     # (No distinct: a semi/anti-join build side ignores duplicates.)
+    # A read keyed by old ids these probes returned (the paired
+    # shingles, the matched labels) reads the snapshot itself: such an
+    # id is never a batch url, so a second anti-join (one more
+    # broadcast job) would remove nothing.
     batch_urls = F.broadcast(new_docs.select("url"))
-    old_sigs = old_sigs.join(batch_urls, "url", "left_anti")
-    old_clusters = old_clusters.join(batch_urls, "url", "left_anti")
+    old_sigs = sig_snap.join(batch_urls, "url", "left_anti")
+    old_clusters = cluster_snap.join(batch_urls, "url", "left_anti")
 
-    # ---- exact tier vs old ------------------------------------------
+    # ---- exact tier vs old and within -------------------------------
     # BROADCAST the delta's full hash set into the old scan (sha
     # column only) — map-side, the old side never shuffles, but the
     # scan still reads the WHOLE old (url, text_sha) projection: the
@@ -174,35 +174,36 @@ def run_incremental(new_web: DataFrame, catalog,
     # so this is one O(|corpus|) pass of two slim columns per fold. A
     # membership prefilter on the delta side (operators/bloom.py)
     # would only shrink the broadcast, not this scan, so none runs.
-    # Materialised: consumed by the matched-edge union AND the
-    # re-fetch signature skip below.
-    exact_cross = materialise(
-        old_sigs.select(F.col("url").alias("id_b"), "text_sha")
-        .join(
-            F.broadcast(
-                new_hashed.select(F.col("url").alias("id_a"), "text_sha")
-            ),
-            "text_sha",
-        )
-        .select("id_a", "id_b"),
+    # The probe hits are materialised tagged (see OLD). Old rows of
+    # one sha share one cluster, so the star's old center stands for
+    # all of them.
+    old_hits = materialise(
+        old_sigs.select("url", "text_sha")
+        .join(F.broadcast(new_hashed.select("text_sha")), "text_sha",
+              "left_semi")
+        .select(_tag(OLD, "url"), "text_sha"),
         caches,
     )
+    exact = exact_star_edges(old_hits.unionByName(
+        new_hashed.select(_tag(NEW, "url"), "text_sha")
+    )).filter(_is(NEW, "id_b"))
 
     # ---- signatures: EXACT RE-FETCHES SKIP THE SIGNATURE STAGE ------
     # A new doc byte-identical to a committed one (unchanged page,
     # re-crawled) needs no shingles/minhash: identical text ⇒
     # identical signature ⇒ identical band keys, so any near-dup
     # another doc would find through it, it finds through the OLD
-    # copy via the cross tier, and the re-fetch itself joins the old
-    # cluster through exact_cross. Real increments are dominated by
+    # copy via the cross tier, and the re-fetch (a delta doc whose sha
+    # a probe hit holds) joins the old cluster through its exact edge
+    # from an old star center. Real increments are dominated by
     # re-fetches, and the signature scan is the pipeline's most
     # expensive stage — this is the increment's biggest lever. The
     # skipped rows also stay OUT of the signatures snapshot union
     # below (their sha's representative is already committed), which
     # restores the full run's reps-only snapshot contract.
-    refetch_urls = exact_cross.select(F.col("id_a").alias("url"))
     to_sign = lin.observe(
-        new_docs.join(F.broadcast(refetch_urls), "url", "left_anti"),
+        new_docs.join(F.broadcast(old_hits.select("text_sha")), "text_sha",
+                      "left_anti"),
         "incr_signed",
     )
     # signed with the BASE corpus's drop set (signatures.py store)
@@ -224,56 +225,56 @@ def run_incremental(new_web: DataFrame, catalog,
     # is roughly where |delta| stops fitting a broadcast anyway.
     nb = materialise(
         band_keys(new_sigs, "url", "minhash", cfg).select(
-            F.col("url").alias("id_a"), "band_key"
+            _tag(NEW, "url"), "band_key"
         ),
         caches,
     )
     ob_hit = materialise(
         band_keys(old_sigs, "url", "minhash", cfg)
-        .select(F.col("url").alias("id_b"), "band_key")
-        .join(F.broadcast(nb.select("band_key")), "band_key", "left_semi"),
+        .join(F.broadcast(nb.select("band_key")), "band_key", "left_semi")
+        .select(_tag(OLD, "url"), "band_key"),
         caches,
     )
-    # hot-band cap on the COMBINED matched-band population — the
-    # mirror of the full run's cap (a band with > max_band_size
-    # members total is dropped there too). Capping only one side is a
-    # measured catastrophe: boilerplate bands shared by delta and
-    # corpus produce |new_band| × cap cross pairs per band. Sizes are
-    # computed on the matched subset only (ob_hit, whose keys are all
-    # delta keys), never the full old band table: one aggregation over
-    # both sides' rows.
-    hot = (
-        nb.select("band_key").unionByName(ob_hit.select("band_key"))
-        .groupBy("band_key").count()
-        .filter(F.col("count") > cfg.max_band_size)
-        .select("band_key")
-    )
-    # materialised: consumed by the jaccard b-side semi-broadcast AND
-    # the outer pair join — a broadcast subtree evaluates
-    # independently, so without the cut the band-match chain runs twice
-    cross_pairs = materialise(
-        ob_hit.join(F.broadcast(hot), "band_key", "left_anti")
-        .join(
-            F.broadcast(nb.join(F.broadcast(hot), "band_key", "left_anti")),
-            "band_key",
-        )
-        .select("id_a", "id_b")
-        .distinct(),
-        caches,
-    )
-    near_cross = _cross_jaccard_edges(cross_pairs, new_sigs, old_sigs, cfg)
+    # one bucket pass over both sides' rows of every matched band, so
+    # the cap counts the COMBINED population, as the full run's does.
+    # Capping one side only is a measured catastrophe: boilerplate
+    # bands shared by delta and corpus emit |new_band| × cap cross
+    # pairs per band. Intra-delta pairs come from candidate_pairs.
+    nb_hit = nb.join(F.broadcast(ob_hit.select("band_key")), "band_key",
+                     "left_semi")
+    cross = bucket_pairs(
+        ob_hit.unionByName(nb_hit), "url", cfg.max_band_size
+    ).filter(_is(OLD, "id_a") & _is(NEW, "id_b"))
 
-    # ---- minhash tier within the increment (normal bucket path) ----
-    # materialised: exact_jaccard_edges reads its pairs three times
-    intra_cands = materialise(
-        candidate_pairs(new_sigs, "url", "minhash", cfg, caches=caches),
+    # ---- exact-Jaccard verify, within and vs old -------------------
+    # materialised: exact_jaccard_edges reads its pairs three times,
+    # and the old-shingle prune below a fourth
+    pairs = materialise(
+        candidate_pairs(new_sigs.select(_tag(NEW, "url"), "minhash"), "url",
+                        "minhash", cfg, caches=caches)
+        .unionByName(cross.distinct()),
         caches,
     )
-    near_intra = exact_jaccard_edges(intra_cands, new_sigs, "url", cfg).select(
-        "id_a", "id_b"
+    # a broadcast semi-join prunes the old (url, shingles) scan to the
+    # paired rows BEFORE the shingles move: the snapshot's array column
+    # is read once and never shuffles (measured: shuffling it was this
+    # plan's original bottleneck). Materialised tagged (see OLD).
+    paired_old = pairs.filter(_is(OLD, "id_a")).select(
+        _untag("id_a").alias("url")
     )
-    # exact tier within the increment: the batch plan's star edges
-    intra_exact = exact_star_edges(new_hashed)
+    old_shingles = materialise(
+        sig_snap.select("url", "shingles")
+        .join(F.broadcast(paired_old), "url", "left_semi")
+        .select(_tag(OLD, "url"), "shingles"),
+        caches,
+    )
+    new_shingles = new_sigs.select(_tag(NEW, "url"), "shingles")
+    near = exact_jaccard_edges(pairs, new_shingles.unionByName(old_shingles),
+                               "url", cfg).drop("jaccard")
+    # materialised: read by the old-label broadcast AND the delta-side
+    # union below — a broadcast subtree evaluates independently, so
+    # without the cut the verify runs twice
+    edges = materialise(exact.unionByName(near), caches)
 
     # ---- frozen-base clustering ------------------------------------
     # old matches become edges to the OLD CLUSTER LABEL (not the old
@@ -286,26 +287,24 @@ def run_incremental(new_web: DataFrame, catalog,
     # else its smallest delta url. The same device as
     # dedup_exact.or_key_components; nothing reads the old labels
     # beyond the matched ones.
-    def delta(c):
-        return F.concat(F.lit("\x01"), F.col(c)).alias(c)
-
     matched = lin.observe(
-        old_clusters.withColumnRenamed("url", "id_b")
-        .join(F.broadcast(exact_cross.unionByName(near_cross)), "id_b")
-        .select(delta("id_a"),
-                F.concat(F.lit("\x00"), "cluster_id").alias("id_b"))
+        cluster_snap.join(
+            F.broadcast(edges.filter(_is(OLD, "id_a")).select(
+                _untag("id_a").alias("url"), "id_b"
+            )),
+            "url",
+        )
+        .select(F.col("id_b").alias("id_a"),
+                _tag(OLD, "cluster_id").alias("id_b"))
         .distinct(),
         "incr_old_matches",
     )
-    # ONE eager materialization of the full edge set before CC, so
-    # CC's probe reads blocks. Its row count rides the same job
-    # (Observation).
+    # ONE eager materialization of the CC input, so CC's probe reads
+    # blocks. Its row count rides the same job (Observation).
     edge_obs = Observation()
     all_edges = materialise(
-        matched.unionByName(
-            near_intra.unionByName(intra_exact)
-            .select(delta("id_a"), delta("id_b"))
-        ).observe(edge_obs, F.count(F.lit(1)).alias("rows")),
+        matched.unionByName(edges.filter(_is(NEW, "id_a")))
+        .observe(edge_obs, F.count(F.lit(1)).alias("rows")),
         caches,
     )
     # bounded wait, never Observation.get: a metric that does not fire
@@ -313,9 +312,7 @@ def run_incremental(new_web: DataFrame, catalog,
     edge_stats = Lineage.get_fired(edge_obs, timeout=10.0)
     if edge_stats is not None:
         lin.record("incr_edges", **edge_stats)
-    comp = connected_components(all_edges.select(
-        F.col("id_a").alias("u"), F.col("id_b").alias("v")
-    ))
+    comp = connected_components(all_edges)
 
     # a new doc that bridges two old clusters joins the smaller label;
     # every other old label in its component is one a later compaction
@@ -327,7 +324,7 @@ def run_incremental(new_web: DataFrame, catalog,
     else:
         comp = lin.observe(
             comp, "clusters_bridged",
-            n=F.count_if(F.col("u").startswith("\x00")
+            n=F.count_if(_is(OLD, "u")
                          & (F.col("u") != F.col("component"))),
         )
     # delta rows only, both tags stripped; a doc with no edge is its
@@ -335,9 +332,9 @@ def run_incremental(new_web: DataFrame, catalog,
     assignments = (
         new_docs.select("url")
         .join(
-            comp.filter(F.col("u").startswith("\x01")).select(
-                F.substr("u", F.lit(2)).alias("url"),
-                F.substr("component", F.lit(2)).alias("cluster_id"),
+            comp.filter(_is(NEW, "u")).select(
+                _untag("u").alias("url"),
+                _untag("component").alias("cluster_id"),
             ),
             "url", "left",
         )

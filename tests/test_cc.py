@@ -46,12 +46,14 @@ def test_cc_checkpoint_resume(spark, tmp_path):
         [(f"{i:02d}", f"{i+1:02d}") for i in range(9)], ["u", "v"]
     )
     got1 = {r["u"]: r["component"]
-            for r in connected_components(edges, catalog=cat, table="t").collect()}
+            for r in connected_components(edges, catalog=cat, table="t",
+                                          small_graph_cap=0).collect()}
     assert set(got1.values()) == {"00"}
     # resume: catalog already converged — a fresh call starting from the
     # committed snapshot converges immediately to the same labels
     got2 = {r["u"]: r["component"]
-            for r in connected_components(edges, catalog=cat, table="t").collect()}
+            for r in connected_components(edges, catalog=cat, table="t",
+                                          small_graph_cap=0).collect()}
     assert got2 == got1
 
 
@@ -143,13 +145,13 @@ def test_cc_resume_ignores_stale_snapshot_of_other_graph(spark, tmp_path):
     eA = spark.createDataFrame([("a", "b"), ("b", "c"), ("x", "y")],
                                "u string, v string")
     labA = {r["u"]: r["component"]
-            for r in connected_components(eA, catalog=cat,
-                                          table="t").collect()}
+            for r in connected_components(eA, catalog=cat, table="t",
+                                          small_graph_cap=0).collect()}
     assert labA == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
     eB = spark.createDataFrame([("p", "q")], "u string, v string")
     labB = {r["u"]: r["component"]
-            for r in connected_components(eB, catalog=cat,
-                                          table="t").collect()}
+            for r in connected_components(eB, catalog=cat, table="t",
+                                          small_graph_cap=0).collect()}
     assert labB == {"p": "p", "q": "p"}
 
 
@@ -161,14 +163,15 @@ def test_cc_resume_of_converged_run_confirms_in_one_round(spark, tmp_path):
     cat = ParquetSnapshotCatalog(tmp_path / "cat")
     e = spark.createDataFrame([("a", "b"), ("b", "c")], "u string, v string")
     lab1 = {r["u"]: r["component"]
-            for r in connected_components(e, catalog=cat,
-                                          table="t").collect()}
+            for r in connected_components(e, catalog=cat, table="t",
+                                          small_graph_cap=0).collect()}
     it = cat.latest_meta("t")["iteration"]
     # resume with max_iter == committed iteration: previously raised
     # 'no fixpoint'; now the clamped single confirmation round passes
     lab2 = {r["u"]: r["component"]
             for r in connected_components(e, catalog=cat, table="t",
-                                          max_iter=it).collect()}
+                                          max_iter=it,
+                                          small_graph_cap=0).collect()}
     assert lab2 == lab1 == {"a": "a", "b": "a", "c": "a"}
 
 

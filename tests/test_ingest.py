@@ -324,8 +324,10 @@ def test_replay_with_unassignable_docs_and_complete_outdir_is_plain_skip(
 #: fold_batch). The fold with nested persist() intermediates and
 #: separate bookkeeping actions ran 151 here; the flattened one 74;
 #: without the sha-bloom gate 61; with tagged-vertex labels (no
-#: corpus-wide label lookup) 54 (the budget keeps ~25% headroom).
-FOLD_JOB_BUDGET = 67
+#: corpus-wide label lookup) 54; with the batch plan's exact star,
+#: band cap and Jaccard verify over tagged rows 53 (the budget keeps
+#: ~25% headroom).
+FOLD_JOB_BUDGET = 66
 
 
 def _persistent_rdd_ids(sc) -> set[int]:
@@ -437,3 +439,42 @@ def test_delta_doc_bridging_two_old_clusters_joins_smaller_label(
     a0 = " ".join(words[:-15] + [f"t{i}" for i in range(14)] + ["u14"])
     fold_batch(spark.createDataFrame([("a0", a0)], SCHEMA), 2, cat, cfg=cfg)
     assert _clusters(spark, cat)["a0"] == "p1"
+
+
+@pytest.mark.parametrize("cap, n1_label", [(1, "n1"), (None, "o1")])
+def test_fold_band_cap_counts_delta_and_corpus_together(
+        spark, tmp_path, cap, n1_label):
+    """The new×old band cap is the full run's: a band's members are
+    counted over the delta AND the corpus together. o1 (base) and its
+    near dup n1 (delta) are each their band's only member on their own
+    side, so a one-sided cap of 1 would pair them; the combined count
+    is 2, so at ``max_band_size=1`` n1 gets its own label."""
+    cfg = DedupConfig() if cap is None else DedupConfig(max_band_size=cap)
+    cat = ParquetSnapshotCatalog(tmp_path / "cat")
+    fold_batch(spark.createDataFrame([("o1", BASE)], SCHEMA), 0, cat, cfg=cfg)
+    n1 = BASE.replace("winter", "summer")
+    fold_batch(spark.createDataFrame([("n1", n1)], SCHEMA), 1, cat, cfg=cfg)
+    assert _clusters(spark, cat) == {"o1": "o1", "n1": n1_label}
+
+
+def test_identical_delta_docs_are_signed_and_their_refetch_is_not(
+        spark, tmp_path):
+    """Two byte-identical new docs in one fold are both signed and form
+    one cluster labelled with the smaller url, so the committed rows of
+    one sha share one cluster. A later fold's re-fetch of that content
+    joins that label, although its url sorts first, and skips signing:
+    the signatures snapshot gains no row."""
+    cfg = DedupConfig()
+    cat = ParquetSnapshotCatalog(tmp_path / "cat")
+    fold_batch(spark.createDataFrame(INC0, SCHEMA), 0, cat, cfg=cfg)
+    n_base = cat.read(spark, "signatures").count()
+    page = "two identical pages of brand new words " * 8
+    fold_batch(spark.createDataFrame([("d2", page), ("d1", page)], SCHEMA),
+               1, cat, cfg=cfg)
+    got = _clusters(spark, cat)
+    assert got["d1"] == got["d2"] == "d1"
+    n_signed = cat.read(spark, "signatures").count()
+    assert n_signed == n_base + 2
+    fold_batch(spark.createDataFrame([("c0", page)], SCHEMA), 2, cat, cfg=cfg)
+    assert _clusters(spark, cat)["c0"] == "d1"
+    assert cat.read(spark, "signatures").count() == n_signed
