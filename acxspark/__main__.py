@@ -109,16 +109,19 @@ def _text_lines(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def _write_lines(lines: DataFrame, path: str) -> int:
-    """Write the ``value`` column as text in ``_ord`` order and return
-    the line count from the same pass. The observe node sits ABOVE the
-    sort: below a global sort the range sampler scans the child twice
-    and the metric double-counts."""
+def _write_lines(lines: DataFrame, path: str, line_fn=None) -> int:
+    """Write the ``value`` column as text in ``_ord`` order, through
+    ``line_fn`` when given, and return the line count from the same
+    pass. The line function and the observe node sit ABOVE the sort:
+    below a global sort the range sampler runs the child twice, so the
+    function would run twice per line and the metric double-count."""
     from pyspark.sql import Observation
 
     obs = Observation()
+    value = F.col("value")
     (
-        lines.orderBy("_ord").select("value")
+        lines.orderBy("_ord")
+        .select((line_fn(value) if line_fn else value).alias("value"))
         .observe(obs, F.count(F.lit(1)).alias("n"))
         .write.mode("overwrite").text(path)
     )
@@ -154,8 +157,8 @@ def cmd_normalize(args, spark) -> int:
     from acxspark.functions.lineops import normalize_lines
 
     lines = _text_lines(spark, args.input)
-    out = lines.select(normalize_lines(F.col("value")).alias("value"), "_ord")
-    _emit({"normalized": _write_lines(out, args.out), "out": args.out})
+    _emit({"normalized": _write_lines(lines, args.out, normalize_lines),
+           "out": args.out})
     return 0
 
 
@@ -201,8 +204,8 @@ def cmd_redact(args, spark) -> int:
     from acxspark.functions.lineops import redact_lines
 
     lines = _text_lines(spark, args.input).filter(F.col("value") != "")
-    out = lines.select(redact_lines(F.col("value")).alias("value"), "_ord")
-    _emit({"redacted": _write_lines(out, args.out), "out": args.out})
+    _emit({"redacted": _write_lines(lines, args.out, redact_lines),
+           "out": args.out})
     return 0
 
 

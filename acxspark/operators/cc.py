@@ -16,15 +16,30 @@ Beyond" (SOCC'14, public) — O(log n) rounds of two equi-join steps:
   smaller neighbors + u itself to the minimum.
 
 Each round is groupBy(min) + join — partial aggregation map-side, no
-windows. Lineage is truncated every round via localCheckpoint, and
+windows. Lineage is truncated every round via localCheckpoint (the
+round before is released once its successor is materialised), and
 optionally committed to a Catalog snapshot so a killed job resumes
 from the last finished round (north_rule resumability).
+
+String ids (urls, tagged record/key vertices: 30-200 B) cross the
+rounds as 8-byte xxhash64 longs, so every round shuffles 16 B per
+edge. A (id, hash) node table maps the converged components back:
+each label is the component's minimum ORIGINAL id, because hash order
+is not string order. A hash collision between two distinct ids would
+silently merge their components, so the node table is screened first;
+on a collision the rounds run over the strings themselves.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
+
+from acxspark.plans.blocks import CheckpointBlocks
+
+# the 8-byte key a string vertex rides the rounds as
+_vertex_hash = F.xxhash64
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -137,10 +152,18 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
     the cap routes straight to the distributed loop. Set
     ``small_graph_cap=0`` to force the distributed path.
 
+    On the distributed path string ids ride the rounds as
+    :func:`_vertex_hash` longs (module docstring): one job builds and
+    screens the distinct ``(id, hash)`` node table, the labels map
+    back through it, and a collision in it runs the rounds over the
+    strings instead. Long ids are their own keys.
+
     Resume is input-guarded: every round's snapshot carries a
-    fingerprint of the ORIGINAL edge set, and a resume whose current
-    edges don't match it recomputes from scratch instead of silently
-    returning another graph's components.
+    fingerprint of the edge set the rounds start from (the hashed
+    edges when the ids are hashed), and a resume whose current edges
+    don't match it recomputes from scratch instead of silently
+    returning another graph's components — so a snapshot of string
+    rounds reads as stale to hashed rounds, and vice versa.
     """
     # backtick-quote, not selectExpr interpolation: column names with
     # dots/spaces must not be re-parsed as SQL expressions (df[name]
@@ -174,15 +197,38 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
             return _union_find_labels(pairs, e.sparkSession, schema)
         del pdf  # over cap: fall through to the distributed loop
 
+    nodes = None
+    if isinstance(e.schema["u"].dataType, StringType):
+        # built from the INPUT edges, before a resume swaps in a
+        # snapshot; the ids are distinct, so two rows per hash IS a
+        # collision. The screen job materialises the checkpoint that
+        # the label map-back reads.
+        nodes = (
+            e_raw.select(F.col("u").alias("id"))
+            .union(e_raw.select(F.col("v").alias("id"))).distinct()
+            .select("id", _vertex_hash(F.col("id")).alias("h"))
+            .localCheckpoint(eager=False)
+        )
+        if nodes.groupBy("h").count().filter(F.col("count") > 1).limit(1).count():
+            CheckpointBlocks(nodes).unpersist()
+            nodes = None
+        else:
+            e = e_raw.select(
+                _vertex_hash(F.col("u")).alias("u"),
+                _vertex_hash(F.col("v")).alias("v"),
+            ).distinct()
+
     start_iter = 0
     prev = None
     stamp = None
+    held = None  # blocks of the checkpoint the next round reads
     if catalog is not None:
         # checkpoint before stamping: the fingerprint action then
         # materializes the deduped edges once, and round 0 reads the
         # checkpoint blocks instead of re-running the distinct shuffle
         e = e.localCheckpoint(eager=False)
-        stamp = list(_checksum(e))  # fingerprint of the INPUT edges
+        held = CheckpointBlocks(e)
+        stamp = list(_checksum(e))  # fingerprint of the round-0 edges
         if catalog.has(table):
             m = catalog.latest_meta(table)
             if m.get("input") == stamp:
@@ -206,6 +252,11 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
         # halves the per-round scheduling barrier of the O(log n) loop
         e = _small_star(_large_star(e)).localCheckpoint(eager=False)
         cur = _checksum(e)
+        # the checksum materialised this round: its predecessor's
+        # blocks are read by nothing any more
+        if held is not None:
+            held.unpersist()
+        held = CheckpointBlocks(e)
         if catalog is not None:
             catalog.write(table, e, meta={"iteration": i + 1,
                                           "checksum": list(cur),
@@ -232,7 +283,14 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
     roots = e.select(F.col("v").alias("u")).distinct().withColumn(
         "component", F.col("u")
     )
-    return labels.union(roots).groupBy("u").agg(F.min("component").alias("component"))
+    labels = labels.union(roots).groupBy("u").agg(
+        F.min("component").alias("component"))
+    if nodes is None:
+        return labels
+    named = nodes.join(labels.withColumnRenamed("u", "h"), "h")
+    canon = named.groupBy("component").agg(F.min("id").alias("label"))
+    return named.join(canon, "component").select(
+        F.col("id").alias("u"), F.col("label").alias("component"))
 
 
 def cluster_assignments(all_ids: DataFrame, id_col: str,

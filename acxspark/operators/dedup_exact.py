@@ -17,9 +17,10 @@ Parity with the reference's three exact tiers:
 3. ``or_key_components``: reference import dedup treats email-dup OR
    phone-dup as the same identity (src/storage.cpp:562-570) — a
    transitive closure, routed through ``connected_components`` (the
-   package's one union-find) over the bipartite record↔key graph
-   (SURVEY §7.3.2); vertex tags make CC's min-id label the min record
-   id.
+   package's one union-find, which also owns the slim 8-byte vertex
+   rule of its distributed rounds) over the bipartite record↔key
+   graph (SURVEY §7.3.2); vertex tags make CC's min-id label the min
+   record id.
 """
 
 from __future__ import annotations
@@ -84,7 +85,6 @@ def exact_star_edges(hashed: DataFrame,
 
 
 def or_key_components(df: DataFrame, id_col: str, key_cols: list[str],
-                      hash_nodes: bool = True,
                       small_graph_cap: int = 1_000_000) -> DataFrame:
     """Transitive OR-key identity → (id, cluster_id).
 
@@ -95,23 +95,9 @@ def or_key_components(df: DataFrame, id_col: str, key_cols: list[str],
     id of the component. The record rows are kept and the one-char tag
     is stripped from both columns. ``connected_components`` picks its
     own physical path: the driver union-find up to
-    ``small_graph_cap`` edge rows, the distributed star-join beyond.
-
-    With ``hash_nodes`` (default) a graph over the cap (one
-    short-circuit ``limit(cap+1).count()`` probe) instead rides CC's
-    O(log n) rounds of groupBy+join as 8-byte xxhash64 longs rather
-    than full strings (emails/urls 30–80 B — ~5× the per-round
-    shuffle), the same slim-id device as lsh.py's band shuffle. Hashing
-    loses the order, so the label is re-derived as the min record id
-    per component; the original record ids come back via one inner
-    join on the hash, which also strips key nodes (their hashes match
-    no record id). Unlike LSH — where a 64-bit collision only adds a
-    candidate the exact verify filters — a node-hash collision here
-    would silently MERGE two components, so the hashed node set is
-    first screened with a second-seed hash (one map-side-combinable
-    agg over 16 B rows, ~half a CC round's volume); a detected
-    collision (P ≈ n²·2⁻⁶⁴ — ~0.4 expected at 4×10⁹ nodes) falls back
-    to the exact string-node path.
+    ``small_graph_cap`` edge rows, the distributed star-join beyond,
+    where the string vertices ride the rounds as 8-byte hashes and
+    the labels still come from the original (tagged) strings.
     """
     rid = F.concat(F.lit("\x00"), F.col(id_col).cast("string"))
     edges = None
@@ -123,50 +109,6 @@ def or_key_components(df: DataFrame, id_col: str, key_cols: list[str],
                  # a NULL record id is no vertex on any CC path
                  & F.col(id_col).isNotNull())
         edges = e if edges is None else edges.union(e)
-
-    if hash_nodes and (
-        edges.limit(small_graph_cap + 1).count() > small_graph_cap
-    ):
-        # screen EVERY hash that will meet the join below: edge nodes
-        # AND all record ids — a keyless record never enters the edge
-        # set, but its hashed id still probes comp, so a collision
-        # with any graph node would spuriously attach (or even
-        # relabel) a component; include those ids so that class of
-        # collision also triggers the string-path fallback
-        nodes = edges.select(F.col("u").alias("n")).union(
-            edges.select(F.col("v").alias("n"))
-        ).union(
-            df.select(rid.alias("n"))
-        ).select(
-            F.xxhash64("n").alias("h1"),
-            F.xxhash64("n", F.lit(7)).alias("h2"),
-        )
-        collided = (
-            nodes.groupBy("h1")
-            .agg(F.count_distinct("h2").alias("c"))
-            .filter(F.col("c") > 1)
-            .limit(1)
-            .count()
-        )
-        if collided == 0:
-            hedges = edges.select(
-                F.xxhash64("u").alias("u"), F.xxhash64("v").alias("v")
-            )
-            comp = connected_components(hedges, small_graph_cap=0)
-            records = df.select(
-                F.col(id_col).cast("string").alias("_rid")
-            ).distinct().select(
-                F.xxhash64(F.concat(F.lit("\x00"), "_rid")).alias("u"),
-                F.col("_rid"),
-            ).join(comp, "u")
-            canon = records.groupBy("component").agg(
-                F.min("_rid").alias("cluster_id")
-            )
-            return (
-                records.join(canon, "component")
-                .select(F.col("_rid").alias(id_col), F.col("cluster_id"))
-            )
-
     comp = connected_components(edges, small_graph_cap=small_graph_cap)
     return comp.filter(F.col("u").startswith("\x00")).select(
         F.substr("u", F.lit(2)).alias(id_col),

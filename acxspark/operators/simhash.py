@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from acxspark.config import DEFAULT_CONFIG, DedupConfig
-from acxspark.operators.lsh import (huge_band_keys, join_back_ids, slim_ids,
+from acxspark.operators.lsh import (bucket_pairs, join_back_ids, slim_ids,
                                     track_cache)
 
 
@@ -67,12 +67,13 @@ def simhash_candidate_pairs(df: DataFrame, id_col: str,
        ``simhash_band_rows`` counter (``total`` / ``dropped_by_cap``)
        so the drop volume is observable, not assumed (one eager count
        job at call time; the pairs are the same either way);
-    3. the capped buckets are grouped by key, the (id, fingerprint)
-       structs collected (≤ cap × 16 B per buffer — the sampled
-       catastrophic-bucket pre-drop runs FIRST, the exact cap right
-       after the aggregation), and pairs + exact Hamming emitted
-       map-side with a double explode — one shuffle total, and the
-       popcount filter runs before any pair row crosses another wire.
+    3. the buckets go through the LSH tier's own kernel
+       (:func:`acxspark.operators.lsh.bucket_pairs`) with the
+       (id, fingerprint) struct as the member: ≤ cap × 16 B per
+       buffer, one shuffle total, and the popcount filter runs on the
+       emitted pairs before any pair row crosses another wire. A doc
+       sits in a chunk bucket once, so the struct order IS the id
+       order.
     """
     # string ids hash to 8-byte longs for the bucket shuffle and join
     # back at the end (lsh.slim_ids; the collision failure mode here
@@ -82,10 +83,11 @@ def simhash_candidate_pairs(df: DataFrame, id_col: str,
     # Hamming check needs no rejoin against the signature frame
     keyed = (
         src.select(
-            F.col(key_col), F.col(sim_col),
+            F.struct(F.col(key_col).alias("id"),
+                     F.col(sim_col).alias("sim")).alias("m"),
             F.explode(chunk_keys(F.col(sim_col), cfg)).alias("c"))
-        .select(key_col, sim_col,
-                F.xxhash64(F.col("c.chunk_idx"), F.col("c.chunk_val")).alias("band_key"))
+        .select("m", F.xxhash64(F.col("c.chunk_idx"),
+                                F.col("c.chunk_val")).alias("band_key"))
     ).persist()
     track_cache(keyed, caches)
     if lineage is not None:
@@ -113,31 +115,12 @@ def simhash_candidate_pairs(df: DataFrame, id_col: str,
             total=int(row["total"]),
             dropped_by_cap=int(row["dropped"]),
         )
-    # single full-volume shuffle, like lsh.candidate_pairs: the sampled
-    # catastrophic-bucket pre-drop replaces an exact pre-count (itself a
-    # full-volume shuffle when most bucket keys are distinct) and the
-    # exact cap is enforced post-agg below — identical output, half
-    # the shuffled bytes.
-    kc = keyed.join(
-        F.broadcast(huge_band_keys(keyed, cfg.max_chunk_bucket)),
-        "band_key", "left_anti",
-    )
-    n_ms = F.size(F.col("ms"))
-    grouped = (
-        kc.groupBy("band_key")
-        .agg(F.collect_list(
-            F.struct(F.col(key_col).alias("id"),
-                     F.col(sim_col).alias("sim"))).alias("ms"))
-        .filter((n_ms >= 2) & (n_ms <= cfg.max_chunk_bucket))
-    )
-    ham_b = hamming_distance(F.col("a.sim"), F.col("b.sim"))
+    ham = hamming_distance(F.col("id_a.sim"), F.col("id_b.sim"))
     pairs = (
-        grouped.select(F.col("ms"), F.explode("ms").alias("a"))
-        .select(F.col("a"), F.explode("ms").alias("b"))
-        .filter(F.col("a.id") < F.col("b.id"))
-        .filter(ham_b <= cfg.simhash_max_hamming)
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                ham_b.alias("hamming"))
+        bucket_pairs(keyed, "m", cap=cfg.max_chunk_bucket)
+        .filter(ham <= cfg.simhash_max_hamming)
+        .select(F.col("id_a.id").alias("id_a"), F.col("id_b.id").alias("id_b"),
+                ham.alias("hamming"))
         .distinct()
     )
     if key_col != id_col:

@@ -1,12 +1,13 @@
-"""Executor-block lifetime shared by the batch plan (plans/pipeline.py)
-and the crawl fold (plans/incremental.py)."""
+"""Executor-block lifetime shared by the batch plan (plans/pipeline.py),
+the crawl fold (plans/incremental.py) and the rounds of
+operators/cc.py."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
 
-class _CheckpointBlocks:
+class CheckpointBlocks:
     """``unpersist()`` handle for the blocks of an eager
     localCheckpoint, so ``release()`` drops them too.
     ``DataFrame.unpersist`` does not reach them: the checkpointed RDD
@@ -29,7 +30,7 @@ def materialise(df: DataFrame, caches: list) -> DataFrame:
     the nested tree beneath it. Observations attached below fire in
     that job."""
     cp = df.localCheckpoint(eager=True)
-    caches.append(_CheckpointBlocks(cp))
+    caches.append(CheckpointBlocks(cp))
     return cp
 
 

@@ -4,6 +4,7 @@ large/small-star round, plus catalog checkpoint/resume."""
 import pyspark.sql.functions as F
 
 from acxspark.catalog import ParquetSnapshotCatalog
+from acxspark.operators import cc
 from acxspark.operators.cc import cluster_assignments, connected_components
 
 
@@ -181,3 +182,69 @@ def test_cc_handles_exotic_column_names(spark):
     lab = {r["u"]: r["component"]
            for r in connected_components(e).collect()}
     assert lab == {"a": "a", "b": "a"}
+
+
+def test_string_ids_hashed_rounds_label_min_original_id(spark):
+    """Forced-distributed string ids ride the rounds as hashes; the
+    label is still the component's minimum STRING id, even where the
+    hash order puts another member first."""
+    ids = [f"v{i:02d}" for i in range(40)]
+    h = dict(spark.createDataFrame([(i,) for i in ids], "id string")
+             .select("id", F.xxhash64("id").alias("h")).collect())
+    chains = [ids[k:k + 10] for k in range(0, 40, 10)]
+    # the case under test: in some chain the min hash is not the min id
+    assert any(min(c, key=h.get) != min(c) for c in chains)
+    e = spark.createDataFrame(
+        [(a, b) for c in chains for a, b in zip(c, c[1:])], "u string, v string")
+    fast = sorted(tuple(r) for r in connected_components(e).collect())
+    slow = sorted(tuple(r) for r in connected_components(
+        e, small_graph_cap=0).collect())
+    assert slow == fast == sorted((i, c[0]) for c in chains for i in c)
+
+
+def test_vertex_hash_collision_runs_string_rounds(spark, tmp_path, monkeypatch):
+    """A collision in the node table sends the rounds over the strings
+    (the committed round snapshot holds them), with unchanged labels;
+    that snapshot reads as stale to a later hashed run of the same
+    edges, which recomputes instead of resuming it."""
+    cat = ParquetSnapshotCatalog(tmp_path / "cat")
+    e = spark.createDataFrame([("b", "c"), ("c", "a"), ("x", "y")],
+                              "u string, v string")
+    want = {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
+
+    def run():
+        return {r["u"]: r["component"] for r in connected_components(
+            e, catalog=cat, table="t", small_graph_cap=0).collect()}
+
+    with monkeypatch.context() as m:
+        m.setattr(cc, "_vertex_hash", lambda c: F.lit(0).cast("long"))
+        assert run() == want
+    assert cat.read(spark, "t").schema["u"].dataType.typeName() == "string"
+    assert run() == want
+    assert cat.read(spark, "t").schema["u"].dataType.typeName() == "long"
+
+
+def test_distributed_rounds_release_superseded_checkpoints(spark, monkeypatch):
+    """Each round's checkpoint is released once the next round has
+    materialised: a chain needing many rounds leaves a bounded number
+    of persisted RDDs behind (the final round and the node table that
+    the returned labels read), not one per round."""
+    rounds = []
+    checksum = cc._checksum
+    monkeypatch.setattr(cc, "_checksum",
+                        lambda df: rounds.append(1) or checksum(df))
+    sc = spark.sparkContext
+    n = 64
+    perm = [(i * 37) % n for i in range(n)]  # a scrambled path graph
+    for ddl, cast in (("u long, v long", int), ("u string, v string",
+                                                lambda x: f"n{x:03d}")):
+        rounds.clear()
+        e = spark.createDataFrame(
+            [(cast(a), cast(b)) for a, b in zip(perm, perm[1:])], ddl)
+        before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
+        got = {r["component"] for r in connected_components(
+            e, small_graph_cap=0).collect()}
+        after = set(sc._jsc.getPersistentRDDs().keySet().toArray())
+        assert got == {cast(0)}
+        assert len(rounds) >= 4, ddl
+        assert len(after - before) <= 2, ddl

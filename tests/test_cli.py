@@ -320,6 +320,30 @@ def test_line_commands_pass_whitespace_only_lines_verbatim(spark, capsys,
         assert _read_text_dir(out) == twin(BLANK_LINES), cmd
 
 
+def test_line_commands_multi_file_order(spark, capsys, tmp_path):
+    """normalize and redact write a DIRECTORY input in (file path,
+    offset) order, like dedupe's first-wins: the bigger later file,
+    which Spark plans first by size, must not come out first."""
+    d = tmp_path / "in"
+    d.mkdir()
+    (d / "part-00000.jsonl").write_text(
+        json.dumps({"email": "First@Example.com", "src": "file0"}) + "\n")
+    later = [json.dumps({"email": f"U{i}@Example.com", "phone": "555 0101",
+                         "pad": "x" * 200}) for i in range(200)]
+    (d / "part-00001.jsonl").write_text("\n".join(later) + "\n")
+    lines = ((d / "part-00000.jsonl").read_text().splitlines()
+             + (d / "part-00001.jsonl").read_text().splitlines())
+    for cmd, twin, count in (("normalize", reference_normalize, "normalized"),
+                             ("redact", reference_redact, "redacted")):
+        out = str(tmp_path / cmd)
+        rc, msgs = run_cli(spark, capsys, cmd, str(d), "--out", out)
+        assert rc == 0
+        got = _read_text_dir(out)
+        assert got == twin(lines), cmd
+        assert '"src":"file0"' in got[0], cmd
+        assert msgs[-1][count] == len(lines), cmd
+
+
 def test_lineops_field_twins_match_column_functions(spark):
     """The python field helpers inside lineops must agree with the
     column-expression implementations (functions/normalize.py,

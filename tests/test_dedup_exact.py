@@ -4,6 +4,7 @@ src/storage.cpp:562-570)."""
 
 import pyspark.sql.functions as F
 
+from acxspark.operators import cc
 from acxspark.operators.dedup_exact import (
     exact_star_edges,
     first_wins,
@@ -68,9 +69,10 @@ def test_or_key_transitive_identity(spark):
     assert got["D"] == "D"
 
 
-def test_or_key_three_paths_identical(spark):
+def test_or_key_three_paths_identical(spark, monkeypatch):
     """Driver union-find (default), distributed CC on hashed long
-    nodes, and distributed CC on string nodes must produce identical
+    vertices, and distributed CC on string vertices (a constant vertex
+    hash collides, which falls back to them) must produce identical
     (id, cluster_id) labels — min record id per component is a
     function of the edge set, not of the physical path."""
     rows = [
@@ -80,10 +82,34 @@ def test_or_key_three_paths_identical(spark):
     df = spark.createDataFrame(rows, ["id", "email", "phone"])
 
     fast = _or_key_labels(df)
-    hashed = _or_key_labels(df, small_graph_cap=0, hash_nodes=True)
-    strings = _or_key_labels(df, small_graph_cap=0, hash_nodes=False)
+    hashed = _or_key_labels(df, small_graph_cap=0)
+    monkeypatch.setattr(cc, "_vertex_hash", lambda c: F.lit(0).cast("long"))
+    strings = _or_key_labels(df, small_graph_cap=0)
     assert fast == hashed == strings
     assert len(fast) == 200
+
+
+#: Spark jobs of ``or_key_components(...).collect()`` on a graph under
+#: the driver cap: connected_components' one size probe and the
+#: collect. When or_key_components probed the graph size itself
+#: before calling connected_components, it ran 4.
+OR_KEY_JOB_BUDGET = 2
+
+
+def test_or_key_small_graph_stays_in_job_budget(spark):
+    rows = [(f"{i:04d}", f"e{i % 23}", f"p{i % 17}" if i % 5 else None)
+            for i in range(200)]
+    df = spark.createDataFrame(rows, ["id", "email", "phone"])
+    sc = spark.sparkContext
+    sc.setJobGroup("or-key-budget", "or_key_components under a job budget")
+    try:
+        got = or_key_components(df, "id", ["email", "phone"]).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(got) == 200
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("or-key-budget"))
+    assert 0 < n_jobs <= OR_KEY_JOB_BUDGET
 
 
 def test_or_key_null_record_id_same_on_every_path(spark):
@@ -96,8 +122,7 @@ def test_or_key_null_record_id_same_on_every_path(spark):
     df = spark.createDataFrame(rows, "id string, email string, phone string")
 
     fast = _or_key_labels(df)
-    assert fast == _or_key_labels(df, small_graph_cap=0, hash_nodes=True) \
-        == _or_key_labels(df, small_graph_cap=0, hash_nodes=False)
+    assert fast == _or_key_labels(df, small_graph_cap=0)
     assert fast == [("A", "A"), ("B", "B"), ("C", "C")]
 
 
@@ -114,8 +139,7 @@ def test_or_key_record_id_shaped_like_key_node_same_on_every_path(spark):
 
     want = sorted([("A", rec), (rec, rec), ("B", "B")])
     assert _or_key_labels(df) == want
-    assert _or_key_labels(df, small_graph_cap=0, hash_nodes=True) == want
-    assert _or_key_labels(df, small_graph_cap=0, hash_nodes=False) == want
+    assert _or_key_labels(df, small_graph_cap=0) == want
 
 
 def test_line_dedup_first_occurrence_across_corpus(spark):
