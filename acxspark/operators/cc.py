@@ -32,7 +32,7 @@ on a collision the rounds run over the strings themselves.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
@@ -40,6 +40,26 @@ from acxspark.plans.blocks import CheckpointBlocks
 
 # the 8-byte key a string vertex rides the rounds as
 _vertex_hash = F.xxhash64
+
+# vertex tags: every FIRST-tagged id ("\x00" + id) sorts before every
+# SECOND-tagged one ("\x01" + id), so a component's min-id label is its
+# smallest FIRST vertex whenever it holds one (the crawl fold tags old
+# ids FIRST, or_key_components its records). untag() strips the tag.
+FIRST, SECOND = "\x00", "\x01"
+
+
+def tag(t: str, c: str | Column) -> Column:
+    """``t`` + the id column ``c``; a column given by name keeps it."""
+    out = F.concat(F.lit(t), F.col(c) if isinstance(c, str) else c)
+    return out.alias(c) if isinstance(c, str) else out
+
+
+def untag(c: str) -> Column:
+    return F.substr(c, F.lit(2))
+
+
+def has_tag(t: str, c: str) -> Column:
+    return F.col(c).startswith(t)
 
 
 def _large_star(edges: DataFrame) -> DataFrame:

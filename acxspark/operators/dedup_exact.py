@@ -29,7 +29,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from acxspark.operators.cc import connected_components
+from acxspark.operators.cc import FIRST, SECOND, connected_components
+from acxspark.operators.cc import has_tag, tag, untag
 
 # id types where unary minus is a valid order-reversal (keep_best)
 _NUMERIC_TYPES = (
@@ -89,30 +90,28 @@ def or_key_components(df: DataFrame, id_col: str, key_cols: list[str],
     """Transitive OR-key identity → (id, cluster_id).
 
     Build bipartite edges record→key for each non-null key and run CC.
-    Record vertices are tagged ``"\\x00" + id`` and key vertices
-    ``"\\x01col:value"``, so every record sorts before every key; since
-    every component holds a record, CC's min-id label IS the min record
-    id of the component. The record rows are kept and the one-char tag
-    is stripped from both columns. ``connected_components`` picks its
-    own physical path: the driver union-find up to
-    ``small_graph_cap`` edge rows, the distributed star-join beyond,
-    where the string vertices ride the rounds as 8-byte hashes and
-    the labels still come from the original (tagged) strings.
+    Records carry CC's FIRST vertex tag and keys (``col:value``) its
+    SECOND, so every record sorts before every key; since every
+    component holds a record, CC's min-id label IS the min record id
+    of the component. The record rows are kept, tags stripped.
+    ``connected_components`` picks its own physical path: the driver
+    union-find up to ``small_graph_cap`` edge rows, the distributed
+    star-join beyond, where the string vertices ride the rounds as
+    8-byte hashes and the labels still come from the original (tagged)
+    strings.
     """
-    rid = F.concat(F.lit("\x00"), F.col(id_col).cast("string"))
+    rid = tag(FIRST, F.col(id_col).cast("string"))
     edges = None
     for kc in key_cols:
-        e = df.select(
-            rid.alias("u"),
-            F.concat(F.lit(f"\x01{kc}:"), F.col(kc).cast("string")).alias("v"),
-        ).filter(F.col(kc).isNotNull() & (F.col(kc).cast("string") != "")
-                 # a NULL record id is no vertex on any CC path
-                 & F.col(id_col).isNotNull())
+        key = F.concat(F.lit(f"{kc}:"), F.col(kc).cast("string"))
+        e = df.select(rid.alias("u"), tag(SECOND, key).alias("v")).filter(
+            F.col(kc).isNotNull() & (F.col(kc).cast("string") != "")
+            # a NULL record id is no vertex on any CC path
+            & F.col(id_col).isNotNull())
         edges = e if edges is None else edges.union(e)
     comp = connected_components(edges, small_graph_cap=small_graph_cap)
-    return comp.filter(F.col("u").startswith("\x00")).select(
-        F.substr("u", F.lit(2)).alias(id_col),
-        F.substr("component", F.lit(2)).alias("cluster_id"),
+    return comp.filter(has_tag(FIRST, "u")).select(
+        untag("u").alias(id_col), untag("component").alias("cluster_id"),
     )
 
 

@@ -12,10 +12,10 @@ text_sha) and `clusters` snapshots to the catalog
                     set probes (a delta doc sharing a probed sha is a
                     re-fetch)
     → signatures:   the delta rows that are not re-fetches
-    → minhash tier: candidate_pairs within the delta; one capped
-                    bucket_pairs over the delta ∪ old rows of every
-                    matched band (its cap counts both sides)
-    → exact-Jaccard verify at τ over both pair sets
+    → minhash tier: one capped bucket_pairs over the delta's band rows
+                    ∪ the old rows of every band the delta holds (its
+                    cap counts both sides, for delta×delta pairs too)
+    → exact-Jaccard verify at τ over those pairs
     → clustering with a FROZEN base: old cluster labels never change
       (downstream consumers hold references to them); new docs join
       the matched old cluster, or form new clusters labeled first-wins
@@ -37,8 +37,8 @@ not by |corpus|/|delta|; at sizes where that matters, run the full
 pipeline as a compaction.
 
 Deliberate semantic deltas from a monolithic full run, documented:
-- the containment tier (page-in-page) does not run across increments
-  — schedule periodic full compactions for it;
+- the containment tier (page-in-page) and the SimHash tier do not run
+  across increments — schedule periodic full compactions for them;
 - a new doc that NEAR-matches two different old clusters cannot merge
   them (labels are frozen): it joins the minimum old label, and the
   other old labels of its component are counted in lineage
@@ -51,14 +51,21 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from acxspark.config import DEFAULT_CONFIG, DedupConfig
 from acxspark.metrics import Lineage
-from acxspark.operators.cc import connected_components
+# CC's vertex tags: every old id sorts before every delta id. A tagged
+# old id reaches a predicate only from behind a materialised cut:
+# above one, the optimizer pushes the predicate (or its inferred IS
+# NOT NULL) into the snapshot scan, tagging every corpus row.
+from acxspark.operators.cc import FIRST as OLD, SECOND as NEW
+from acxspark.operators.cc import connected_components, has_tag, tag, untag
 from acxspark.operators.dedup_exact import exact_star_edges
-from acxspark.operators.lsh import band_keys, bucket_pairs, candidate_pairs
+from acxspark.operators.lsh import band_keys, bucket_pairs
+# the fold makes no candidate_pairs call; the benchmark tracer wraps it here
+from acxspark.operators.lsh import candidate_pairs  # noqa: F401
 from acxspark.operators.signatures import (
     base_stamp, committed_drop_set, with_signatures,
 )
@@ -75,25 +82,6 @@ class IncrementalResult(Releasable):
     # so release() only after consuming it: a released block cannot
     # be recomputed.
     caches: list
-
-
-# vertex tags: every old id sorts before every delta id. A tagged old
-# id reaches a predicate only from behind a materialised cut: above
-# one, the optimizer pushes the predicate (or its inferred IS NOT NULL)
-# into the snapshot scan, tagging every corpus row.
-OLD, NEW = "\x00", "\x01"
-
-
-def _tag(tag: str, c: str) -> Column:
-    return F.concat(F.lit(tag), F.col(c)).alias(c)
-
-
-def _untag(c: str) -> Column:
-    return F.substr(c, F.lit(2))
-
-
-def _is(tag: str, c: str) -> Column:
-    return F.col(c).startswith(tag)
 
 
 def run_incremental(new_web: DataFrame, catalog,
@@ -181,12 +169,12 @@ def run_incremental(new_web: DataFrame, catalog,
         old_sigs.select("url", "text_sha")
         .join(F.broadcast(new_hashed.select("text_sha")), "text_sha",
               "left_semi")
-        .select(_tag(OLD, "url"), "text_sha"),
+        .select(tag(OLD, "url"), "text_sha"),
         caches,
     )
     exact = exact_star_edges(old_hits.unionByName(
-        new_hashed.select(_tag(NEW, "url"), "text_sha")
-    )).filter(_is(NEW, "id_b"))
+        new_hashed.select(tag(NEW, "url"), "text_sha")
+    )).filter(has_tag(NEW, "id_b"))
 
     # ---- signatures: EXACT RE-FETCHES SKIP THE SIGNATURE STAGE ------
     # A new doc byte-identical to a committed one (unchanged page,
@@ -215,60 +203,54 @@ def run_incremental(new_web: DataFrame, catalog,
         caches,
     )
 
-    # ---- minhash tier vs old ---------------------------------------
-    # The incremental contract is delta ≪ corpus, so the delta's band
-    # keys (|delta| × 32 longs) BROADCAST and the old band stream is a
-    # map-side scan of the (url, minhash) columns of EVERY old row,
-    # whose band keys are recomputed here — the corpus is never
-    # shuffled, mirroring the exact tier above. For a delta too
-    # large to broadcast, run the full pipeline instead; the crossover
-    # is roughly where |delta| stops fitting a broadcast anyway.
-    nb = materialise(
-        band_keys(new_sigs, "url", "minhash", cfg).select(
-            _tag(NEW, "url"), "band_key"
-        ),
-        caches,
+    # ---- minhash tier, within and vs old ---------------------------
+    # ONE band table: the delta's band rows ∪ the old rows of every
+    # band the delta holds. The incremental contract is delta ≪ corpus
+    # (fold_batch splits a batch over cfg.incr_max_batch_rows), so the
+    # delta's band keys (|delta| × 32 longs) BROADCAST and the old band
+    # stream is a map-side scan of the (url, minhash) columns of EVERY
+    # old row, whose band keys are recomputed here — the corpus is
+    # never shuffled, mirroring the exact tier above. Materialised
+    # tagged (see OLD): bucket_pairs reads it twice.
+    nb = band_keys(new_sigs, "url", "minhash", cfg).select(
+        tag(NEW, "url"), "band_key"
     )
-    ob_hit = materialise(
+    bands = materialise(
         band_keys(old_sigs, "url", "minhash", cfg)
         .join(F.broadcast(nb.select("band_key")), "band_key", "left_semi")
-        .select(_tag(OLD, "url"), "band_key"),
+        .select(tag(OLD, "url"), "band_key")
+        .unionByName(nb),
         caches,
     )
-    # one bucket pass over both sides' rows of every matched band, so
-    # the cap counts the COMBINED population, as the full run's does.
-    # Capping one side only is a measured catastrophe: boilerplate
-    # bands shared by delta and corpus emit |new_band| × cap cross
-    # pairs per band. Intra-delta pairs come from candidate_pairs.
-    nb_hit = nb.join(F.broadcast(ob_hit.select("band_key")), "band_key",
-                     "left_semi")
-    cross = bucket_pairs(
-        ob_hit.unionByName(nb_hit), "url", cfg.max_band_size
-    ).filter(_is(OLD, "id_a") & _is(NEW, "id_b"))
+    # ONE bucket pass, so the cap counts every member of a band, delta
+    # and corpus together, as the full run's does — for delta×delta
+    # pairs too. Capping one side only is a measured catastrophe:
+    # boilerplate bands shared by delta and corpus emit |new_band| ×
+    # cap cross pairs per band. Old ids sort first, so a delta id_b
+    # keeps exactly the delta×delta and old×delta pairs. Materialised:
+    # exact_jaccard_edges reads the pairs three times, and the
+    # old-shingle prune below a fourth.
+    pairs = materialise(
+        bucket_pairs(bands, "url", cfg.max_band_size)
+        .filter(has_tag(NEW, "id_b")).distinct(),
+        caches,
+    )
 
     # ---- exact-Jaccard verify, within and vs old -------------------
-    # materialised: exact_jaccard_edges reads its pairs three times,
-    # and the old-shingle prune below a fourth
-    pairs = materialise(
-        candidate_pairs(new_sigs.select(_tag(NEW, "url"), "minhash"), "url",
-                        "minhash", cfg, caches=caches)
-        .unionByName(cross.distinct()),
-        caches,
-    )
     # a broadcast semi-join prunes the old (url, shingles) scan to the
     # paired rows BEFORE the shingles move: the snapshot's array column
     # is read once and never shuffles (measured: shuffling it was this
     # plan's original bottleneck). Materialised tagged (see OLD).
-    paired_old = pairs.filter(_is(OLD, "id_a")).select(
-        _untag("id_a").alias("url")
+    paired_old = pairs.filter(has_tag(OLD, "id_a")).select(
+        untag("id_a").alias("url")
     )
     old_shingles = materialise(
         sig_snap.select("url", "shingles")
         .join(F.broadcast(paired_old), "url", "left_semi")
-        .select(_tag(OLD, "url"), "shingles"),
+        .select(tag(OLD, "url"), "shingles"),
         caches,
     )
-    new_shingles = new_sigs.select(_tag(NEW, "url"), "shingles")
+    new_shingles = new_sigs.select(tag(NEW, "url"), "shingles")
     near = exact_jaccard_edges(pairs, new_shingles.unionByName(old_shingles),
                                "url", cfg).drop("jaccard")
     # materialised: read by the old-label broadcast AND the delta-side
@@ -279,23 +261,20 @@ def run_incremental(new_web: DataFrame, catalog,
     # ---- frozen-base clustering ------------------------------------
     # old matches become edges to the OLD CLUSTER LABEL (not the old
     # doc), so one old cluster is one vertex and its label is frozen.
-    # Vertex tags order the labeling: every old label ("\x00") sorts
-    # before every delta url ("\x01"), so CC's min-id label is already
-    # the frozen-base answer — the component's smallest old label if
-    # it holds one (labels are frozen: first occurrence wins across
-    # BATCHES, the reference's first-wins order lifted to increments),
-    # else its smallest delta url. The same device as
-    # dedup_exact.or_key_components; nothing reads the old labels
-    # beyond the matched ones.
+    # With old labels tagged OLD, CC's min-id label is already the
+    # frozen-base answer — the component's smallest old label if it
+    # holds one (first occurrence wins across BATCHES, the reference's
+    # first-wins order lifted to increments), else its smallest delta
+    # url. Nothing reads the old labels beyond the matched ones.
     matched = lin.observe(
         cluster_snap.join(
-            F.broadcast(edges.filter(_is(OLD, "id_a")).select(
-                _untag("id_a").alias("url"), "id_b"
+            F.broadcast(edges.filter(has_tag(OLD, "id_a")).select(
+                untag("id_a").alias("url"), "id_b"
             )),
             "url",
         )
         .select(F.col("id_b").alias("id_a"),
-                _tag(OLD, "cluster_id").alias("id_b"))
+                tag(OLD, "cluster_id").alias("id_b"))
         .distinct(),
         "incr_old_matches",
     )
@@ -303,7 +282,7 @@ def run_incremental(new_web: DataFrame, catalog,
     # blocks. Its row count rides the same job (Observation).
     edge_obs = Observation()
     all_edges = materialise(
-        matched.unionByName(edges.filter(_is(NEW, "id_a")))
+        matched.unionByName(edges.filter(has_tag(NEW, "id_a")))
         .observe(edge_obs, F.count(F.lit(1)).alias("rows")),
         caches,
     )
@@ -324,7 +303,7 @@ def run_incremental(new_web: DataFrame, catalog,
     else:
         comp = lin.observe(
             comp, "clusters_bridged",
-            n=F.count_if(_is(OLD, "u")
+            n=F.count_if(has_tag(OLD, "u")
                          & (F.col("u") != F.col("component"))),
         )
     # delta rows only, both tags stripped; a doc with no edge is its
@@ -332,9 +311,9 @@ def run_incremental(new_web: DataFrame, catalog,
     assignments = (
         new_docs.select("url")
         .join(
-            comp.filter(_is(NEW, "u")).select(
-                _untag("u").alias("url"),
-                _untag("component").alias("cluster_id"),
+            comp.filter(has_tag(NEW, "u")).select(
+                untag("u").alias("url"),
+                untag("component").alias("cluster_id"),
             ),
             "url", "left",
         )

@@ -325,9 +325,10 @@ def test_replay_with_unassignable_docs_and_complete_outdir_is_plain_skip(
 #: separate bookkeeping actions ran 151 here; the flattened one 74;
 #: without the sha-bloom gate 61; with tagged-vertex labels (no
 #: corpus-wide label lookup) 54; with the batch plan's exact star,
-#: band cap and Jaccard verify over tagged rows 53 (the budget keeps
-#: ~25% headroom).
-FOLD_JOB_BUDGET = 66
+#: band cap and Jaccard verify over tagged rows 53; with one band
+#: table and one capped bucket pass for delta×delta and old×delta
+#: pairs 48 (the budget keeps ~25% headroom).
+FOLD_JOB_BUDGET = 60
 
 
 def _persistent_rdd_ids(sc) -> set[int]:
@@ -455,6 +456,28 @@ def test_fold_band_cap_counts_delta_and_corpus_together(
     n1 = BASE.replace("winter", "summer")
     fold_batch(spark.createDataFrame([("n1", n1)], SCHEMA), 1, cat, cfg=cfg)
     assert _clusters(spark, cat) == {"o1": "o1", "n1": n1_label}
+
+
+@pytest.mark.parametrize("cap, new_labels", [
+    (3, {"n1": "n1", "n2": "n2"}),
+    (None, {"n1": "o1", "n2": "o1"}),
+])
+def test_fold_band_cap_counts_delta_pairs_with_corpus(
+        spark, tmp_path, cap, new_labels):
+    """Delta×delta pairs get the same combined cap as new×old ones.
+    Case and whitespace variants of BASE share every band key (tokens
+    are lowercased and whitespace-collapsed) but no sha, so every band
+    holds all four docs, two old and two new. A delta-only count of 2
+    would pair n1 and n2 at ``max_band_size=3``; the combined count of
+    4 pairs nothing, so each keeps its own label."""
+    cfg = DedupConfig() if cap is None else DedupConfig(max_band_size=cap)
+    cat = ParquetSnapshotCatalog(tmp_path / "cat")
+    fold_batch(spark.createDataFrame([("o1", BASE), ("o2", BASE.upper())],
+                                     SCHEMA), 0, cat, cfg=cfg)
+    fold_batch(spark.createDataFrame(
+        [("n1", BASE + " "), ("n2", " " + BASE.title())], SCHEMA
+    ), 1, cat, cfg=cfg)
+    assert _clusters(spark, cat) == {"o1": "o1", "o2": "o1", **new_labels}
 
 
 def test_identical_delta_docs_are_signed_and_their_refetch_is_not(
