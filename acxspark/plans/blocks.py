@@ -1,6 +1,6 @@
-"""Executor-block lifetime shared by the batch plan (plans/pipeline.py),
-the crawl fold (plans/incremental.py) and the rounds of
-operators/cc.py."""
+"""One block-lifetime rule for the batch plan (plans/pipeline.py), the
+crawl fold (plans/incremental.py) and the rounds of operators/cc.py:
+an eager checkpoint per multi-consumer output, dropped by release()."""
 
 from __future__ import annotations
 

@@ -85,9 +85,9 @@ class PipelineResult(Releasable):
     edges: DataFrame         # id_a, id_b, tier
     survivors: DataFrame     # canonical (first-wins) docs, redacted
     lineage: Lineage
-    # release handles: cached docs, sigs, pairs, near edges, band rows
-    # and (no catalog) the edge checkpoint, which only CC reads — the
-    # returned DataFrames stay valid after release()
+    # release handles: the docs cache, the cuts, the band caches and (no
+    # catalog) the edge cut. Read ``edges`` before release(): a released
+    # block cannot be recomputed. clusters and survivors stay valid.
     caches: list = None
 
 
@@ -137,6 +137,9 @@ def run_pipeline(web: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG,
 
     if use_extract:
         web = extract_stage(web).withColumn(text_col, F.col("extracted_text"))
+    # the plan's input stays a lazy, recomputable cache, not a cut:
+    # the returned clusters and survivors read it, and must stay
+    # readable after release()
     docs = lin.observe(
         web.filter(F.length(text_col) <= cfg.max_text_bytes),
         "docs_scanned",
@@ -162,9 +165,10 @@ def run_pipeline(web: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG,
         m = catalog.latest_meta(table)
         return all(m.get(k) == v for k, v in stamp.items())
 
-    # CC's per-round snapshots carry no stamp of their own, so key the
-    # table name by (input, config) — a catalog reused across corpora
-    # or configs can never resume CC from another run's edge set
+    # CC's round snapshots carry the input stamp, which guards a resume
+    # against another edge set; keying the table name by (input, config)
+    # keeps corpora or configs that share a catalog from overwriting
+    # each other's resume point
     cc_table = (
         f"cc_edges-{stamp['input_hash'] & 0xFFFFFFFF:08x}-{stamp['config'][:8]}"
         if stamp else "cc_edges"
@@ -176,30 +180,25 @@ def run_pipeline(web: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG,
         edges = catalog.read(spark, "edges")
     else:
         # ---- exact tier: content-hash star edges url ↔ first-url ------
-        # persisted: consumed by the sha_min groupBy AND the exact-edge
-        # join — without the cache the sha256 pass over the full corpus
-        # text runs once per consumer (the slim url+sha cache costs
-        # ~100 B/row; the recompute costs a full-corpus hash pass)
-        hashed = docs.select(
+        # each intermediate read by more than one consumer is an eager
+        # cut (plans/blocks.py). hashed feeds the sha_min groupBy AND the
+        # exact-edge join: one sha256 pass over the corpus text
+        hashed = materialise(docs.select(
             "url", F.sha2(F.col(text_col), 256).alias("text_sha")
-        ).persist()
-        caches.append(hashed)
-        # persisted: consumed by the exact-edge join, the representatives
-        # semi-join, and (catalog path) the signature-snapshot sha join
-        sha_min = sha_groups(hashed).persist()
-        caches.append(sha_min)
+        ), caches)
+        # read by the exact-edge join, the representatives semi-join,
+        # and (catalog path) the signature-snapshot sha join
+        sha_min = materialise(sha_groups(hashed), caches)
         exact_edges = exact_star_edges(hashed, sha_min).withColumn(
             "tier", F.lit("exact")
         )
 
-        # ---- shared signature scan: ONE fused Arrow pass, persisted slim
-        # sigs caches (url, shingles, minhash, simhash) — the text column
-        # never rides the cache, so at 100 TB the cached footprint is the
-        # hash arrays, not the corpus. Every downstream tier (LSH explode,
+        # ---- shared signature scan: ONE fused Arrow pass, cut as slim
+        # sigs blocks (url, shingles, minhash, simhash) — the text column
+        # never rides the cut, so at 100 TB its footprint is the hash
+        # arrays, not the corpus. Every downstream tier (LSH explode,
         # both sides of the Jaccard join, SimHash probe) reads this one
-        # cache; without it the self-joins re-run the signature UDF per
-        # side. The fused batch-vectorized UDF (operators/signatures.py)
-        # replaces three separate per-row UDF scans.
+        # cut; without it the self-joins re-run the signature UDF per side.
         #
         # Near-dup tiers run on EXACT-DUP REPRESENTATIVES only (min-url
         # per content hash): byte-identical copies collide in all 32
@@ -212,7 +211,7 @@ def run_pipeline(web: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG,
         # RA–RB (near) put all four in one CC component.
         reps = sha_min.select(F.col("min_url").alias("url"))
         if _fresh("signatures"):
-            sigs = catalog.read(spark, "signatures").persist()
+            sigs = catalog.read(spark, "signatures")
         else:
             sign_input = docs.join(reps, "url", "left_semi")
             hot = None
@@ -227,14 +226,13 @@ def run_pipeline(web: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG,
             if catalog is not None:
                 # the checkpoint anchor (docs/SCALE.md): the signature
                 # table is the resume point that makes a killed job skip
-                # the most expensive scan; reading the committed parquet
-                # back also serves as the cache for this run. text_sha
-                # rides along (32 B/row) so INCREMENTAL runs
-                # (plans/incremental.py) can run the exact tier against
-                # this snapshot without touching old text. The sha column
-                # comes from the persisted sha_min (url → sha is
-                # functional and every sig row IS a min_url), never from a
-                # second corpus-wide hash projection.
+                # the most expensive scan; the cut below reads the
+                # committed parquet back. text_sha rides along (32 B/row)
+                # so INCREMENTAL runs (plans/incremental.py) can run the
+                # exact tier against this snapshot without touching old
+                # text. It comes from the cut sha_min (url → sha is
+                # functional and every sig row IS a min_url), never from
+                # a second corpus-wide hash projection.
                 rep_sha = sha_min.select(
                     F.col("min_url").alias("url"), "text_sha"
                 )
@@ -242,21 +240,18 @@ def run_pipeline(web: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG,
                 sigs = catalog.read(spark, "signatures")
                 if hot is not None:
                     commit_drop_set(catalog, spark, hot, wmeta)
-            sigs = sigs.persist()
-        caches.append(sigs)
+        sigs = materialise(sigs, caches)
 
         # ---- minhash tier --------------------------------------------
-        cands = lin.observe(
+        cands = materialise(lin.observe(
             candidate_pairs(sigs, "url", "minhash", cfg, caches=caches),
             "pairs_emitted",
-        ).persist()
-        caches.append(cands)
-        # persisted: consumed by the containment anti-join AND the edge
-        # union → without the cache the two sig-joins re-run per consumer
-        near_edges = exact_jaccard_edges(cands, sigs, "url", cfg).select(
-            "id_a", "id_b"
-        ).withColumn("tier", F.lit("near")).persist()
-        caches.append(near_edges)
+        ), caches)
+        # read by the containment anti-join AND the edge union, so the
+        # two sig-joins run once
+        near_edges = materialise(exact_jaccard_edges(
+            cands, sigs, "url", cfg
+        ).select("id_a", "id_b").withColumn("tier", F.lit("near")), caches)
 
         # ---- simhash tier (recall supplement for tiny-edit dups) -----
         sim_edges = simhash_candidate_pairs(
@@ -282,21 +277,20 @@ def run_pipeline(web: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG,
             exact_edges.unionByName(near_edges).unionByName(sim_edges)
             .unionByName(contain_edges)
         )
+        # the edge set is cut once: CC iterates joins over it, and
+        # without the cut every CC round would re-run all four tiers
+        # above. With a catalog the committed snapshot is the cut (and
+        # the resume point for the whole candidate phase).
         if catalog is not None:
             catalog.write("edges", edges, meta=wmeta)
             edges = catalog.read(spark, "edges")
+        else:
+            edges = materialise(edges, caches)
 
     # ---- clustering ---------------------------------------------------
-    # eager checkpoint: CC iterates joins over the edges — without the
-    # cut, every CC round would re-run all four tiers above. With a
-    # catalog, the committed edge snapshot IS the lineage cut (and the
-    # resume point for the whole candidate phase).
-    edge_pairs = edges.select("id_a", "id_b")
-    if catalog is None:
-        edge_pairs = materialise(edge_pairs, caches)
     clusters = cluster_assignments(
-        docs.select("url"), "url", edge_pairs, catalog=catalog,
-        table=cc_table,
+        docs.select("url"), "url", edges.select("id_a", "id_b"),
+        catalog=catalog, table=cc_table,
     )
     if catalog is not None:
         # the cluster snapshot is what incremental runs

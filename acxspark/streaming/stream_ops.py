@@ -118,7 +118,8 @@ def streaming_near_dup_flags(
     that is served as a bucketed table the join co-locates against,
     and the exact-Jaccard re-check joins the slim (url, shingles)
     snapshot. Exactly the new×old half of the incremental plan, at
-    source rate.
+    source rate. Raises ``ValueError`` under ``shingle_max_doc_freq``:
+    the stream has no corpus drop set to sign with.
     """
     from acxspark.config import DEFAULT_CONFIG
     from acxspark.operators.lsh import band_struct_col
@@ -126,6 +127,8 @@ def streaming_near_dup_flags(
     from acxspark.operators.verify import shingle_jaccard
 
     cfg = cfg or DEFAULT_CONFIG
+    if cfg.shingle_max_doc_freq is not None:
+        raise ValueError("a stream cannot apply shingle_max_doc_freq")
     docs = stream_docs.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     sigs = docs.withColumn("_sig", signature_col(F.col(text_col), cfg)).select(
         F.col(url_col), F.col(ts_col),

@@ -57,19 +57,22 @@ def test_pipeline_stage_level_resume(spark, tmp_path, monkeypatch):
     cat = ParquetSnapshotCatalog(tmp_path / "cat")
     web, _, _ = to_spark(spark, generate(n_docs=120, seed=3))
     web = web.cache()
+    cuts = []
+    materialise = P.materialise
+
+    def recording_materialise(df, caches):
+        cuts.append(set(df.columns))
+        return materialise(df, caches)
+
+    monkeypatch.setattr(P, "materialise", recording_materialise)
     res1 = P.run_pipeline(web, cfg=DedupConfig(), catalog=cat)
+    monkeypatch.undo()
     c1 = sorted((r["url"], r["cluster_id"]) for r in res1.clusters.collect())
     # one-sha2-scan device (round 5): the (url, text_sha) projection is
-    # persisted, so the exact tier AND the signature-snapshot sha join
-    # read the cache instead of re-hashing the corpus; and the snapshot
+    # an eager cut, so the exact tier AND the signature-snapshot sha join
+    # read its blocks instead of re-hashing the corpus; and the snapshot
     # sha column equals a fresh sha2 pass (contents unchanged)
-    # (caches may also hold checkpoint release handles: frames only)
-    from pyspark.sql import DataFrame
-    assert any(
-        isinstance(c, DataFrame) and set(c.columns) == {"url", "text_sha"}
-        and c.storageLevel.useMemory
-        for c in res1.caches
-    )
+    assert {"url", "text_sha"} in cuts
     import pyspark.sql.functions as F
     snap_sha = cat.read(spark, "signatures").select("url", "text_sha")
     fresh_sha = web.select(

@@ -331,8 +331,41 @@ def test_replay_with_unassignable_docs_and_complete_outdir_is_plain_skip(
 FOLD_JOB_BUDGET = 60
 
 
+#: Spark jobs one base commit may run: run_pipeline(..., catalog=)
+#: with url dedup, extraction and redaction, plus the survivor
+#: checksum, on a 120-doc generated corpus (a job group around both).
+#: With lazy persist() intermediates it ran 69 here; with an eager
+#: cut (plans/blocks.materialise) at every multi-consumer intermediate
+#: 53 (the budget keeps ~25% headroom).
+PIPELINE_JOB_BUDGET = 66
+
+
 def _persistent_rdd_ids(sc) -> set[int]:
     return set(sc._jsc.getPersistentRDDs().keySet().toArray())
+
+
+def test_base_commit_stays_in_job_budget_and_releases_its_blocks(
+        spark, tmp_path):
+    from acxspark.corpus import generate, to_spark
+
+    cat = ParquetSnapshotCatalog(tmp_path / "cat")
+    web, _, _ = to_spark(spark, generate(n_docs=120, seed=5))
+    sc = spark.sparkContext
+    before = _persistent_rdd_ids(sc)
+    sc.setJobGroup("base-budget", "base commit under a job budget")
+    try:
+        res = run_pipeline(web, catalog=cat, url_dedup=True,
+                           use_extract=True, redact=True)
+        surv = res.survivors
+        surv.agg(F.bit_xor(F.xxhash64(*surv.columns))).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("base-budget"))
+    assert 0 < n_jobs <= PIPELINE_JOB_BUDGET
+    res.release()
+    assert _persistent_rdd_ids(sc) <= before
+    assert cat.read(spark, "clusters").count() == 120
 
 
 def test_fold_stays_in_job_budget_and_releases_its_blocks(spark, tmp_path):

@@ -165,6 +165,34 @@ def test_streaming_near_dup_flags_vs_static_corpus(spark, tmp_path):
     assert all(r["jaccard"] >= 0.68 for r in rows)
 
 
+def test_streaming_near_dup_flags_rejects_a_doc_frequency_cut(spark,
+                                                              tmp_path):
+    """The stream signs without the corpus's hot-shingle drop set, so
+    under ``shingle_max_doc_freq`` its signatures differ from a cut
+    corpus snapshot's and a byte-identical copy went unflagged. The
+    flagger must refuse the config instead of missing silently."""
+    from acxspark.config import DedupConfig
+    from acxspark.operators.signatures import with_signatures
+    from acxspark.streaming.stream_ops import streaming_near_dup_flags
+
+    corpus = spark.createDataFrame(
+        [("a0", "shared boilerplate words " * 10)], "url string, text string"
+    )
+    corpus_sigs = with_signatures(corpus, text_col="text",
+                                  cfg=DedupConfig(), id_col="url")
+    src = tmp_path / "stream_src"
+    spark.createDataFrame(
+        [("b0", "2024-01-01 00:00:01", "shared boilerplate words " * 10)],
+        "url string, ts string, text string",
+    ).write.parquet(str(src))
+    stream = spark.readStream.schema(
+        "url string, ts string, text string"
+    ).parquet(str(src))
+    with pytest.raises(ValueError, match="shingle_max_doc_freq"):
+        streaming_near_dup_flags(stream, corpus_sigs,
+                                 cfg=DedupConfig(shingle_max_doc_freq=0.5))
+
+
 def test_streaming_clean_gate_matches_batch(spark, tmp_path):
     """The curation gate is stateless: the streaming pass over the
     same files yields exactly the batch survivor set + columns."""
